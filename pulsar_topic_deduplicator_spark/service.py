@@ -10,8 +10,9 @@ the engine's pieces:
 1. ``EngineConfig`` (same env names, fail-fast — ``config.py``);
 2. warm-up (op #11): batch-scan the service's prior output within
    ``CACHE_WINDOW_IN_SECONDS``, parse-and-validate ``origin`` digests
-   (op #12, message-granular skip), seed the dedup state — completed
-   strictly BEFORE live consumption, the reference's happens-before edge
+   (op #12, message-granular skip), materialize the seed set once and
+   seed the dedup state from it — completed strictly BEFORE live
+   consumption, the reference's happens-before edge
    (``src/deduplication.ts:75-79``);
 3. TTL streaming dedup keyed on the config's ignored-properties
    projection (ops #4–#9) — DEFAULT kernel: the JVM-only watermark TTL
@@ -37,6 +38,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from .config import EngineConfig
 from .operators.lineage import extract_origin_digests, message_dq_violations
+from .sources.retry import with_warmup_retries
 from .streaming.dedup import (
     dedup_stream_ingest_ttl,
     run_ttl_dedup_bounded,
@@ -67,6 +69,28 @@ def warmup_seed_digests(
     return extract_origin_digests(prior_output).distinct()
 
 
+def build_seed_set(
+    prior_output: DataFrame | None, config: EngineConfig, now_ts
+) -> DataFrame | None:
+    """The warm-up, done once: ``warmup_seed_digests`` persisted and
+    materialized by one eager ``count``, retried with the reference's
+    backoff (``sources/retry.py``). Every micro-batch then reads the cached
+    blocks instead of re-scanning the prior output, re-parsing ``origin``
+    and re-running ``distinct``; ``persist`` keeps the lineage, so a lost
+    block is recomputed instead of failing the query. The caller owns the
+    frame and unpersists it. None when warm-up is off (no prior output, or
+    a disabled cache window)."""
+    if not config.warmup_enabled or prior_output is None:
+        return None
+    seeds = warmup_seed_digests(prior_output, config, now_ts).persist()
+    try:
+        with_warmup_retries(seeds.count)
+    except BaseException:
+        seeds.unpersist()
+        raise
+    return seeds
+
+
 @dataclass
 class DedupService:
     """Running dedup service handle: the reference's process, as an object.
@@ -74,13 +98,15 @@ class DedupService:
     ``health()`` is the ``/healthz`` mapping (204/500 — wire to any HTTP
     thread), ``counters()`` the 60 s forwarded/dropped telemetry analog,
     ``stop()`` the ordered teardown (final micro-batch commit = producer
-    flush)."""
+    flush), then releases the warm-up seed set the service owns."""
 
     spark: SparkSession
     query: StreamingQuery
     output_table: str
     quarantine_query: StreamingQuery | None = None
     quarantine_table: str | None = None
+    #: the materialized warm-up seed set (``build_seed_set``), or None
+    seeds: DataFrame | None = None
     #: set by the signal-handler teardown BEFORE the query stops, so the
     #: liveness probe fails immediately on shutdown start (the reference's
     #: ``setHealthOk(false)`` is its first teardown step, src/index.ts:34-44)
@@ -118,9 +144,14 @@ class DedupService:
         )
 
     def stop(self, timeout_seconds: float = 60.0) -> bool:
-        ok = graceful_stop(self.query, timeout_seconds)
-        if self.quarantine_query is not None:
-            ok = graceful_stop(self.quarantine_query, timeout_seconds) and ok
+        try:
+            ok = graceful_stop(self.query, timeout_seconds)
+            if self.quarantine_query is not None:
+                ok = graceful_stop(self.quarantine_query, timeout_seconds) and ok
+        finally:
+            if self.seeds is not None:
+                self.seeds.unpersist()
+                self.seeds = None
         return ok
 
     def install_signal_handlers(
@@ -234,6 +265,13 @@ def start_dedup_service(
     topic); None (or a disabled cache window) skips warm-up exactly like
     ``cacheWindowInSeconds <= 0`` (``src/cacheBuilding.ts:71-77``).
 
+    Seed-set lifecycle: the warm-up runs ONCE, here, before the live query
+    starts (``build_seed_set``: scan, ``origin`` validation, ``distinct``,
+    persisted and materialized under the warm-up retry policy). Both
+    kernels receive that materialized frame, so the live query never reads
+    ``prior_output`` again. The returned ``DedupService`` owns the frame;
+    ``stop()`` unpersists it.
+
     Kernel selection: the DEFAULT is the JVM-only watermark TTL kernel
     (``dedup_stream_ingest_ttl``) — all dedup state lives in the JVM state
     store, no per-group Python. Dedup keys are crypto digests, so in real
@@ -243,7 +281,10 @@ def start_dedup_service(
     (re-admission after TTL expiry) lags by the watermark advance — late
     eviction, never early re-admission, the same direction the reference's
     ``oblivious-set`` dependency errs (lazy purge; ``package.json:51``,
-    behavior pinned in ``src/deduplication.test.ts:249-275``).
+    behavior pinned in ``src/deduplication.test.ts:249-275``). Its query
+    runs one micro-batch per arrival (no eviction-only batches), so
+    eviction lags by at most one more data batch (see
+    ``_start_watermark_dedup_query``).
     ``exact_processing_ttl=True``
     opts into the exact processing-time-TTL kernels for deployments that
     need expiry exact to the millisecond (``use_tws`` then selects
@@ -265,36 +306,39 @@ def start_dedup_service(
     so combining ``dq_gate`` with a non-replayable transport (one live TCP
     socket) splits rows between the two consumers; use a replayable source
     (files, a broker topic with independent subscriptions) for gated runs."""
-    seeds = None
-    if config.warmup_enabled and prior_output is not None:
-        seeds = warmup_seed_digests(prior_output, config, now_ts)
+    seeds = build_seed_set(prior_output, config, now_ts)
     predicate = F.size(message_dq_violations()) == 0 if dq_gate else None
-    if exact_processing_ttl:
-        query, name = start_ttl_dedup(
-            spark,
-            source_dir,
-            checkpoint_dir,
-            ttl_ms=config.dedup_window_ms,
-            seed_digests=seeds,
-            glob_filter=glob_filter,
-            use_tws=use_tws,
-            ignored=config.ignored_properties,
-            message_predicate=predicate,
-            messages=messages,
-            max_files_per_trigger=max_files_per_trigger,
-        )
-    else:
-        query, name = _start_watermark_dedup_query(
-            spark,
-            config,
-            source_dir,
-            checkpoint_dir,
-            seeds=seeds,
-            glob_filter=glob_filter,
-            message_predicate=predicate,
-            messages=messages,
-            max_files_per_trigger=max_files_per_trigger,
-        )
+    try:
+        if exact_processing_ttl:
+            query, name = start_ttl_dedup(
+                spark,
+                source_dir,
+                checkpoint_dir,
+                ttl_ms=config.dedup_window_ms,
+                seed_digests=seeds,
+                glob_filter=glob_filter,
+                use_tws=use_tws,
+                ignored=config.ignored_properties,
+                message_predicate=predicate,
+                messages=messages,
+                max_files_per_trigger=max_files_per_trigger,
+            )
+        else:
+            query, name = _start_watermark_dedup_query(
+                spark,
+                config,
+                source_dir,
+                checkpoint_dir,
+                seeds=seeds,
+                glob_filter=glob_filter,
+                message_predicate=predicate,
+                messages=messages,
+                max_files_per_trigger=max_files_per_trigger,
+            )
+    except BaseException:
+        if seeds is not None:
+            seeds.unpersist()
+        raise
     q_query = q_name = None
     if dq_gate:
         # the quarantine side-stream MUST observe the same transport the
@@ -310,6 +354,7 @@ def start_dedup_service(
         output_table=name,
         quarantine_query=q_query,
         quarantine_table=q_name,
+        seeds=seeds,
     )
 
 
@@ -329,6 +374,14 @@ def _start_watermark_dedup_query(
     """Start the default-kernel service query: (optional gate predicate) →
     warm-up anti-join seeding → JVM watermark TTL dedup → sink.
     Returns ``(query, table_name_or_output_dir)``.
+
+    One micro-batch per arrival: the ingest-clock watermark advances on
+    every batch, so with no-data batches on, each arrival would be followed
+    by an eviction-only batch paying the full per-batch fixed cost
+    (planning, WAL and offset commits, a state-store commit). The query
+    starts without them; an expired digest's state is then evicted at the
+    end of the next DATA batch instead — late eviction by at most one
+    batch (``dedup_stream_ingest_ttl``).
 
     Sink selection (the ``run_stream_dedup_bounded`` discipline): a caller
     that passes ``output_dir`` gets the parquet file sink — the RESTARTABLE
@@ -372,7 +425,19 @@ def _start_watermark_dedup_query(
         writer = writer.option("checkpointLocation", checkpoint_dir)
     if available_now:
         writer = writer.trigger(availableNow=True)
-    return writer.start(), name
+    # a query captures its conf when it starts, so the setting is scoped
+    # to this start() and never leaks into later queries on the session
+    # (windowed aggregates need no-data batches to finalize their windows)
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "false")
+    try:
+        return writer.start(), name
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
 
 
 def start_quarantine_stream(
@@ -431,32 +496,36 @@ def run_dedup_service_bounded(
     event_ts/n_dropped rows) — see ``start_dedup_service``. Pass
     ``output_dir`` for the RESTARTABLE parquet-sink shape (resumable
     backfills; memory sinks refuse checkpoint recovery) — the returned
-    frame then reads the cumulative sink directory."""
-    seeds = None
-    if config.warmup_enabled and prior_output is not None:
-        seeds = warmup_seed_digests(prior_output, config, now_ts)
-    if exact_processing_ttl:
-        return run_ttl_dedup_bounded(
+    frame then reads the cumulative sink directory. The warm-up seed set
+    is built once before the run and released after it."""
+    seeds = build_seed_set(prior_output, config, now_ts)
+    try:
+        if exact_processing_ttl:
+            return run_ttl_dedup_bounded(
+                spark,
+                source_dir,
+                checkpoint_dir,
+                ttl_ms=config.dedup_window_ms,
+                seed_digests=seeds,
+                glob_filter=glob_filter,
+                use_tws=use_tws,
+                ignored=config.ignored_properties,
+            )
+        query, name = _start_watermark_dedup_query(
             spark,
+            config,
             source_dir,
             checkpoint_dir,
-            ttl_ms=config.dedup_window_ms,
-            seed_digests=seeds,
+            seeds=seeds,
             glob_filter=glob_filter,
-            use_tws=use_tws,
-            ignored=config.ignored_properties,
+            available_now=True,
+            output_dir=output_dir,
         )
-    query, name = _start_watermark_dedup_query(
-        spark,
-        config,
-        source_dir,
-        checkpoint_dir,
-        seeds=seeds,
-        glob_filter=glob_filter,
-        available_now=True,
-        output_dir=output_dir,
-    )
-    query.awaitTermination()
+        query.awaitTermination()
+    finally:
+        # the returned frame reads the sink, never the seeds
+        if seeds is not None:
+            seeds.unpersist()
     if output_dir:
         return spark.read.parquet(output_dir)
     return spark.table(name)
@@ -569,8 +638,8 @@ def run_gated_service_watermark_bounded(
     ``observe()`` counter on the gated ingest stream (``n_clean`` −
     forwarded) instead of summed ``n_dropped`` rows. A live service that
     additionally needs warm-up seeding (op #11) composes the same pieces
-    through ``start_ttl_dedup_watermark(seed_digests=...)``, which unions
-    pre-keyed seed rows ahead of the live stream.
+    through ``start_dedup_service(prior_output=..., dq_gate=True)``, which
+    anti-joins the live stream against the seed set built once at start.
 
     Returns ``(dedup_output, quarantine, n_clean)``."""
     import uuid

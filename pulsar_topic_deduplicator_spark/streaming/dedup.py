@@ -273,8 +273,11 @@ def _make_ttl_kernel(ttl_ms: int, use_timers: bool = False):
             is_seed = mid == SEED_MESSAGE_ID
             if not already:
                 state.update((now_ms,))
-                if use_timers:
-                    state.setTimeoutDuration(ttl_ms)
+            if use_timers:
+                # Spark clears a processing-time timeout on every call
+                # with data: re-arm whenever state stays behind, or a
+                # duplicate-only batch disarms this digest's GC for good
+                state.setTimeoutDuration(ttl_ms)
             if already or is_seed:
                 if not is_seed:
                     out = template.copy()
@@ -298,8 +301,8 @@ def _make_ttl_kernel(ttl_ms: int, use_timers: bool = False):
         live = rows[rows["message_id"] != SEED_MESSAGE_ID]
         if not already:
             state.update((now_ms,))
-            if use_timers:
-                state.setTimeoutDuration(ttl_ms)
+        if use_timers:
+            state.setTimeoutDuration(ttl_ms)  # re-arm: see the fast path
         if already or has_seed:
             # every live row here is a duplicate / warm-up hit: drop them
             # all, but surface the count as a message_id-less counter row
@@ -419,10 +422,12 @@ def _make_bucketed_ttl_kernel(ttl_ms: int, use_timers: bool = False):
       the digest is re-admitted and re-stamped), so removing it changes
       no emitted row, ever (pinned in tests/test_round15_opt.py).
     * **timer purge** (``use_timers=True``): the kernel re-arms a
-      processing-time timer for ``ttl_ms`` on every state write; when it
-      fires with no data for the bucket, expired entries are purged and
-      the state row is REMOVED once the map empties. This is what bounds
-      state for buckets that stop receiving traffic. Off by default for
+      processing-time timer for ``ttl_ms`` on every call with data that
+      leaves state behind (Spark clears the timeout on each such call,
+      writes or not); when it fires with no data for the bucket, expired
+      entries are purged and the state row is REMOVED once the map
+      empties. This is what bounds state for buckets that stop receiving
+      traffic. Off by default for
       the same reason as ``_make_ttl_kernel``'s: registered timers make
       the micro-batch engine schedule batches continuously until every
       timer fires, which a bounded harness run must not pay for. A
@@ -513,8 +518,10 @@ def _make_bucketed_ttl_kernel(ttl_ms: int, use_timers: bool = False):
                     d: f for d, f in smap.items() if (now_ms - f) < ttl_ms
                 }
             state.update((list(smap.keys()), list(smap.values())))
-            if use_timers:
-                state.setTimeoutDuration(ttl_ms)
+        if use_timers and state.exists:
+            # Spark cleared the timeout for this call: re-arm it, or a
+            # duplicate-only batch disarms the bucket's GC for good
+            state.setTimeoutDuration(ttl_ms)
         if out_digest:
             yield pd.DataFrame(
                 {
@@ -901,14 +908,24 @@ def dedup_stream_ingest_ttl(
       cycle; the reference pins the cache's identity/TTL behavior in
       ``src/deduplication.test.ts:249-275``). The
       cross-pin against the exact kernel on expiry fixtures lives in
-      tests/test_streaming.py.
+      tests/test_streaming.py;
+    * eviction runs at the END of a batch. With no-data micro-batches
+      disabled — the service starts its query that way, one batch per
+      arrival — an expired digest is evicted at the end of the next DATA
+      batch rather than in an eviction-only batch, so a re-arrival inside
+      that next batch is still suppressed: eviction is late by at most one
+      more batch, in the same direction as above.
 
     ``exclude_digests`` (a batch DataFrame with a ``digest`` column) is the
     warm-up seeding composition for this kernel (op #11): a stream-static
     LEFT ANTI join suppresses live occurrences of every seeded digest with
-    NO ordering caveat — the static side is fixed at query start, exactly
-    the reference's "warm-up completes strictly before live consumption"
-    happens-before edge (``src/deduplication.ts:75-79``). Semantic
+    NO ordering caveat — the reference's "warm-up completes strictly
+    before live consumption" happens-before edge
+    (``src/deduplication.ts:75-79``). The static side is planned into
+    EVERY micro-batch, so pass a materialized frame (the service's
+    ``build_seed_set`` persists it once at start): a lazy one re-scans its
+    source, re-runs its ``distinct`` and re-broadcasts the result on each
+    batch, and only a materialized one is fixed at query start. Semantic
     deviation vs the exact kernel's seed-message replay: anti-joined seeds
     never expire mid-run (the exact kernel TTLs them out like any state
     row). That errs toward suppression — the same direction as the
@@ -916,7 +933,9 @@ def dedup_stream_ingest_ttl(
 
     100 TB: all state lives in the JVM state store keyed by the crypto
     digest (uniform, no skew); the seed set is bounded by the cache window
-    and broadcast when small (AQE re-plans it per micro-batch). This is the
+    and always broadcast — ``F.broadcast`` forces the broadcast hash join
+    whatever the seed set's size, and stateful streaming queries run
+    without AQE, so no batch adapts the join to that size. This is the
     DEFAULT kernel because a dedup key is a crypto digest: in real traffic
     most groups carry 1-2 rows, so group count ≈ row count and the
     GroupState kernel's per-GROUP Python round-trip is effectively per-row
@@ -936,53 +955,6 @@ def dedup_stream_ingest_ttl(
         .withWatermark("ingest_ts", f"{int(ttl_ms)} milliseconds")
         .dropDuplicatesWithinWatermark(["digest"])
     )
-
-
-def start_ttl_dedup_watermark(
-    spark: SparkSession,
-    source_dir: str,
-    ttl_ms: int = 3_600_000,
-    seed_digests: DataFrame | None = None,
-    glob_filter: str | None = None,
-    ignored: tuple[str, ...] = (),
-    checkpoint_dir: str | None = None,
-):
-    """Live watermark-TTL dedup query; returns ``(query, table_name)``.
-
-    ``seed_digests`` replays the warm-up (op #11) exactly like the
-    GroupState path: seed rows stream through the same dedup key and
-    occupy their digest's state slot, so later live occurrences are
-    suppressed; consumers filter ``message_id != SEED_MESSAGE_ID``.
-    ORDERING CAVEAT (inherent to dropDuplicates first-seen semantics):
-    a seed only reliably wins over live rows from LATER micro-batches —
-    which is precisely the reference's startup contract (warm-up completes
-    strictly BEFORE live consumption begins, ``src/deduplication.ts:75-79``);
-    the caller drains the seed batch before live data lands, as the
-    warm-up test does."""
-    name = f"wm_ttl_{uuid.uuid4().hex[:8]}"
-    messages = events_message_stream(spark, source_dir, glob_filter=glob_filter)
-    keyed = messages.withColumn("digest", message_digest(ignored))
-    if seed_digests is not None:
-        seed_dir = tempfile.mkdtemp(f"wm_seed_{uuid.uuid4().hex[:8]}")
-        seed_digests.select(
-            F.col("digest").cast("string").alias("digest"),
-            F.lit(SEED_MESSAGE_ID).alias("message_id"),
-        ).write.mode("overwrite").parquet(seed_dir)
-        seeds = spark.readStream.schema(
-            "digest string, message_id string"
-        ).parquet(seed_dir)
-        keyed = seeds.unionByName(keyed, allowMissingColumns=True)
-    deduped = (
-        keyed.withColumn("ingest_ts", F.current_timestamp())
-        .withWatermark("ingest_ts", f"{int(ttl_ms)} milliseconds")
-        .dropDuplicatesWithinWatermark(["digest"])
-    )
-    writer = (
-        deduped.writeStream.format("memory").queryName(name).outputMode("append")
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start(), name
 
 
 def run_ttl_dedup_watermark_bounded(

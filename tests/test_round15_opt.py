@@ -175,3 +175,55 @@ def test_ttl_bucket_count_pinned_to_checkpoint(spark, tmp_path, monkeypatch):
     assert _pinned_bucket_count(spark, ckpt) == first
     # a FRESH checkpoint honors the env override
     assert _pinned_bucket_count(spark, str(tmp_path / "ckpt2")) == first * 7
+
+
+def _call(kernel, key, st, now_ms, batch=None):
+    """One GroupState invocation as Spark makes it: the processing-time
+    timeout is cleared on every call with data, and a call without data
+    is a timer fire, which only happens while a timer is armed (returns
+    None when none is)."""
+    st._now = now_ms
+    st.hasTimedOut = batch is None
+    if batch is None:
+        if st.timeout_set_ms is None:
+            return None
+    else:
+        st.timeout_set_ms = None
+    return list(kernel(key, iter([] if batch is None else [batch]), st))
+
+
+def test_ttl_timer_rearmed_by_duplicate_only_batch():
+    """use_timers: a batch holding only a within-TTL duplicate writes no
+    state, yet Spark cleared the timeout on that call — the kernel must
+    re-arm it, or the digest's state row is never removed once traffic
+    stops. Both exact kernels: duplicate-only batch, then an idle key
+    whose timer still fires and removes the state row."""
+    from pulsar_topic_deduplicator_spark.streaming.dedup import (
+        _make_bucketed_ttl_kernel,
+        _make_ttl_kernel,
+    )
+
+    ttl_ms = 1000
+
+    def batch(mid):
+        return pd.DataFrame(
+            {
+                "digest": ["d"],
+                "message_id": [mid],
+                "event_us": pd.array([1], dtype="Int64"),
+            }
+        ).assign(event_us=lambda d: d["event_us"].astype("float64"))
+
+    # the per-digest kernel is keyed by the digest, the bucketed one by a
+    # bucket number
+    for make, key in ((_make_ttl_kernel, ("d",)), (_make_bucketed_ttl_kernel, (0,))):
+        kernel = make(ttl_ms, use_timers=True)
+        st = _FakeState(None)
+        first = _call(kernel, key, st, 0, batch("m1"))
+        assert _norm(first) == {("d", "m1", 1, 0)}
+        # duplicate only: counter row, no state write
+        dup = _call(kernel, key, st, 500, batch("m2"))
+        assert _norm(dup) == {("d", None, None, 1)}
+        # idle: the timer fires and the expired state row goes
+        assert _call(kernel, key, st, 2_000) == [], make.__name__
+        assert st.removed and st._v is None, make.__name__

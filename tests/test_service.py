@@ -20,8 +20,8 @@ BASE_TS = 1704067200 * 1_000_000_000  # 2024-01-01 UTC in ns
 NS = 1_000_000_000
 
 
-def _write_events(spark, path, rows):
-    sdf = spark.createDataFrame(
+def _events_df(spark, rows):
+    return spark.createDataFrame(
         pd.DataFrame(
             rows,
             columns=["event_id", "ts", "user_id", "event_type", "value", "props"],
@@ -31,7 +31,10 @@ def _write_events(spark, path, rows):
             "value double, props string"
         ),
     )
-    sdf.coalesce(1).write.mode("append").parquet(path)
+
+
+def _write_events(spark, path, rows):
+    _events_df(spark, rows).coalesce(1).write.mode("append").parquet(path)
 
 
 def test_service_end_to_end_with_warmup_and_ignored_props(spark, tmp_path):
@@ -247,5 +250,127 @@ def test_dq_gate_with_messages_override_quarantines_same_stream(spark, tmp_path)
         assert dropped == 1
         assert forwarded + dropped + len(q) == len(rows)
         assert svc.counters().get("n_quarantined") == 1
+    finally:
+        svc.stop()
+
+
+def _land(spark, src, rows):
+    """Land one arrival: a parquet file written aside, then renamed into
+    the watched directory in one atomic step. The query started against an
+    empty directory, so ``ts`` is written in the current TIMESTAMP
+    encoding (the schema fallback it pinned), not as epoch-ns longs."""
+    import os
+    import uuid
+
+    stage = f"{src}_stage_{uuid.uuid4().hex[:8]}"
+    _events_df(spark, rows).withColumn(
+        "ts", F.timestamp_micros(F.expr("ts div 1000"))
+    ).coalesce(1).write.parquet(stage)
+    (part,) = [f for f in os.listdir(stage) if f.endswith(".parquet")]
+    os.rename(os.path.join(stage, part), os.path.join(src, part))
+
+
+def test_service_seed_set_is_a_snapshot(spark, tmp_path):
+    """The warm-up is built once at start: with the prior-output directory
+    deleted after start, the live query keeps running, still suppresses the
+    seeded content and still forwards new content — it never reads the
+    prior output again."""
+    import os
+    import shutil
+
+    from pulsar_topic_deduplicator_spark.sources.io import messages_view
+    from pulsar_topic_deduplicator_spark.streaming.dedup import message_digest
+
+    content = (3, "purchase", 3.0, '{"k": "3"}')
+    base = str(tmp_path / "prior_base")  # sf-layout dir for messages_view
+    _write_events(spark, f"{base}/events.parquet", [(4, BASE_TS, *content)])
+    prior_dir = str(tmp_path / "prior_out")
+    # the prior output on disk, in the service's own output shape
+    messages_view(spark, base).withColumn("digest", message_digest()).select(
+        "publish_ts", "event_ts", F.to_json(F.array("digest")).alias("origin")
+    ).write.parquet(prior_dir)
+
+    src = str(tmp_path / "snap_src")
+    os.makedirs(src)
+    svc = start_dedup_service(
+        spark,
+        EngineConfig.from_env({"CACHE_WINDOW_IN_SECONDS": "172800"}),
+        src,
+        str(tmp_path / "snap_ckpt"),
+        prior_output=spark.read.parquet(prior_dir),
+        now_ts="2024-01-01 01:00:00",
+    )
+    try:
+        shutil.rmtree(prior_dir)
+        _land(
+            spark,
+            src,
+            [
+                (7, BASE_TS + 60 * NS, *content),  # seeded re-delivery
+                (8, BASE_TS + 120 * NS, 5, "view", 5.0, '{"k": "5"}'),
+            ],
+        )
+        svc.query.processAllAvailable()
+        assert svc.query.isActive
+        assert {r["message_id"] for r in svc.output().collect()} == {"8"}
+    finally:
+        svc.stop()
+    assert svc.seeds is None  # released on stop
+
+
+def test_service_one_batch_per_arrival_and_expiry(spark, tmp_path):
+    """The default kernel's service query runs ONE micro-batch per landed
+    file (no eviction-only batches), and an expired digest is still
+    re-admitted: at most one arrival later than the kernel-level
+    test_watermark_ttl_expiry_readmits, whose first replay after the
+    filler batch is re-admitted."""
+    import os
+    import time
+
+    src = str(tmp_path / "arrivals")
+    os.makedirs(src)
+    svc = start_dedup_service(
+        spark,
+        EngineConfig.from_env(
+            {
+                "DEDUPLICATION_WINDOW_IN_SECONDS": "1",
+                "CACHE_WINDOW_IN_SECONDS": "0",
+            }
+        ),
+        src,
+        str(tmp_path / "arrivals_ckpt"),
+        max_files_per_trigger=1,
+    )
+    q = svc.query
+
+    def batches():
+        # executed micro-batches only: an idle query also reports progress
+        # (under the id of its next batch), but runs no addBatch
+        return [p for p in q.recentProgress if "addBatch" in p["durationMs"]]
+
+    def arrive(event_id, content):
+        n = len(batches())
+        _land(spark, src, [(event_id, BASE_TS + event_id * NS, *content)])
+        q.processAllAvailable()
+        assert len(batches()) == n + 1, batches()[n:]
+
+    def ids():
+        return {r["message_id"] for r in svc.output().collect()}
+
+    first = (1, "click", 1.0, '{"k": "1"}')
+    try:
+        arrive(1, first)
+        arrive(2, (2, "view", 2.0, '{"k": "2"}'))
+        arrive(3, first)  # inside the TTL: suppressed
+        assert ids() == {"1", "2"}
+        # the watermark trails the ingest clock by the TTL, so eviction
+        # needs the clock to pass first_seen + 2 × TTL (1 s each)
+        time.sleep(2.5)
+        arrive(4, (4, "purchase", 4.0, '{"k": "4"}'))  # filler
+        arrive(5, first)  # evicted at the end of this batch, may be held
+        arrive(6, first)
+        got = ids()
+        assert got & {"5", "6"}, "expired digest was not re-admitted"
+        assert got - {"5", "6"} == {"1", "2", "4"}
     finally:
         svc.stop()

@@ -499,22 +499,20 @@ def test_watermark_ttl_suppresses_within_ttl(spark, tmp_path):
 
 
 def test_watermark_ttl_warmup_seed(spark, tmp_path):
-    """Op #11 on the watermark kernel: warm-up seeds drained strictly
-    before live consumption (the reference's startup happens-before edge)
-    suppress live re-deliveries of already-output content; fresh content
-    still flows."""
-    from pulsar_topic_deduplicator_spark.streaming.dedup import (
-        SEED_MESSAGE_ID,
-        message_digest,
-        start_ttl_dedup_watermark,
-    )
-
-    src = str(tmp_path / "wm_seed_src")
+    """Op #11 on the watermark kernel, through the service's warm-up: the
+    seed set built from the prior output strictly before live consumption
+    (the reference's startup happens-before edge) suppresses live
+    re-deliveries of already-output content; fresh content still flows."""
     import os
 
+    from pulsar_topic_deduplicator_spark.config import EngineConfig
+    from pulsar_topic_deduplicator_spark.service import start_dedup_service
+    from pulsar_topic_deduplicator_spark.streaming.dedup import message_digest
+
+    src = str(tmp_path / "wm_seed_src")
     os.makedirs(src)
-    # the seed: digest of BATCH1 message 1's content, derived the same way
-    # the service's warm-up scan would derive it
+    # the prior output: BATCH1 message 1's content with its origin digest,
+    # derived the same way the service derives digests
     probe = spark.createDataFrame(
         [("1", '{"k": 1}')], "mid string, props string"
     ).select(
@@ -522,18 +520,22 @@ def test_watermark_ttl_warmup_seed(spark, tmp_path):
                                     F.lit(1.0).alias("value"))), "UTF-8").alias("value"),
         F.from_json("props", "map<string,string>").alias("properties"),
     )
-    seeds = probe.select(message_digest().alias("digest"))
-    seeded_digest = seeds.first()["digest"]
+    seeded_digest = probe.select(message_digest().alias("d")).first()["d"]
+    prior = probe.select(
+        F.lit("2024-01-01 00:00:00").cast("timestamp").alias("publish_ts"),
+        F.lit("2024-01-01 00:00:00").cast("timestamp").alias("event_ts"),
+        F.to_json(F.array(message_digest())).alias("origin"),
+    )
 
-    query, name = start_ttl_dedup_watermark(
-        spark, src, seed_digests=seeds,
-        checkpoint_dir=str(tmp_path / "ck_wm_seed"),
+    svc = start_dedup_service(
+        spark,
+        EngineConfig.from_env({"CACHE_WINDOW_IN_SECONDS": "172800"}),
+        src,
+        str(tmp_path / "ck_wm_seed"),
+        prior_output=prior,
+        now_ts="2024-01-01 01:00:00",
     )
     try:
-        query.processAllAvailable()  # drain the seed batch FIRST
-        assert {r["message_id"] for r in spark.table(name).collect()} == {
-            SEED_MESSAGE_ID
-        }
         # live batch in the CURRENT ts encoding: the query started against
         # an empty dir, so the schema fallback pinned TIMESTAMP (the
         # documented contract — legacy ns-long files need a restart)
@@ -549,16 +551,13 @@ def test_watermark_ttl_warmup_seed(spark, tmp_path):
             "value",
             "props",
         ).coalesce(1).write.mode("append").parquet(src)
-        query.processAllAvailable()
-        rows = spark.table(name).collect()
-        live = {r["message_id"] for r in rows if r["message_id"] != SEED_MESSAGE_ID}
+        svc.query.processAllAvailable()
+        rows = svc.output().collect()
         # live re-delivery of the seeded content suppressed; fresh content kept
-        assert live == {"2"}
-        assert {r["digest"] for r in rows if r["message_id"] == SEED_MESSAGE_ID} == {
-            seeded_digest
-        }
+        assert {r["message_id"] for r in rows} == {"2"}
+        assert seeded_digest not in {r["digest"] for r in rows}
     finally:
-        query.stop()
+        svc.stop()
 
 
 def test_ttl_kernel_micros_roundtrip_event_ts(spark, source_dir, tmp_path):
