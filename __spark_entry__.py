@@ -107,10 +107,11 @@ def _stream_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _stream_dedup_ttl_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-TTL stateful dedup — reference ops #7+#11 with the ObliviousSet
-    processing-time TTL clock. Pinned to the GroupState kernel: the
-    transformWithState state server pays a pure-Python-protobuf round trip
-    per state op in this container (49 s vs 28 s at sf0.1); both kernels are
-    semantics-identical and cross-pinned in tests/test_streaming.py."""
+    processing-time TTL clock, on the one exact kernel: the GroupState
+    kernel over ``TTL_KEY_GROUPS`` fixed digest buckets
+    (``streaming.dedup.start_ttl_dedup``). A single-batch bounded run, so
+    ``BOUNDED_TTL_ORACLE`` value-checks its deterministic winner per
+    digest."""
     import tempfile
 
     from pulsar_topic_deduplicator_spark.streaming.dedup import (
@@ -122,37 +123,11 @@ def _stream_dedup_ttl_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         tempfile.mkdtemp("ttl_ckpt"),
         glob_filter="events.parquet",
-        use_tws=False,
-    )
-
-
-def _stream_dedup_tws_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-TTL stateful dedup on the transformWithStateInPandas kernel —
-    the Spark-4 native-TTL API the TTL semantics will live on at scale
-    (state-server kernel, per-key TTL handled by the state store itself,
-    RocksDB-ready). Same bounded single-batch run and the SAME exact
-    oracle as ``stream_dedup_ttl``; kernel cross-pins live in
-    tests/test_streaming.py. Slower in this container BY MEASUREMENT
-    (pure-Python protobuf round trip per state op — see
-    streaming/dedup.py kernel notes), registered so the driver checks the
-    native-TTL path's VALUES, not just the GroupState twin's."""
-    import tempfile
-
-    from pulsar_topic_deduplicator_spark.streaming.dedup import (
-        run_ttl_dedup_bounded,
-    )
-
-    return run_ttl_dedup_bounded(
-        spark,
-        sf_dir,
-        tempfile.mkdtemp("tws_ckpt"),
-        glob_filter="events.parquet",
-        use_tws=True,
     )
 
 
 def _stream_dedup_ttl_watermark_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JVM-only ingest-clock TTL dedup (third kernel): watermark on an
+    """JVM-only ingest-clock TTL dedup: watermark on an
     ingest timestamp + dropDuplicatesWithinWatermark — no per-group Python.
     Exact oracle: a single-batch bounded run emits one row per distinct
     digest (see BOUNDED_WM_TTL_ORACLE); expiry/re-admission semantics are
@@ -638,7 +613,6 @@ def queries() -> dict[str, QueryFn]:
         "pca_power_component": similarity.pca_power_component,
         "fk_discovery_report": lineage.fk_discovery_report,
         "trimmed_mean_by_type": analytics.trimmed_mean_by_type,
-        "stream_dedup_tws": _stream_dedup_tws_query,
         "supplier_affinity": recommend.supplier_affinity,
         "hybrid_search_rrf": retrieval.hybrid_search_rrf,
         "contrastive_pair_mining": similarity.contrastive_pair_mining_rounded,
@@ -818,9 +792,6 @@ def oracle_sql() -> dict[str, str]:
     )
 
     oracles["stream_dedup_ttl"] = BOUNDED_TTL_ORACLE
-    # the transformWithState kernel emits the identical deterministic
-    # single-batch result, so it shares the exact oracle
-    oracles["stream_dedup_tws"] = BOUNDED_TTL_ORACLE
     oracles["stream_dedup"] = BOUNDED_STREAM_DEDUP_ORACLE
     oracles["stream_dedup_ttl_watermark"] = BOUNDED_WM_TTL_ORACLE
     from pulsar_topic_deduplicator_spark import service as _service

@@ -144,11 +144,7 @@ HEADLINE = [
     "pca_power_component",  # integer power iteration on the Gram (spectral)
     "fk_discovery_report",  # join-key discovery (distinct-frame containment)
     "trimmed_mean_by_type",  # robust trimmed mean (rank trim + decimal sum)
-    # round-10 additions (stream_dedup_tws is deliberately NOT benched: its
-    # wall is the vendored pure-Python-protobuf state-server shim, a
-    # container artifact measured once in BASELINE.md's dedicated note —
-    # the GroupState twin stream_dedup_ttl already anchors the exact-TTL
-    # machinery here)
+    # round-10 additions
     "supplier_affinity",  # OPH-sketch affinity (default read; sketch-frame join)
     "hybrid_search_rrf",  # BM25 + dense top-K fused by integer-ppb RRF
     "contrastive_pair_mining",  # hardest pos/neg per anchor (broadcast pairs)

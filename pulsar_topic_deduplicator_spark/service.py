@@ -19,7 +19,7 @@ the engine's pieces:
    (``dedup_stream_ingest_ttl``; digest groups are near-singleton in dedup
    traffic, so per-group Python is effectively per-row — see its
    docstring); ``exact_processing_ttl=True`` opts into the exact
-   processing-clock kernels;
+   processing-clock kernel (``start_ttl_dedup``);
 4. health / counters / graceful stop (ops #13–#15) surfaced as methods.
 
 The live broker line is the one piece the sandbox cannot exercise: swap the
@@ -254,7 +254,6 @@ def start_dedup_service(
     now_ts: str = "2024-01-03 00:00:00",
     glob_filter: str | None = None,
     exact_processing_ttl: bool = False,
-    use_tws: bool | None = None,
     dq_gate: bool = False,
     messages: DataFrame | None = None,
     max_files_per_trigger: int | None = None,
@@ -286,10 +285,9 @@ def start_dedup_service(
     eviction lags by at most one more data batch (see
     ``_start_watermark_dedup_query``).
     ``exact_processing_ttl=True``
-    opts into the exact processing-time-TTL kernels for deployments that
-    need expiry exact to the millisecond (``use_tws`` then selects
-    GroupState vs transformWithState); its output additionally carries the
-    per-digest ``n_dropped`` counter rows.
+    opts into the exact processing-time-TTL kernel (``start_ttl_dedup``)
+    for deployments that need expiry exact to the millisecond; its output
+    additionally carries the per-digest ``n_dropped`` counter rows.
 
     ``max_files_per_trigger`` rate-limits ingest (admission control — the
     reference's bounded receive queue, ``src/config.ts:231-235``); dedup
@@ -317,7 +315,6 @@ def start_dedup_service(
                 ttl_ms=config.dedup_window_ms,
                 seed_digests=seeds,
                 glob_filter=glob_filter,
-                use_tws=use_tws,
                 ignored=config.ignored_properties,
                 message_predicate=predicate,
                 messages=messages,
@@ -486,14 +483,13 @@ def run_dedup_service_bounded(
     now_ts: str = "2024-01-03 00:00:00",
     glob_filter: str | None = None,
     exact_processing_ttl: bool = False,
-    use_tws: bool | None = None,
     output_dir: str | None = None,
 ) -> DataFrame:
     """Bounded (drain-and-stop) run of the full service composition — the
     test/backfill entry point. Default kernel = JVM watermark TTL (full
     surviving message rows); ``exact_processing_ttl=True`` opts into the
-    exact GroupState/transformWithState kernels (digest/message_id/
-    event_ts/n_dropped rows) — see ``start_dedup_service``. Pass
+    exact GroupState kernel (digest/message_id/event_ts/n_dropped rows) —
+    see ``start_dedup_service``. Pass
     ``output_dir`` for the RESTARTABLE parquet-sink shape (resumable
     backfills; memory sinks refuse checkpoint recovery) — the returned
     frame then reads the cumulative sink directory. The warm-up seed set
@@ -508,7 +504,6 @@ def run_dedup_service_bounded(
                 ttl_ms=config.dedup_window_ms,
                 seed_digests=seeds,
                 glob_filter=glob_filter,
-                use_tws=use_tws,
                 ignored=config.ignored_properties,
             )
         query, name = _start_watermark_dedup_query(
@@ -538,7 +533,6 @@ def run_gated_service_bounded(
     checkpoint_dir: str | None = None,
     glob_filter: str | None = None,
     exact_processing_ttl: bool = False,
-    use_tws: bool | None = None,
 ) -> tuple[DataFrame, DataFrame, int]:
     """Bounded run of the DQ-gated service composition: the ingest stream is
     split by the row-local gate — clean rows flow through the TTL dedup,
@@ -547,8 +541,8 @@ def run_gated_service_bounded(
     gate-passing ingest count, so ``dropped = n_clean − forwarded`` on both
     kernels. Default kernel = JVM watermark TTL (``start_dedup_service``
     rationale); ``exact_processing_ttl=True`` opts into the exact
-    GroupState/transformWithState kernels, whose output additionally
-    carries per-digest ``n_dropped`` counter rows."""
+    GroupState kernel, whose output additionally carries per-digest
+    ``n_dropped`` counter rows."""
     if not exact_processing_ttl:
         return run_gated_service_watermark_bounded(
             spark, config, source_dir, glob_filter=glob_filter
@@ -567,7 +561,6 @@ def run_gated_service_bounded(
         checkpoint_dir or tempfile.mkdtemp("gated_ckpt"),
         ttl_ms=config.dedup_window_ms,
         glob_filter=glob_filter,
-        use_tws=use_tws,
         ignored=config.ignored_properties,
         message_predicate=predicate,
     )
@@ -603,7 +596,6 @@ def service_counters_composed(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         glob_filter="events.parquet",
         exact_processing_ttl=True,
-        use_tws=False,
     )
     forwarded = out.filter(F.col("message_id").isNotNull()).count()
     dropped = out.agg(F.sum("n_dropped")).collect()[0][0] or 0

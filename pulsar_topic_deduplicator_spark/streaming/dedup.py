@@ -2,18 +2,19 @@
 
 Reference (``src/deduplication.ts:97-160``): per message → content hash →
 TTL-set membership check → forward first occurrence with ``origin``
-provenance → count forwarded/dropped per minute. Two engine renderings:
+provenance → count forwarded/dropped per minute. Two TTL semantics:
 
-1. ``dedup_stream`` — the built-in path: ``withWatermark`` +
-   ``dropDuplicatesWithinWatermark([digest])`` (SURVEY.md §2.1.3: the
-   watermark delay plays the TTL role on event time — documented deviation
-   §7.4.2), plus ``observe()`` counters (reference op #13).
-2. ``TtlDedupProcessor`` — the exact-control path: per-digest value state
-   with a processing-time TTL via ``transformWithStateInPandas``, matching
-   the reference's ObliviousSet clock (TTL from insertion,
-   ``src/deduplication.ts:76``) — including the **warm-up initial state**
-   (reference op #11): seed digests from a batch scan of prior output feed
-   ``initialState``, mirroring ``buildUpCache`` (``src/cacheBuilding.ts:65``).
+1. ``dedup_stream`` / ``dedup_stream_ingest_ttl`` — the built-in JVM
+   paths: ``withWatermark`` + ``dropDuplicatesWithinWatermark([digest])``
+   (SURVEY.md §2.1.3: the watermark delay plays the TTL role — documented
+   deviation §7.4.2), plus ``observe()`` counters (reference op #13).
+2. ``start_ttl_dedup`` — the one exact kernel: first occurrence per
+   digest wins and the TTL runs from insertion on the processing-time
+   clock, the reference's ObliviousSet (``src/deduplication.ts:76``).
+   It is ``applyInPandasWithState`` over ``TTL_KEY_GROUPS`` fixed digest
+   hash buckets (``_make_bucketed_ttl_kernel``). Its **warm-up** (reference
+   op #11) streams seed digests from a batch scan of prior output through
+   the same kernel, mirroring ``buildUpCache`` (``src/cacheBuilding.ts:65``).
 
 Scale: state is hash-partitioned by digest across executors — uniformly
 distributed keys (crypto hash), no skew; RocksDB state store + changelog
@@ -31,10 +32,6 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
 
 from ..functions.canonical import canonical_json, filter_ignored_keys
 from .source import events_message_stream
@@ -167,35 +164,18 @@ def run_stream_dedup_bounded(
 
 # ─── exact-TTL path ─────────────────────────────────────────────────────────
 #
-# Two implementations of the reference's ObliviousSet semantics (TTL from
+# One kernel carries the reference's ObliviousSet semantics (TTL from
 # insertion on the processing-time clock, ``src/deduplication.ts:76``):
-#
-# * ``applyInPandasWithState`` + GroupState ProcessingTimeTimeout — the
-#   default: timeout-at-TTL IS "entries expire ttl ms after insertion".
-# * ``TtlDedupProcessor`` (transformWithStateInPandas + native TTL value
-#   state) — the forward path; requires google.protobuf, which this
-#   container lacks, so it is feature-gated (used automatically if present).
-#
-# Warm-up seeding (reference op #11) differs per path: transformWithState
-# takes ``initialState`` directly; the GroupState path replays seeds as
-# messages *through the stream itself* — which is what the reference
-# actually does (it re-reads its own output topic through the same message
-# path, ``src/cacheBuilding.ts:141-153``).
+# ``applyInPandasWithState`` over a fixed number of digest hash buckets,
+# each bucket's {digest: first_seen_ms} map held in GroupState
+# (``_make_bucketed_ttl_kernel``). Warm-up seeding (reference op #11)
+# replays the seed digests as messages *through the stream itself* — what
+# the reference does too: it re-reads its own output topic through the
+# same message path (``src/cacheBuilding.ts:141-153``).
 
-# feature gate: protobuf is required by the transformWithState state server
-# (driver and workers). _pbcompat can satisfy it from the container's
-# vendored pure-Python protobuf; without any protobuf the GroupState path
-# below carries the same semantics.
-from .._pbcompat import enable_vendored_protobuf
-
-HAS_TRANSFORM_WITH_STATE = enable_vendored_protobuf()
-
-_TTL_OUTPUT_SCHEMA = (
-    "digest string, message_id string, event_ts timestamp, n_dropped bigint"
-)
 #: kernel-boundary schema: event time crosses the JVM↔Python boundary as
 #: LONG epoch-micros, not timestamp. ``unix_micros`` is a strictly monotone
-#: bijection on timestamp[us], so every min/sort the kernels perform on
+#: bijection on timestamp[us], so every min/sort the kernel performs on
 #: ``event_us`` picks the identical winner the timestamp column would, and
 #: ``timestamp_micros`` restores the exact value JVM-side after the
 #: stateful op. Why: ApplyInPandasWithState converts every data column
@@ -206,215 +186,61 @@ _TTL_OUTPUT_SCHEMA = (
 _TTL_KERNEL_SCHEMA = (
     "digest string, message_id string, event_us bigint, n_dropped bigint"
 )
-_STATE_SCHEMA = "first_seen_ms long"
-
 SEED_MESSAGE_ID = "__seed__"
 
-
-def _make_ttl_kernel(ttl_ms: int, use_timers: bool = False):
-    """GroupState kernel factory: first-wins per digest, TTL from insertion.
-
-    The insertion timestamp lives IN the state and expiry is re-checked on
-    every arrival — GroupState timers alone would not match ObliviousSet,
-    because a timer never fires for a key that has data in the same batch
-    (a duplicate arriving just after expiry must be re-admitted, not
-    dropped). Timers are therefore ONLY state GC — and they are off by
-    default: registered processing-time timers make the micro-batch engine
-    schedule batches continuously until every timer fires (observed: 150+
-    empty epochs against a 1 h TTL in a bounded run). A long-running
-    production query should enable them so expired digests leave the store.
-
-    Seed rows (message_id == SEED_MESSAGE_ID) insert state without emitting —
-    the warm-up path. Duplicates do NOT extend the TTL (the reference's set
-    only stamps insertion time, ``src/deduplication.ts:76``).
-
-    Duplicates whose first occurrence is in a PRIOR batch (or a warm-up
-    seed) still produce a counter-only row — ``message_id`` NULL,
-    ``n_dropped`` = batch's duplicate count — so downstream dropped totals
-    match the reference's ``nRecentDropped`` (``src/deduplication.ts:80-95``)
-    instead of under-reporting to co-batched duplicates only. Consumers of
-    the message stream filter ``message_id IS NOT NULL``."""
-
-    # one-row output TEMPLATE, filled per group via .iat: a fresh
-    # pd.DataFrame construction costs ~200 µs against template.copy()'s
-    # ~20 µs, and the kernel yields once per group (~100k groups/batch at
-    # sf0.1) — template + scalar fast path measured 14.3 s → 12.0 s on the
-    # bounded sf0.1 run
-    # event_us is nullable Int64: counter-only rows (duplicates of a prior
-    # batch's winner) must carry a NULL event time, and the extension dtype
-    # keeps NA through the Arrow cast where plain int64 cannot
-    template = pd.DataFrame(
-        {
-            "digest": ["x"],
-            "message_id": ["x"],
-            "event_us": pd.array([pd.NA], dtype="Int64"),
-            "n_dropped": [0],
-        }
-    )
-
-    def kernel(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        batches = [pdf for pdf in pdfs if len(pdf)]
-        if not batches:
-            return
-        now_ms = state.getCurrentProcessingTimeMs()
-        prior = state.get if state.exists else None  # (first_seen_ms,)
-        already = prior is not None and (now_ms - prior[0]) < ttl_ms
-        # fast path: with crypto-uniform digests almost every group is a
-        # single row, and the kernel runs once PER GROUP — scalar .iat
-        # reads instead of concat/sort/Series-compare/boolean-filter cut
-        # the per-group pandas overhead ~2× at ~100k groups/batch
-        # (semantics identical to the general path below for n=1)
-        if len(batches) == 1 and len(batches[0]) == 1:
-            rows = batches[0]
-            mid = rows["message_id"].iat[0]
-            is_seed = mid == SEED_MESSAGE_ID
-            if not already:
-                state.update((now_ms,))
-            if use_timers:
-                # Spark clears a processing-time timeout on every call
-                # with data: re-arm whenever state stays behind, or a
-                # duplicate-only batch disarms this digest's GC for good
-                state.setTimeoutDuration(ttl_ms)
-            if already or is_seed:
-                if not is_seed:
-                    out = template.copy()
-                    out.iat[0, 0] = key[0]
-                    out.iat[0, 1] = None
-                    out.iat[0, 3] = 1
-                    yield out
-                return
-            out = template.copy()
-            out.iat[0, 0] = key[0]
-            out.iat[0, 1] = mid
-            out.iat[0, 2] = rows["event_us"].iat[0]
-            out.iat[0, 3] = 0
-            yield out
-            return
-        # long micros sort identically to the timestamps they encode (strict
-        # monotone bijection); a NULL event time arrives as NaN and sorts
-        # last, exactly like NaT did
-        rows = pd.concat(batches).sort_values(["event_us", "message_id"])
-        has_seed = bool((rows["message_id"] == SEED_MESSAGE_ID).any())
-        live = rows[rows["message_id"] != SEED_MESSAGE_ID]
-        if not already:
-            state.update((now_ms,))
-        if use_timers:
-            state.setTimeoutDuration(ttl_ms)  # re-arm: see the fast path
-        if already or has_seed:
-            # every live row here is a duplicate / warm-up hit: drop them
-            # all, but surface the count as a message_id-less counter row
-            if len(live):
-                out = template.copy()
-                out.iat[0, 0] = key[0]
-                out.iat[0, 1] = None
-                out.iat[0, 3] = len(live)
-                yield out
-            return
-        if len(live):
-            first = live.iloc[0]
-            out = template.copy()
-            out.iat[0, 0] = key[0]
-            out.iat[0, 1] = first["message_id"]
-            out.iat[0, 2] = first["event_us"]
-            out.iat[0, 3] = len(live) - 1
-            yield out
-
-    return kernel
-
+#: Key groups of the exact kernel: a digest's group is
+#: ``pmod(xxhash64(digest), TTL_KEY_GROUPS)``. The map is a constant, so it
+#: never depends on parallelism and no restart or rescale can remap a
+#: digest away from its state (the fixed key-group design of "Towards
+#: Fine-Grained Scalability for Stateful Stream Processing Systems", ICDE
+#: 2025). Why 64: each kernel call handles one group, and a micro-batch of
+#: 10k crypto-uniform digests touches every group whatever the count, so
+#: each extra group is one more Python call per batch with less work in
+#: it. On the service benchmark's ``exact_ttl`` workload (4 cores,
+#: ``local[3]``, seeds 2-4) 256 groups cost 9% of msg/s against 64 and
+#: 1024 groups cost 47%. What the constant leaves: a group's map, which
+#: purge-on-write keeps to the digests still inside the TTL window, is
+#: round-tripped whole through the Python worker on every batch that
+#: touches the group, about ``live_digests × 100 B / 64`` (1.6 MB per
+#: million live digests).
+TTL_KEY_GROUPS = 64
 
 #: sharded-ObliviousSet state: the bucket's {digest → first_seen_ms} map as
 #: two parallel arrays (GroupState rows cannot hold a MapType directly)
 _BUCKET_STATE_SCHEMA = "digests array<string>, first_seen_ms array<long>"
 
 
-def _ttl_bucket_count(spark: SparkSession) -> int:
-    """Bucket count for the sharded GroupState kernel — scale-adaptive
-    (guide §2.2): 8 buckets per core keeps every state-store partition
-    busy with amortized-size groups locally; a cluster overrides with
-    ``SPARK_GRAFT_TTL_BUCKETS``.
-
-    The bucket count is the OPERATIVE state-size guard for this kernel:
-    one bucket's {digest: first_seen_ms} map is round-tripped through the
-    Python worker whole on every batch that touches the bucket, and with
-    the kernel's purges (see ``_make_bucketed_ttl_kernel``) the map holds
-    exactly the digests still inside the TTL window. Size the override so
-    one bucket's LIVE map stays comfortably inside a task:
-    ``B ≥ live_digests_per_ttl_window × ~100 B / ~64 MB`` (e.g. 1 billion
-    live digests → ≥ ~1600 buckets)."""
-    import os
-
-    explicit = os.environ.get("SPARK_GRAFT_TTL_BUCKETS")
-    if explicit:
-        return max(1, int(explicit))
-    return max(64, spark.sparkContext.defaultParallelism * 8)
-
-
-def _pinned_bucket_count(spark: SparkSession, checkpoint_dir: str) -> int:
-    """Bucket count PINNED to the checkpoint (ADVICE r14): digests route
-    to state buckets via ``pmod(xxhash64(digest), B)``, so B must never
-    change across a restart of the same checkpoint — a restart on
-    different parallelism (or a changed ``SPARK_GRAFT_TTL_BUCKETS``)
-    would remap digests to other buckets, silently losing their
-    first_seen state and re-admitting duplicates. The first start
-    computes B (``_ttl_bucket_count``) and persists it as a sidecar JSON
-    in the checkpoint directory; every restart reads the sidecar back and
-    ignores the restarting session's environment. (Local-FS checkpoints
-    only, which is what this engine runs; an object-store checkpoint
-    deployment must pin B explicitly via ``SPARK_GRAFT_TTL_BUCKETS`` and
-    keep it constant — the sidecar write failing is non-fatal but loses
-    the restart guarantee, so it warns.)"""
-    import json
-    import os
-    import sys
-
-    pin_path = os.path.join(checkpoint_dir, "graft_ttl_buckets.json")
-    try:
-        with open(pin_path) as f:
-            return max(1, int(json.load(f)["n_buckets"]))
-    except (OSError, ValueError, KeyError, TypeError):
-        pass
-    n = _ttl_bucket_count(spark)
-    try:
-        os.makedirs(checkpoint_dir, exist_ok=True)
-        with open(pin_path, "w") as f:
-            json.dump({"n_buckets": n}, f)
-    except OSError as exc:
-        print(
-            f"ttl_dedup: could not pin bucket count at {pin_path!r} "
-            f"({exc}); a restart of this checkpoint MUST run with "
-            f"SPARK_GRAFT_TTL_BUCKETS={n}",
-            file=sys.stderr,
-        )
-    return n
-
-
 def _make_bucketed_ttl_kernel(ttl_ms: int, use_timers: bool = False):
-    """Sharded-ObliviousSet GroupState kernel: keyed by a HASH BUCKET of
-    the digest instead of the digest itself, with the bucket's
+    """The exact-TTL dedup kernel: a sharded ObliviousSet on GroupState,
+    keyed by the digest's key group (``TTL_KEY_GROUPS``) with the group's
     {digest: first_seen_ms} map as state.
 
-    Per-digest semantics are EXACTLY ``_make_ttl_kernel``'s (first-wins by
-    (event_us, message_id), TTL from insertion on the processing-time
-    clock, duplicates never extend the TTL, seeds insert silently,
-    counter-only rows for duplicates of a prior winner) — the per-digest
-    decisions below are a vectorized transcription, and the emitted row
-    SET is invariant to the bucket count (pinned in
-    tests/test_round14_opt.py against a replay of the per-digest rules).
-    What changes is the cost model: ApplyInPandasWithState pays a fixed
-    ~100 µs per GROUP (Arrow↔pandas conversion + kernel invocation +
-    state round trip), and crypto digests give ~1 group per row — 100k
-    invocations per batch at sf0.1. Bucketing pays that fixed cost per
-    BUCKET (guide §4: fewer, larger Python calls) while the per-digest
-    work inside is numpy/pandas over the whole bucket.
+    Per digest: the first occurrence wins (by (event_us, message_id)), and
+    the TTL runs from insertion on the processing-time clock. Expiry is
+    re-checked against the stored stamp on every arrival, because a
+    GroupState timer never fires for a key that has data in the same
+    batch: a duplicate arriving just after expiry is re-admitted, not
+    dropped. Duplicates do NOT extend the TTL (the reference's set only
+    stamps insertion time, ``src/deduplication.ts:76``). Seed rows
+    (message_id == SEED_MESSAGE_ID) insert state without emitting — the
+    warm-up path. Duplicates whose first occurrence is in a PRIOR batch
+    (or a warm-up seed) still produce a counter-only row — ``message_id``
+    NULL, ``n_dropped`` = the batch's duplicate count — so dropped totals
+    match the reference's ``nRecentDropped``
+    (``src/deduplication.ts:80-95``); consumers of the message stream
+    filter ``message_id IS NOT NULL``. The emitted row set is invariant to
+    the group count: tests/test_round14_opt.py replays batches against a
+    one-digest-per-group reference model (tests/ttl_reference.py).
 
-    State GC (round 15, VERDICT r14 item 1): the bucket's state map is
-    round-tripped whole on every batch that touches the bucket, so dead
-    entries are not free the way an expired per-digest GroupState row was
-    (that one just sat in the JVM store). Two complementary purges keep
-    the map bounded by the LIVE digest count:
+    Cost model: ApplyInPandasWithState pays a fixed ~100 µs per GROUP
+    (Arrow↔pandas conversion + kernel invocation + state round trip), and
+    crypto digests give ~1 group per row. Grouping by key group pays that
+    fixed cost per group (fewer, larger Python calls) while the
+    per-digest work inside is numpy/pandas over the whole group.
+
+    State GC: the group's state map is round-tripped whole on every batch
+    that touches the group, so dead entries cost a round trip each. Two
+    complementary purges keep the map bounded by the LIVE digest count:
 
     * **purge-on-write** (always on): whenever the kernel writes state it
       drops every expired entry. Semantically free — an expired entry
@@ -424,20 +250,14 @@ def _make_bucketed_ttl_kernel(ttl_ms: int, use_timers: bool = False):
     * **timer purge** (``use_timers=True``): the kernel re-arms a
       processing-time timer for ``ttl_ms`` on every call with data that
       leaves state behind (Spark clears the timeout on each such call,
-      writes or not); when it fires with no data for the bucket, expired
+      writes or not); when it fires with no data for the group, expired
       entries are purged and the state row is REMOVED once the map
-      empties. This is what bounds state for buckets that stop receiving
-      traffic. Off by default for
-      the same reason as ``_make_ttl_kernel``'s: registered timers make
-      the micro-batch engine schedule batches continuously until every
-      timer fires, which a bounded harness run must not pay for. A
-      long-running production query should pass ``use_timers=True`` to
-      ``start_ttl_dedup``.
-
-    The operative scale guard remains the bucket count (see
-    ``_ttl_bucket_count``): size it so one bucket's LIVE map — which,
-    with the purges above, holds only digests inside the TTL window —
-    stays comfortably inside a task."""
+      empties. This is what bounds state for groups that stop receiving
+      traffic. Off by default: registered timers make the micro-batch
+      engine schedule batches continuously until every timer fires
+      (observed: 150+ empty epochs against a 1 h TTL), which a bounded
+      harness run must not pay for. A long-running production query
+      should pass ``use_timers=True`` to ``start_ttl_dedup``."""
 
     def kernel(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -536,80 +356,6 @@ def _make_bucketed_ttl_kernel(ttl_ms: int, use_timers: bool = False):
     return kernel
 
 
-class TtlDedupProcessor(StatefulProcessor):
-    """Per-digest first-wins filter with TTL'd value state — the exact
-    semantics of the reference's ObliviousSet (``src/deduplication.ts:76``,
-    ``:118-158``): TTL clock starts at state insertion (processing time);
-    duplicates inside the TTL are suppressed and counted; after expiry the
-    same content is forwarded again.
-
-    ``handleInitialState`` is the warm-up path (op #11): pre-seed digests so
-    a fresh query does not re-forward recently-output messages
-    (``src/cacheBuilding.ts:65-212``).
-    """
-
-    def __init__(self, ttl_ms: int):
-        self.ttl_ms = ttl_ms
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self.seen = handle.getValueState("seen", _STATE_SCHEMA, self.ttl_ms)
-
-    def handleInitialState(self, key, initialState: pd.DataFrame, timerValues) -> None:
-        self.seen.update((1,))
-
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        # a key's batch rows can span several Arrow chunks: collect the
-        # per-chunk minima BEFORE picking the winner, or a first-occurrence
-        # in a later chunk would lose to chunk 1's local minimum (the
-        # GroupState kernel concats-then-sorts; the two must agree)
-        first_rows = []
-        n_dropped = 0
-        already = self.seen.exists()
-        for pdf in rows:
-            if not len(pdf):
-                continue  # empty Arrow chunk: no state/counter effects
-            if already and not first_rows:
-                n_dropped += len(pdf)
-                continue
-            pdf = pdf.sort_values(["event_us", "message_id"])
-            first_rows.append(pdf.iloc[:1])
-            n_dropped += len(pdf) - 1
-            already = True
-            self.seen.update((1,))
-        if first_rows:
-            out = (
-                pd.concat(first_rows).sort_values(["event_us", "message_id"])
-                if len(first_rows) > 1
-                else first_rows[0]
-            )
-            out = out.iloc[:1]
-            n_dropped += len(first_rows) - 1
-            yield pd.DataFrame(
-                {
-                    "digest": [key[0]],
-                    "message_id": out["message_id"].tolist(),
-                    "event_us": out["event_us"].tolist(),
-                    "n_dropped": [n_dropped],
-                }
-            )
-        elif n_dropped:
-            # duplicates of a prior batch's (or warm-up) first occurrence:
-            # counter-only row so dropped telemetry matches nRecentDropped
-            yield pd.DataFrame(
-                {
-                    "digest": [key[0]],
-                    "message_id": [None],
-                    "event_us": [None],
-                    "n_dropped": [n_dropped],
-                }
-            )
-
-    def close(self) -> None:
-        pass
-
-
 def start_ttl_dedup(
     spark: SparkSession,
     source_dir: str,
@@ -617,7 +363,6 @@ def start_ttl_dedup(
     ttl_ms: int = 3_600_000,
     seed_digests: DataFrame | None = None,
     glob_filter: str | None = None,
-    use_tws: bool | None = None,
     ignored: tuple[str, ...] = (),
     message_predicate: Column | None = None,
     messages: DataFrame | None = None,
@@ -627,25 +372,26 @@ def start_ttl_dedup(
     """Start the exact-TTL dedup as a live streaming query; returns
     ``(StreamingQuery, output_table_name)`` (memory sink).
 
-    ``use_timers`` (GroupState path only): ``True`` arms a per-bucket
-    processing-time timer so buckets that stop receiving traffic still
-    purge expired digests and eventually drop their state row — pass it
-    on any long-running production query. Default ``False`` because
-    registered timers make the micro-batch engine schedule batches
-    continuously until every timer fires (see ``_make_ttl_kernel``), which
-    bounded harness runs must not pay for; buckets that DO receive
-    traffic purge expired entries on every state write regardless.
-    Emitted rows are identical either way (tests/test_round15_opt.py).
+    The kernel is ``_make_bucketed_ttl_kernel`` on
+    ``applyInPandasWithState``, grouped by ``pmod(xxhash64(digest),
+    TTL_KEY_GROUPS)``. The key-group count is a constant, so a digest's
+    group never depends on the session's parallelism.
 
-    Checkpoint compatibility: round 14 changed the GroupState grouping
-    key/state schema from ``(digest, first_seen_ms)`` to
-    ``(bucket, digest[]/first_seen_ms[])``. A checkpoint written before
-    that change CANNOT be resumed by this code (Spark fails loudly with a
-    state-schema mismatch at restore) — discard the old checkpoint and
-    re-seed via ``seed_digests`` from the prior output, exactly the
-    reference's warm-up path. Within the bucketed format the bucket count
-    is pinned to the checkpoint (``_pinned_bucket_count``), so restarts
-    on different parallelism are safe.
+    ``use_timers``: ``True`` arms a per-group processing-time timer so
+    groups that stop receiving traffic still purge expired digests and
+    eventually drop their state row — pass it on any long-running
+    production query. Default ``False`` because registered timers make the
+    micro-batch engine schedule batches continuously until every timer
+    fires (see ``_make_bucketed_ttl_kernel``), which bounded harness runs
+    must not pay for; groups that DO receive traffic purge expired entries
+    on every state write regardless. Emitted rows are identical either way
+    (tests/test_round15_opt.py).
+
+    Restart: the sink is a memory sink, which cannot recover from a
+    checkpoint, so a second start on the same ``checkpoint_dir`` fails
+    with ``AnalysisException`` instead of resuming
+    (tests/test_streaming.py). A fresh start re-seeds through
+    ``seed_digests`` from the prior output, the reference's warm-up path.
 
     ``max_files_per_trigger`` is the admission-control cap (the reference
     bounds its warm-up reader with a 10-message receive queue,
@@ -669,19 +415,12 @@ def start_ttl_dedup(
     ``ignored`` is the reference's ``DEDUPLICATION_IGNORED_PROPERTIES``
     projection (op #4) applied to the hash input.
 
-    ``use_tws`` selects the kernel: True = transformWithStateInPandas
-    (native TTL value state), False = applyInPandasWithState (GroupState),
-    None = transformWithState when protobuf is available. Both kernels
-    carry identical semantics (pinned against each other in
-    tests/test_streaming.py).
-
     ``seed_digests`` (a batch DataFrame with a ``digest`` column) replays
     the reference's warm-up (op #11): those digests start out "seen" and
-    their live occurrences are suppressed. With transformWithState available
-    the seeds feed ``initialState``; on the GroupState path they are written
-    as seed *messages* into a side source and streamed through the same
-    dedup kernel — exactly how the reference seeds its cache by re-reading
-    its own output topic (``src/cacheBuilding.ts:141-153``).
+    their live occurrences are suppressed. They are written as seed
+    *messages* into a side source and streamed through the same dedup
+    kernel — exactly how the reference seeds its cache by re-reading its
+    own output topic (``src/cacheBuilding.ts:141-153``).
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -700,77 +439,51 @@ def start_ttl_dedup(
     keyed = messages.withColumn("digest", message_digest(ignored)).select(
         "digest", "message_id", F.unix_micros("event_ts").alias("event_us")
     )
+    if seed_digests is not None:
+        from ..sources.retry import with_warmup_retries
 
-    if use_tws is None:
-        use_tws = HAS_TRANSFORM_WITH_STATE
-    # re-run so the NOW-active SparkContext's worker env gets the vendored
-    # protobuf path (enable() at import time may have preceded the session)
-    if use_tws and enable_vendored_protobuf():
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
+        seed_dir = tempfile.mkdtemp(f"seed_{uuid.uuid4().hex[:8]}")
+        # the warm-up scan may race a concurrent writer's commit on the
+        # output table; retry with the reference's backoff policy
+        # (src/cacheBuilding.ts:90-131) rather than failing startup on
+        # the first transient error
+        with_warmup_retries(
+            lambda: seed_digests.select(
+                F.col("digest").cast("string").alias("digest"),
+                F.lit(SEED_MESSAGE_ID).alias("message_id"),
+                F.lit(0).cast("long").alias("event_us"),
+            )
+            .write.mode("overwrite")
+            .parquet(seed_dir)
         )
-        kwargs = {}
-        if seed_digests is not None:
-            kwargs["initialState"] = seed_digests.select("digest").groupBy("digest")
-        deduped = keyed.groupBy("digest").transformWithStateInPandas(
-            TtlDedupProcessor(ttl_ms),
+        seed_stream = (
+            spark.readStream.schema(
+                "digest string, message_id string, event_us long"
+            ).parquet(seed_dir)
+        )
+        keyed = seed_stream.unionByName(keyed)
+    # sharded ObliviousSet (see _make_bucketed_ttl_kernel): group by a
+    # fixed hash bucket of the digest so the per-group Python fixed cost
+    # is paid per bucket, not per crypto-unique digest. xxhash64 and the
+    # constant TTL_KEY_GROUPS map a digest to the same bucket in every
+    # batch and every session.
+    deduped = (
+        keyed.withColumn(
+            "bucket", F.pmod(F.xxhash64("digest"), F.lit(TTL_KEY_GROUPS))
+        )
+        .groupBy("bucket")
+        .applyInPandasWithState(
+            _make_bucketed_ttl_kernel(ttl_ms, use_timers=use_timers),
             outputStructType=_TTL_KERNEL_SCHEMA,
-            outputMode="Append",
-            timeMode="ProcessingTime",
-            **kwargs,
+            stateStructType=_BUCKET_STATE_SCHEMA,
+            outputMode="append",
+            timeoutConf=(
+                GroupStateTimeout.ProcessingTimeTimeout
+                if use_timers
+                else GroupStateTimeout.NoTimeout
+            ),
         )
-    else:
-        if seed_digests is not None:
-            from ..sources.retry import with_warmup_retries
-
-            seed_dir = tempfile.mkdtemp(f"seed_{uuid.uuid4().hex[:8]}")
-            # the warm-up scan may race a concurrent writer's commit on the
-            # output table; retry with the reference's backoff policy
-            # (src/cacheBuilding.ts:90-131) rather than failing startup on
-            # the first transient error
-            with_warmup_retries(
-                lambda: seed_digests.select(
-                    F.col("digest").cast("string").alias("digest"),
-                    F.lit(SEED_MESSAGE_ID).alias("message_id"),
-                    F.lit(0).cast("long").alias("event_us"),
-                )
-                .write.mode("overwrite")
-                .parquet(seed_dir)
-            )
-            seed_stream = (
-                spark.readStream.schema(
-                    "digest string, message_id string, event_us long"
-                ).parquet(seed_dir)
-            )
-            keyed = seed_stream.unionByName(keyed)
-        # sharded ObliviousSet (see _make_bucketed_ttl_kernel): group by a
-        # hash bucket of the digest so the per-group Python fixed cost is
-        # paid per bucket, not per crypto-unique digest. xxhash64 is
-        # deterministic, so a digest lands in the same bucket across
-        # batches — and across restarts BECAUSE the bucket count is pinned
-        # to the checkpoint (_pinned_bucket_count): with an unpinned count
-        # a restart on different parallelism would remap digests and lose
-        # their first_seen state.
-        n_buckets = _pinned_bucket_count(spark, checkpoint_dir)
-        deduped = (
-            keyed.withColumn(
-                "bucket", F.pmod(F.xxhash64("digest"), F.lit(n_buckets))
-            )
-            .groupBy("bucket")
-            .applyInPandasWithState(
-                _make_bucketed_ttl_kernel(ttl_ms, use_timers=use_timers),
-                outputStructType=_TTL_KERNEL_SCHEMA,
-                stateStructType=_BUCKET_STATE_SCHEMA,
-                outputMode="append",
-                timeoutConf=(
-                    GroupStateTimeout.ProcessingTimeTimeout
-                    if use_timers
-                    else GroupStateTimeout.NoTimeout
-                ),
-            )
-        )
+    )
 
     # restore the timestamp JVM-side (stateless projection after the
     # stateful op): value-identical round trip through epoch-micros
@@ -791,45 +504,6 @@ def start_ttl_dedup(
     return query, name
 
 
-def drain_bounded(
-    spark: SparkSession,
-    query,
-    table_name: str,
-    settle_s: float = 2.0,
-    timeout_s: float = 120.0,
-) -> None:
-    """Drain a bounded run of a TTL'd stateful query without
-    ``processAllAvailable``.
-
-    TTL'd transformWithState state (and GroupState processing-time timers)
-    make the micro-batch engine schedule "no new data but cleaning up state"
-    batches indefinitely — correct state-eviction behavior for a live query,
-    but ``processAllAvailable`` never returns against it (observed: batchId
-    75+ on a drained 5-row source). For a bounded source the observable
-    fixpoint is: latest progress reads zero input rows AND the sink row
-    count has been stable for ``settle_s`` (batches cycle every few hundred
-    ms here, so pending files surface well inside the settle window)."""
-    import time
-
-    deadline = time.time() + timeout_s
-    last_rows = -1
-    stable_since: float | None = None
-    while time.time() < deadline:
-        n = spark.table(table_name).count()
-        prog = query.recentProgress
-        zero_input = bool(prog) and prog[-1]["numInputRows"] == 0
-        if n == last_rows and zero_input:
-            if stable_since is None:
-                stable_since = time.time()
-            elif time.time() - stable_since >= settle_s:
-                return
-        else:
-            stable_since = None
-            last_rows = n
-        time.sleep(0.3)
-    raise TimeoutError(f"streaming sink {table_name} did not settle")
-
-
 def run_ttl_dedup_bounded(
     spark: SparkSession,
     source_dir: str,
@@ -837,42 +511,33 @@ def run_ttl_dedup_bounded(
     ttl_ms: int = 3_600_000,
     seed_digests: DataFrame | None = None,
     glob_filter: str | None = None,
-    use_tws: bool | None = None,
     ignored: tuple[str, ...] = (),
     message_predicate: Column | None = None,
 ) -> DataFrame:
-    """Bounded run of the exact-TTL dedup: start → drain → stop.
+    """Bounded run of the exact-TTL dedup: start → processAllAvailable →
+    stop.
 
-    Default micro-batch trigger, NOT availableNow: with TTL'd state or
-    processing-time timers, availableNow keeps scheduling micro-batches
-    until every timer has fired (observed: 150+ empty epochs against a 1 h
-    TTL). The GroupState path drains with processAllAvailable; the
-    transformWithState path needs the settle-based ``drain_bounded`` (its
-    TTL cleanup batches never stop arriving)."""
+    Default micro-batch trigger, NOT availableNow: with processing-time
+    timers, availableNow keeps scheduling micro-batches until every timer
+    has fired (observed: 150+ empty epochs against a 1 h TTL). The run
+    arms no timers, so ``processAllAvailable`` returns once the source is
+    drained."""
     from .source import bounded_shuffle_width
 
-    if use_tws is None:
-        use_tws = HAS_TRANSFORM_WITH_STATE
-    # width pin is restart-safe: Spark persists shuffle.partitions in the
-    # checkpoint offset log and restores it on resume, so the pin only
-    # shapes a FRESH checkpoint; resumed runs keep their baked-in width
     with bounded_shuffle_width(spark):
         query, name = start_ttl_dedup(
             spark, source_dir, checkpoint_dir, ttl_ms, seed_digests,
-            glob_filter, use_tws=use_tws, ignored=ignored,
+            glob_filter, ignored=ignored,
             message_predicate=message_predicate,
         )
         try:
-            if use_tws:
-                drain_bounded(spark, query, name)
-            else:
-                query.processAllAvailable()
+            query.processAllAvailable()
         finally:
             query.stop()
     return spark.table(name)
 
 
-# ─── JVM-only ingest-clock TTL approximation (third kernel) ─────────────────
+# ─── JVM-only ingest-clock TTL approximation ────────────────────────────────
 
 
 def dedup_stream_ingest_ttl(
@@ -894,7 +559,7 @@ def dedup_stream_ingest_ttl(
     is watermarked by the TTL, and ``dropDuplicatesWithinWatermark`` keys on
     the content digest.
 
-    Semantics vs the exact GroupState kernel (``_make_ttl_kernel``):
+    Semantics vs the exact GroupState kernel (``_make_bucketed_ttl_kernel``):
 
     * a duplicate arriving within ``ttl_ms`` of its first occurrence on the
       ingest clock is suppressed — guaranteed, identical to ObliviousSet;
@@ -965,7 +630,7 @@ def run_ttl_dedup_watermark_bounded(
     ignored: tuple[str, ...] = (),
 ) -> DataFrame:
     """Bounded availableNow run of the watermark-TTL kernel. Unlike the
-    TTL'd stateful kernels there are no timers, so availableNow terminates
+    exact kernel there are no timers, so availableNow terminates
     on its own. Returns the deterministic projection (digest, topic): which
     duplicate ROW survives is engine-arbitrary under first-seen batch order,
     exactly like ``run_stream_dedup_bounded``."""

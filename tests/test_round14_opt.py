@@ -217,8 +217,9 @@ def test_bucketed_ttl_kernel_matches_per_digest_kernel():
     from pulsar_topic_deduplicator_spark.streaming.dedup import (
         SEED_MESSAGE_ID,
         _make_bucketed_ttl_kernel,
-        _make_ttl_kernel,
     )
+
+    from .ttl_reference import make_ttl_kernel
 
     ttl_ms = 1000
     now = 10_000
@@ -251,7 +252,7 @@ def test_bucketed_ttl_kernel_matches_per_digest_kernel():
     batch = batch.assign(event_us=batch["event_us"].astype("float64"))
 
     # per-digest kernel: one invocation per digest with scalar state
-    per_digest = _make_ttl_kernel(ttl_ms)
+    per_digest = make_ttl_kernel(ttl_ms)
     expected: list[pd.DataFrame] = []
     states_after = {}
     for d in batch["digest"].unique():

@@ -5,8 +5,6 @@ replaced, so the oracle-checked semantics cannot drift:
 
 * TTL bucket-state lifecycle (VERDICT r14 item 1): purge-on-write and the
   timer GC pass must never change an emitted row — only shrink state.
-* Bucket-count pinning (ADVICE r14): a checkpoint's bucket count survives
-  restarts with different parallelism / env overrides.
 """
 
 from __future__ import annotations
@@ -106,8 +104,9 @@ def test_ttl_purge_on_write_preserves_emitted_rows():
     the dead entry — proving purge-on-write is output-invariant."""
     from pulsar_topic_deduplicator_spark.streaming.dedup import (
         _make_bucketed_ttl_kernel,
-        _make_ttl_kernel,
     )
+
+    from .ttl_reference import make_ttl_kernel
 
     ttl_ms = 1000
     now = 10_000
@@ -120,7 +119,7 @@ def test_ttl_purge_on_write_preserves_emitted_rows():
         }
     ).assign(event_us=lambda d: d["event_us"].astype("float64"))
 
-    per_digest = _make_ttl_kernel(ttl_ms)
+    per_digest = make_ttl_kernel(ttl_ms)
     expected = []
     for d in batch["digest"].unique():
         st = _FakeState((prior[d],) if d in prior else None, now)
@@ -158,25 +157,6 @@ def test_ttl_use_timers_arms_timer_on_write():
     assert st.timeout_set_ms == ttl_ms
 
 
-def test_ttl_bucket_count_pinned_to_checkpoint(spark, tmp_path, monkeypatch):
-    """First start persists the bucket count; a 'restart' with a changed
-    SPARK_GRAFT_TTL_BUCKETS env must read the pinned value back."""
-    from pulsar_topic_deduplicator_spark.streaming.dedup import (
-        _pinned_bucket_count,
-        _ttl_bucket_count,
-    )
-
-    ckpt = str(tmp_path / "ckpt")
-    monkeypatch.delenv("SPARK_GRAFT_TTL_BUCKETS", raising=False)
-    first = _pinned_bucket_count(spark, ckpt)
-    assert first == _ttl_bucket_count(spark)
-    # restart with a different explicit bucket count: pin wins
-    monkeypatch.setenv("SPARK_GRAFT_TTL_BUCKETS", str(first * 7))
-    assert _pinned_bucket_count(spark, ckpt) == first
-    # a FRESH checkpoint honors the env override
-    assert _pinned_bucket_count(spark, str(tmp_path / "ckpt2")) == first * 7
-
-
 def _call(kernel, key, st, now_ms, batch=None):
     """One GroupState invocation as Spark makes it: the processing-time
     timeout is cleared on every call with data, and a call without data
@@ -196,12 +176,14 @@ def test_ttl_timer_rearmed_by_duplicate_only_batch():
     """use_timers: a batch holding only a within-TTL duplicate writes no
     state, yet Spark cleared the timeout on that call — the kernel must
     re-arm it, or the digest's state row is never removed once traffic
-    stops. Both exact kernels: duplicate-only batch, then an idle key
-    whose timer still fires and removes the state row."""
+    stops. The exact kernel and its per-digest reference model:
+    duplicate-only batch, then an idle key whose timer still fires and
+    removes the state row."""
     from pulsar_topic_deduplicator_spark.streaming.dedup import (
         _make_bucketed_ttl_kernel,
-        _make_ttl_kernel,
     )
+
+    from .ttl_reference import make_ttl_kernel
 
     ttl_ms = 1000
 
@@ -216,7 +198,7 @@ def test_ttl_timer_rearmed_by_duplicate_only_batch():
 
     # the per-digest kernel is keyed by the digest, the bucketed one by a
     # bucket number
-    for make, key in ((_make_ttl_kernel, ("d",)), (_make_bucketed_ttl_kernel, (0,))):
+    for make, key in ((make_ttl_kernel, ("d",)), (_make_bucketed_ttl_kernel, (0,))):
         kernel = make(ttl_ms, use_timers=True)
         st = _FakeState(None)
         first = _call(kernel, key, st, 0, batch("m1"))

@@ -88,7 +88,6 @@ def test_service_end_to_end_with_warmup_and_ignored_props(spark, tmp_path):
         prior_output=prior,
         now_ts="2024-01-01 01:00:00",
         exact_processing_ttl=True,
-        use_tws=False,
     )
     emitted = {r["message_id"] for r in out.collect() if r["message_id"]}
     # 1 wins over its ignored-prop twin 2; 3 is unique; 4 was warm-up-seeded
@@ -171,7 +170,6 @@ def test_service_dq_gate_quarantines_and_counters_reconcile(spark, tmp_path):
         src,
         str(tmp_path / "ck_gated"),
         exact_processing_ttl=True,
-        use_tws=False,
     )
     q = quarantine.collect()
     viol = {r["message_id"]: set(r["violations"]) for r in q}
@@ -231,7 +229,6 @@ def test_dq_gate_with_messages_override_quarantines_same_stream(spark, tmp_path)
         str(tmp_path / "does_not_exist"),
         str(tmp_path / "override_ckpt"),
         exact_processing_ttl=True,
-        use_tws=False,
         dq_gate=True,
         messages=events_message_stream(spark, src),
     )

@@ -184,7 +184,6 @@ def test_service_composition_over_socket_transport(spark, tmp_path):
         prior_output=prior,
         now_ts="2024-01-03 00:00:00",
         exact_processing_ttl=True,
-        use_tws=False,
         messages=messages,
     )
     try:

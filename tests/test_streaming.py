@@ -3,7 +3,7 @@
 * within-window duplicates dropped, first occurrence kept;
 * checkpoint restart: state survives — duplicates arriving in a later run
   are still dropped (the engine's answer to the reference's warm-up, op #11);
-* exact-TTL path: processing-time TTL state + initial-state warm-up seed.
+* exact-TTL path: processing-time TTL state + seed-message warm-up.
 """
 
 from __future__ import annotations
@@ -14,20 +14,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from pulsar_topic_deduplicator_spark.streaming.dedup import (
-    HAS_TRANSFORM_WITH_STATE,
-    drain_bounded,
     run_stream_dedup_bounded,
     run_ttl_dedup_bounded,
 )
-
-
-def _drain(spark, query, name):
-    """Path-appropriate bounded drain: processAllAvailable hangs forever on
-    TTL'd transformWithState (endless state-cleanup batches)."""
-    if HAS_TRANSFORM_WITH_STATE:
-        drain_bounded(spark, query, name)
-    else:
-        query.processAllAvailable()
 
 NS = 1_000_000_000
 BASE_TS = 1_704_067_200 * NS  # 2024-01-01T00:00:00Z in epoch-ns
@@ -103,27 +92,11 @@ def test_checkpoint_restart_keeps_state(spark, source_dir, tmp_path):
     assert rows == {"1", "2", "4", "6"}
 
 
-@pytest.mark.parametrize(
-    "use_tws",
-    [
-        False,
-        pytest.param(
-            True,
-            marks=pytest.mark.skipif(
-                not HAS_TRANSFORM_WITH_STATE, reason="no protobuf runtime"
-            ),
-        ),
-    ],
-    ids=["groupstate", "transformWithState"],
-)
-def test_ttl_dedup_exact_path(spark, source_dir, tmp_path, use_tws):
-    """Both kernels (GroupState and native-TTL transformWithState) must
-    produce identical forwarded sets and per-first n_dropped counts."""
+def test_ttl_dedup_exact_path(spark, source_dir, tmp_path):
+    """The exact kernel forwards each digest's first occurrence and counts
+    its co-batched duplicates in n_dropped."""
     result = run_ttl_dedup_bounded(
-        spark,
-        source_dir,
-        checkpoint_dir=str(tmp_path / f"ckpt_ttl_{use_tws}"),
-        use_tws=use_tws,
+        spark, source_dir, checkpoint_dir=str(tmp_path / "ckpt_ttl")
     )
     out = {r["message_id"]: r["n_dropped"] for r in result.collect()}
     assert set(out) == {"1", "2", "4"}
@@ -169,11 +142,11 @@ def test_ttl_dedup_warmup_seed(spark, source_dir, tmp_path):
     assert sum(r["n_dropped"] for r in counters) == 2
 
 
-@pytest.mark.skipif(not HAS_TRANSFORM_WITH_STATE, reason="no protobuf runtime")
-def test_tws_first_wins_across_arrow_chunks(spark, tmp_path):
-    """A key's rows can arrive in SEVERAL Arrow chunks; the TWS kernel must
-    pick the global (event_ts, message_id) minimum, not chunk 1's local one.
-    Forced with maxRecordsPerBatch=1 and the earliest event written last."""
+def test_ttl_first_wins_across_arrow_chunks(spark, tmp_path):
+    """A group's rows can arrive in SEVERAL Arrow chunks; the exact kernel
+    must pick the global (event_ts, message_id) minimum, not chunk 1's
+    local one. Forced with maxRecordsPerBatch=1 and the earliest event
+    written last."""
     src = str(tmp_path / "chunk_src")
     rows = [
         (11, BASE_TS + 500 * NS, 1, "click", 9.0, '{"k": 9}'),
@@ -185,7 +158,7 @@ def test_tws_first_wins_across_arrow_chunks(spark, tmp_path):
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1")
     try:
         result = run_ttl_dedup_bounded(
-            spark, src, checkpoint_dir=str(tmp_path / "ckpt_chunks"), use_tws=True
+            spark, src, checkpoint_dir=str(tmp_path / "ckpt_chunks")
         )
         out = [r for r in result.collect() if r["message_id"] is not None]
     finally:
@@ -227,7 +200,7 @@ def test_later_batch_duplicate_emits_counter_row(spark, tmp_path):
         spark, src, str(tmp_path / "ckpt_late"), ttl_ms=3_600_000
     )
     try:
-        _drain(spark, query, name)
+        query.processAllAvailable()
         first = spark.table(name).collect()
         assert {r["message_id"] for r in first} == {"1"}
         _write_batch(spark, src, BATCH1[2:3])  # event 3 = duplicate of 1
@@ -236,7 +209,7 @@ def test_later_batch_duplicate_emits_counter_row(spark, tmp_path):
         deadline = time.time() + 60
         counters = []
         while time.time() < deadline and not counters:
-            _drain(spark, query, name)
+            query.processAllAvailable()
             rows = spark.table(name).collect()
             counters = [r for r in rows if r["message_id"] is None]
             if not counters:
@@ -261,14 +234,14 @@ def test_ttl_expiry_readmits(spark, tmp_path):
         spark, src, str(tmp_path / "ckpt_exp"), ttl_ms=1500
     )
     try:
-        _drain(spark, query, name)
+        query.processAllAvailable()
         assert {r["message_id"] for r in spark.table(name).collect()} == {"1"}
         time.sleep(3.0)  # let the TTL lapse (processing-time clock; margin
         # over the 1.5 s TTL — under heavy load batch timestamps lag)
         _write_batch(spark, src, BATCH1[2:3])  # duplicate content (event 3)
         deadline = time.time() + 60
         while time.time() < deadline:
-            _drain(spark, query, name)
+            query.processAllAvailable()
             rows = {
                 r["message_id"]
                 for r in spark.table(name).collect()
@@ -281,6 +254,58 @@ def test_ttl_expiry_readmits(spark, tmp_path):
         assert rows == {"1", "3"}
     finally:
         query.stop()
+
+
+def test_ttl_dedup_restart_fails_loudly(spark, tmp_path):
+    """The exact path writes to a memory sink, which cannot recover from a
+    checkpoint: a second start on the same checkpoint must raise rather
+    than resume with an empty sink, and it must not start a query."""
+    from pyspark.errors import AnalysisException
+
+    from pulsar_topic_deduplicator_spark.streaming.dedup import start_ttl_dedup
+
+    src = str(tmp_path / "restart_src")
+    ckpt = str(tmp_path / "ckpt_restart")
+    _write_batch(spark, src, BATCH1)
+    query, _name = start_ttl_dedup(spark, src, ckpt)
+    try:
+        query.processAllAvailable()
+    finally:
+        query.stop()
+    n_active = len(spark.streams.active)
+    with pytest.raises(AnalysisException, match="recovering from checkpoint"):
+        start_ttl_dedup(spark, src, ckpt)
+    assert len(spark.streams.active) == n_active
+
+
+def test_ttl_state_rows_are_the_fixed_key_groups(spark, sf_dir, tmp_path):
+    """The exact kernel keeps one state row per key group, and the group
+    count is TTL_KEY_GROUPS whatever the shuffle width: the events
+    table's digests fill every group at a 5-partition width."""
+    from pulsar_topic_deduplicator_spark.streaming.dedup import (
+        TTL_KEY_GROUPS,
+        start_ttl_dedup,
+    )
+
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "5")
+    try:
+        query, _name = start_ttl_dedup(
+            spark, sf_dir, str(tmp_path / "ckpt_groups"),
+            glob_filter="events.parquet",
+        )
+        try:
+            query.processAllAvailable()
+            rows_total = max(
+                p["stateOperators"][0]["numRowsTotal"]
+                for p in query.recentProgress
+                if p["stateOperators"]
+            )
+        finally:
+            query.stop()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert rows_total == TTL_KEY_GROUPS
 
 
 def test_stream_windowed_counts_match_batch(spark):
@@ -402,9 +427,7 @@ def test_watermark_ttl_bounded_matches_exact_kernel(spark, source_dir, tmp_path)
         run_ttl_dedup_watermark_bounded,
     )
 
-    exact = run_ttl_dedup_bounded(
-        spark, source_dir, str(tmp_path / "ck_exact"), use_tws=False
-    )
+    exact = run_ttl_dedup_bounded(spark, source_dir, str(tmp_path / "ck_exact"))
     wm = run_ttl_dedup_watermark_bounded(spark, source_dir)
     assert sorted(r["digest"] for r in wm.collect()) == sorted(
         r["digest"]
@@ -561,7 +584,7 @@ def test_watermark_ttl_warmup_seed(spark, tmp_path):
 
 
 def test_ttl_kernel_micros_roundtrip_event_ts(spark, source_dir, tmp_path):
-    """The exact-TTL kernels move event time across the Python boundary as
+    """The exact-TTL kernel moves event time across the Python boundary as
     epoch-micros longs (_TTL_KERNEL_SCHEMA); the output contract is
     unchanged: winner rows carry their source timestamp EXACTLY (strict
     monotone bijection + JVM-side timestamp_micros restore), and a
@@ -576,7 +599,7 @@ def test_ttl_kernel_micros_roundtrip_event_ts(spark, source_dir, tmp_path):
         spark, src, str(tmp_path / "ckpt_us"), ttl_ms=3_600_000
     )
     try:
-        _drain(spark, query, name)
+        query.processAllAvailable()
         rows = {r["message_id"]: r for r in spark.table(name).collect()}
         assert set(rows) == {"1", "2", "4"}
         # exact timestamp round trip (BATCH1 ts are epoch-ns; winners 1/2/4)
@@ -592,7 +615,7 @@ def test_ttl_kernel_micros_roundtrip_event_ts(spark, source_dir, tmp_path):
         deadline = time.time() + 60
         counters = []
         while time.time() < deadline and not counters:
-            _drain(spark, query, name)
+            query.processAllAvailable()
             counters = [
                 r for r in spark.table(name).collect() if r["message_id"] is None
             ]

@@ -100,9 +100,7 @@ def main() -> None:
     n_small = spark.read.parquet(f"{SF01}/events.parquet").count()
     ckpt = tempfile.mkdtemp("tp_gs_ckpt")
     t0 = time.perf_counter()
-    out = run_ttl_dedup_bounded(
-        spark, SF01, ckpt, glob_filter="events.parquet", use_tws=False
-    )
+    out = run_ttl_dedup_bounded(spark, SF01, ckpt, glob_filter="events.parquet")
     forwarded = out.count()
     wall = time.perf_counter() - t0
     print(
