@@ -458,7 +458,9 @@ def connected_components_lss(edges: DataFrame, max_rounds: int = 20) -> DataFram
     shrink the potential Σ depth, and at the fixpoint the edge set is a star
     forest rooted at component minima. Convergence is detected with an exact
     two-aggregate checksum (count + sum of pair-hashes) — one extra scalar
-    aggregate per round, no driver-side edge data."""
+    aggregate per round, no driver-side edge data. Raises ``RuntimeError``
+    when ``max_rounds`` rounds pass without the checksum repeating: the
+    labels would not be component minima yet."""
     E = (
         edges.filter(F.col("src") != F.col("dst"))
         .select(F.col("src").alias("a"), F.col("dst").alias("b"))
@@ -517,6 +519,11 @@ def connected_components_lss(edges: DataFrame, max_rounds: int = 20) -> DataFram
         if cur == prev:
             break
         prev = cur
+    else:
+        raise RuntimeError(
+            f"connected_components_lss: no fixpoint after {max_rounds} "
+            "rounds; the labels are not final"
+        )
 
     return (
         sym(E)

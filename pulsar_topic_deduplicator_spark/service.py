@@ -16,9 +16,8 @@ the engine's pieces:
    (``src/deduplication.ts:75-79``);
 3. TTL streaming dedup keyed on the config's ignored-properties
    projection (ops #4–#9) — DEFAULT kernel: the JVM-only watermark TTL
-   (``dedup_stream_ingest_ttl``; digest groups are near-singleton in dedup
-   traffic, so per-group Python is effectively per-row — see its
-   docstring); ``exact_processing_ttl=True`` opts into the exact
+   (``dedup_stream_ingest_ttl``; no Python worker in the dedup path — see
+   its docstring); ``exact_processing_ttl=True`` opts into the exact
    processing-clock kernel (``start_ttl_dedup``);
 4. health / counters / graceful stop (ops #13–#15) surfaced as methods.
 
@@ -273,12 +272,11 @@ def start_dedup_service(
 
     Kernel selection: the DEFAULT is the JVM-only watermark TTL kernel
     (``dedup_stream_ingest_ttl``) — all dedup state lives in the JVM state
-    store, no per-group Python. Dedup keys are crypto digests, so in real
-    traffic group count ≈ row count and the GroupState kernel's per-group
-    Python round-trip is effectively per-row (~3× slower measured at
-    sf0.1); the watermark kernel's only deviation is that state EVICTION
-    (re-admission after TTL expiry) lags by the watermark advance — late
-    eviction, never early re-admission, the same direction the reference's
+    store, no Python worker (its docstring gives the measured cost of the
+    exact kernel's Python round-trip); the watermark kernel's only
+    deviation is that state EVICTION (re-admission after TTL expiry) lags
+    by the watermark advance — late eviction, never early re-admission,
+    the same direction the reference's
     ``oblivious-set`` dependency errs (lazy purge; ``package.json:51``,
     behavior pinned in ``src/deduplication.test.ts:249-275``). Its query
     runs one micro-batch per arrival (no eviction-only batches), so
@@ -619,8 +617,8 @@ def run_gated_service_watermark_bounded(
     """Bounded run of the DQ-gated service composed over the JVM-only
     watermark TTL kernel (``dedup_stream_ingest_ttl``) — the deployment
     shape for services that accept ingest-clock TTL semantics and want the
-    per-group Python cost of the exact GroupState kernel gone (measured
-    ~3× cheaper on the same data, see BASELINE.md).
+    Python-worker cost of the exact GroupState kernel gone (measured in
+    ``dedup_stream_ingest_ttl``'s docstring).
 
     Same gate → dedup order as ``run_gated_service_bounded``: dirty rows
     divert to quarantine (started async FIRST so the stateless pass

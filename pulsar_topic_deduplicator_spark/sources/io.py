@@ -13,6 +13,8 @@ pushes filters/projections into it (tests assert ``PushedFilters`` /
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -59,6 +61,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+# a plan-tree line whose node is any exchange (shuffle, broadcast, reused);
+# the prefix covers tree art and whole-stage-codegen ids like ``*(2)``
+_EXCHANGE_NODE = re.compile(r"^[\s:|+\-*()\d]*\w*Exchange\b", re.M)
+
+
 def spread_narrow_scan(df: DataFrame, *keys: str) -> DataFrame:
     """Repartition a scan-shaped frame to session parallelism BEFORE a
     per-row Arrow kernel — but only when the scan yields fewer partitions
@@ -78,7 +85,17 @@ def spread_narrow_scan(df: DataFrame, *keys: str) -> DataFrame:
     one spreading exchange, which costs less than leaving all but one
     core idle. Deterministic hash partitioning on ``keys`` (never
     round-robin: §2.5 retry-reproducibility).
+
+    Scan-shaped only: the partition-count probe (``df.rdd``) runs every
+    upstream query stage eagerly under AQE, so a frame whose physical plan
+    holds an exchange raises ``ValueError`` before anything executes.
     """
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    if _EXCHANGE_NODE.search(plan):
+        raise ValueError(
+            "spread_narrow_scan takes a scan-shaped frame; this plan has an "
+            f"exchange:\n{plan}"
+        )
     spark = df.sparkSession
     n = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < n:

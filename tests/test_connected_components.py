@@ -4,6 +4,7 @@ adversarial chain graphs."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from pulsar_topic_deduplicator_spark.operators.neardup import (
@@ -51,6 +52,15 @@ def test_lss_handles_reversed_and_duplicate_edges(spark):
         r["id"]: r["label"] for r in connected_components_lss(edges).collect()
     }
     assert labels == {1: 1, 2: 1, 3: 1, 5: 1}
+
+
+def test_lss_round_cap_raises(spark):
+    """A path needs several rounds to reach its star; one round ends with
+    unconverged labels, which must raise instead of returning them."""
+    path = [(i, i + 1) for i in range(16)]
+    edges = spark.createDataFrame(path, "src long, dst long")
+    with pytest.raises(RuntimeError, match="no fixpoint after 1 rounds"):
+        connected_components_lss(edges, max_rounds=1)
 
 
 def test_triangle_census_counts_dense_families_only(

@@ -4,6 +4,8 @@ prune / stay JVM-side / minimize shuffles')."""
 
 from __future__ import annotations
 
+import pytest
+
 from pulsar_topic_deduplicator_spark.operators import dedup, relational, textops
 from pulsar_topic_deduplicator_spark.plans import (
     count_exchanges,
@@ -12,6 +14,7 @@ from pulsar_topic_deduplicator_spark.plans import (
     pushed_filters,
     read_schema_columns,
 )
+from pulsar_topic_deduplicator_spark.sources.io import load_table, spread_narrow_scan
 
 
 def test_q1_filter_pushed_to_scan(spark, sf_dir):
@@ -230,6 +233,16 @@ def test_winnow_zero_shuffle(spark, sf_dir):
     if count_exchanges(df) == 1:
         # the exchange feeds the kernel, not the other way around
         assert plan.index("Exchange") > plan.index("MapInPandas"), plan[:2000]
+
+
+def test_spread_narrow_scan_rejects_shuffled_frame(spark, sf_dir):
+    """The partition probe would run a shuffled frame's upstream stages
+    eagerly, so only scan-shaped frames are accepted."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    spread = spread_narrow_scan(docs, "doc_id")
+    assert spread.columns == ["doc_id", "text"]
+    with pytest.raises(ValueError, match="exchange"):
+        spread_narrow_scan(docs.groupBy("doc_id").count(), "doc_id")
 
 
 def test_sessionize_single_shuffle(spark, sf_dir):
