@@ -71,17 +71,32 @@ def warmup_seed_digests(
 def build_seed_set(
     prior_output: DataFrame | None, config: EngineConfig, now_ts
 ) -> DataFrame | None:
-    """The warm-up, done once: ``warmup_seed_digests`` persisted and
-    materialized by one eager ``count``, retried with the reference's
+    """The warm-up, done once: ``warmup_seed_digests`` hash-partitioned by
+    ``digest`` into ``spark.sql.shuffle.partitions`` partitions, persisted
+    and materialized by one eager ``count``, retried with the reference's
     backoff (``sources/retry.py``). Every micro-batch then reads the cached
     blocks instead of re-scanning the prior output, re-parsing ``origin``
     and re-running ``distinct``; ``persist`` keeps the lineage, so a lost
     block is recomputed instead of failing the query. The caller owns the
     frame and unpersists it. None when warm-up is off (no prior output, or
-    a disabled cache window)."""
+    a disabled cache window).
+
+    The partitioning is the state's: a fresh checkpoint's state store has
+    ``spark.sql.shuffle.partitions`` partitions, so the watermark kernel's
+    anti-join (``dedup_stream_ingest_ttl``) reads seed partition ``i`` in
+    state task ``i`` and adds no exchange. A query resumed on a checkpoint
+    made at another width keeps that width; Spark then adds a second
+    exchange, which costs speed but not correctness — every seeded digest
+    is still suppressed (tests/test_service.py)."""
     if not config.warmup_enabled or prior_output is None:
         return None
-    seeds = warmup_seed_digests(prior_output, config, now_ts).persist()
+    # an explicit count: AQE may coalesce a by-column-only repartition
+    width = prior_output.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    seeds = (
+        warmup_seed_digests(prior_output, config, now_ts)
+        .repartition(int(width), "digest")
+        .persist()
+    )
     try:
         with_warmup_retries(seeds.count)
     except BaseException:
@@ -265,10 +280,13 @@ def start_dedup_service(
 
     Seed-set lifecycle: the warm-up runs ONCE, here, before the live query
     starts (``build_seed_set``: scan, ``origin`` validation, ``distinct``,
-    persisted and materialized under the warm-up retry policy). Both
-    kernels receive that materialized frame, so the live query never reads
-    ``prior_output`` again. The returned ``DedupService`` owns the frame;
-    ``stop()`` unpersists it.
+    cached hash-partitioned by digest and materialized under the warm-up
+    retry policy). Both kernels receive that materialized frame, so the
+    live query never reads ``prior_output`` again. The default kernel
+    anti-joins each micro-batch against it inside the state stage, each
+    task reading its own cached partition (one job per micro-batch); the
+    exact kernel writes it once as seed messages. The returned
+    ``DedupService`` owns the frame; ``stop()`` unpersists it.
 
     Kernel selection: the DEFAULT is the JVM-only watermark TTL kernel
     (``dedup_stream_ingest_ttl``) — all dedup state lives in the JVM state

@@ -589,11 +589,17 @@ def dedup_stream_ingest_ttl(
     LEFT ANTI join suppresses live occurrences of every seeded digest with
     NO ordering caveat — the reference's "warm-up completes strictly
     before live consumption" happens-before edge
-    (``src/deduplication.ts:75-79``). The static side is planned into
-    EVERY micro-batch, so pass a materialized frame (the service's
-    ``build_seed_set`` persists it once at start): a lazy one re-scans its
-    source, re-runs its ``distinct`` and re-broadcasts the result on each
-    batch, and only a materialized one is fixed at query start. Semantic
+    (``src/deduplication.ts:75-79``). The join is a shuffled hash join
+    placed after the watermark, so it runs in the stateful operator's
+    stage: pass the seed set cached hash-partitioned by ``digest`` at the
+    state width (the service's ``build_seed_set``) and the live rows'
+    exchange is the one the state needs, each state task builds its hash
+    table from its own cached seed partition, and a micro-batch is one
+    job with one exchange; nothing is collected to the driver or
+    broadcast. A lazy or differently partitioned frame still gives the
+    same output, but every batch re-runs its plan or shuffles it. Since
+    the watermark precedes the join, seeded replays advance it like any
+    other row; with the ingest clock that is only time passing. Semantic
     deviation vs the exact kernel's seed-message replay: anti-joined seeds
     never expire mid-run (the exact kernel TTLs them out like any state
     row). That errs toward suppression — the same direction as the
@@ -601,9 +607,8 @@ def dedup_stream_ingest_ttl(
 
     100 TB: all state lives in the JVM state store keyed by the crypto
     digest (uniform, no skew); the seed set is bounded by the cache window
-    and always broadcast — ``F.broadcast`` forces the broadcast hash join
-    whatever the seed set's size, and stateful streaming queries run
-    without AQE, so no batch adapts the join to that size. This is the
+    and stays partitioned beside the state, so neither the driver nor any
+    executor holds all of it. This is the
     DEFAULT kernel because it keeps dedup in the JVM: the exact GroupState
     kernel ships every row through a Python worker over Arrow, and on the
     same ``replica_fanout`` traffic ``perfbench/run.py`` measures it at
@@ -614,16 +619,18 @@ def dedup_stream_ingest_ttl(
     ingest = (
         F.col(ingest_ts_col) if ingest_ts_col else F.current_timestamp()
     )
-    keyed = messages.withColumn("digest", message_digest(ignored))
+    keyed = (
+        messages.withColumn("digest", message_digest(ignored))
+        .withColumn("ingest_ts", ingest)
+        .withWatermark("ingest_ts", f"{int(ttl_ms)} milliseconds")
+    )
     if exclude_digests is not None:
         keyed = keyed.join(
-            F.broadcast(exclude_digests.select("digest")), "digest", "left_anti"
+            exclude_digests.select("digest").hint("shuffle_hash"),
+            "digest",
+            "left_anti",
         )
-    return (
-        keyed.withColumn("ingest_ts", ingest)
-        .withWatermark("ingest_ts", f"{int(ttl_ms)} milliseconds")
-        .dropDuplicatesWithinWatermark(["digest"])
-    )
+    return keyed.dropDuplicatesWithinWatermark(["digest"])
 
 
 def run_ttl_dedup_watermark_bounded(

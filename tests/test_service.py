@@ -371,3 +371,143 @@ def test_service_one_batch_per_arrival_and_expiry(spark, tmp_path):
         assert got - {"5", "6"} == {"1", "2", "4"}
     finally:
         svc.stop()
+
+
+def _prior_output(spark, base, contents):
+    """The service's prior output in its own output shape (``publish_ts``,
+    ``event_ts``, ``origin``), one row per content tuple."""
+    from pulsar_topic_deduplicator_spark.sources.io import messages_view
+    from pulsar_topic_deduplicator_spark.streaming.dedup import message_digest
+
+    _write_events(
+        spark,
+        f"{base}/events.parquet",
+        [(900 + i, BASE_TS, *c) for i, c in enumerate(contents)],
+    )
+    return (
+        messages_view(spark, base)
+        .withColumn("digest", message_digest())
+        .select(
+            "publish_ts", "event_ts", F.to_json(F.array("digest")).alias("origin")
+        )
+    )
+
+
+def _plan_nodes(jvm, node) -> list:
+    """Every node of an executed plan, depth first. ``InMemoryTableScan``
+    is a leaf here: the cached relation's own (already run) plan hangs off
+    it as an inner child and is not part of the per-batch plan."""
+    children = jvm.scala.jdk.javaapi.CollectionConverters.asJava(node.children())
+    return [node] + [n for c in children for n in _plan_nodes(jvm, c)]
+
+
+def test_seeded_service_one_exchange_and_one_job_per_arrival(spark, tmp_path):
+    """The warm-up seed set is cached hash-partitioned by ``digest`` at the
+    state width, so the warm-up anti-join shares the stateful operator's
+    exchange: the executed plan holds exactly one ``Exchange`` and no
+    broadcast, the join builds its hash table from the cached partitions
+    directly, and every arrival runs exactly one Spark job."""
+    import os
+
+    jvm = spark.sparkContext._jvm
+    seeded = [(3, "purchase", 3.0, f'{{"k": "s{i}"}}') for i in range(20)]
+    prior = _prior_output(spark, str(tmp_path / "prior"), seeded)
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    svc = start_dedup_service(
+        spark,
+        EngineConfig.from_env({"CACHE_WINDOW_IN_SECONDS": "172800"}),
+        src,
+        str(tmp_path / "ckpt"),
+        prior_output=prior,
+        now_ts="2024-01-01 01:00:00",
+    )
+    q = svc.query
+    store = spark.sparkContext._jsc.sc().statusStore()
+
+    def n_jobs():
+        group = str(q.runId)
+        jobs = jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+            store.jobsList(None)
+        )
+        return sum(
+            1
+            for j in jobs
+            if j.jobGroup().isDefined() and j.jobGroup().get() == group
+        )
+
+    try:
+        for i in range(3):
+            before = n_jobs()
+            _land(
+                spark,
+                src,
+                [
+                    (10 * i + 1, BASE_TS, *seeded[i]),  # seeded re-delivery
+                    (10 * i + 2, BASE_TS, 5, "view", 5.0, f'{{"k": "n{i}"}}'),
+                ],
+            )
+            q.processAllAvailable()
+            assert n_jobs() - before == 1, f"arrival {i}"
+        assert {r["message_id"] for r in svc.output().collect()} == {
+            "2", "12", "22"
+        }
+
+        nodes = _plan_nodes(jvm, q._jsq.streamingQuery().lastExecution().executedPlan())
+        names = [n.nodeName() for n in nodes]
+        assert names.count("Exchange") == 1, names
+        assert "BroadcastExchange" not in names
+        assert "BroadcastHashJoin" not in names
+        (join,) = [n for n in nodes if n.nodeName() == "ShuffledHashJoin"]
+        assert "LeftAnti, BuildRight" in join.simpleString(100)
+        build = _plan_nodes(jvm, join.right())
+        build_names = [n.nodeName() for n in build]
+        assert "InMemoryTableScan" in build_names, build_names
+        assert "Exchange" not in build_names, build_names
+    finally:
+        svc.stop()
+
+
+def test_seed_set_width_mismatch_still_suppresses(spark, tmp_path):
+    """A query resumed on a checkpoint keeps the shuffle width it was
+    created with, so the seed set, cached at the session's current width,
+    can be partitioned differently from the state. The anti-join then
+    runs at the session width and Spark adds a second exchange to the
+    state width: slower, but every seeded digest must still be suppressed
+    and every fresh one forwarded."""
+    import os
+
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    config = EngineConfig.from_env({"CACHE_WINDOW_IN_SECONDS": "172800"})
+    src = str(tmp_path / "src")
+    ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
+    seeded = [(3, "purchase", 3.0, f'{{"k": "s{i}"}}') for i in range(30)]
+    try:
+        spark.conf.set(key, "2")
+        _write_events(spark, src, [(1, BASE_TS, 1, "click", 1.0, '{"k": "0"}')])
+        run_dedup_service_bounded(spark, config, src, ckpt, output_dir=out)
+
+        spark.conf.set(key, "5")
+        prior = _prior_output(spark, str(tmp_path / "prior"), seeded)
+        fresh = [(5, "view", 5.0, f'{{"k": "n{i}"}}') for i in range(10)]
+        _write_events(
+            spark,
+            src,
+            [(100 + i, BASE_TS, *c) for i, c in enumerate(seeded + fresh)],
+        )
+        got = run_dedup_service_bounded(
+            spark,
+            config,
+            src,
+            ckpt,
+            prior_output=prior,
+            now_ts="2024-01-01 01:00:00",
+            output_dir=out,
+        )
+        ids = {r["message_id"] for r in got.collect()}
+    finally:
+        spark.conf.set(key, old)
+    # the resumed state kept its 2 partitions while the seeds were cached at 5
+    assert sorted(os.listdir(f"{ckpt}/state/0")) == ["0", "1", "_metadata"]
+    assert ids == {"1"} | {str(130 + i) for i in range(10)}

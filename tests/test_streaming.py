@@ -626,3 +626,80 @@ def test_ttl_kernel_micros_roundtrip_event_ts(spark, source_dir, tmp_path):
         assert counters[0]["n_dropped"] == 1
     finally:
         query.stop()
+
+
+def test_watermark_ttl_seeded_only_batch_advances_watermark(spark, tmp_path):
+    """The warm-up anti-join sits after the watermark, so a batch made only
+    of seeded replays feeds the watermark although it forwards nothing. On
+    an injected ingest clock (``ingest_ts_col``), TTL 60 s: message 1 at
+    0 s; a batch of seeded replays only at 50 s; then at 55 s a replay of
+    1 (inside its TTL), another seeded replay and new content. The seeded
+    batch forwards no seeded digest, moves the watermark to 50 − 60 s, and
+    1's replay is still suppressed."""
+    from pulsar_topic_deduplicator_spark.config import EngineConfig
+    from pulsar_topic_deduplicator_spark.service import build_seed_set
+    from pulsar_topic_deduplicator_spark.sources.io import messages_view
+    from pulsar_topic_deduplicator_spark.streaming.dedup import (
+        dedup_stream_ingest_ttl,
+        message_digest,
+    )
+    from pulsar_topic_deduplicator_spark.streaming.source import (
+        events_message_stream,
+    )
+
+    seeded = (9, "purchase", 9.0, '{"k": 9}')
+    base = str(tmp_path / "prior")
+    _write_batch(spark, f"{base}/events.parquet", [(90, BASE_TS, *seeded)])
+    prior = messages_view(spark, base).select(
+        "publish_ts",
+        "event_ts",
+        F.to_json(F.array(message_digest())).alias("origin"),
+    )
+    seeds = build_seed_set(
+        prior,
+        EngineConfig.from_env({"CACHE_WINDOW_IN_SECONDS": "172800"}),
+        "2024-01-01 01:00:00",
+    )
+    src = str(tmp_path / "src")
+    _write_batch(spark, src, BATCH1[:1])  # message 1 at 0 s
+    name = "wm_seeded_only_sink"
+    query = (
+        dedup_stream_ingest_ttl(
+            events_message_stream(spark, src),
+            ttl_ms=60_000,
+            ingest_ts_col="event_ts",
+            exclude_digests=seeds,
+        )
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .start()
+    )
+    try:
+        query.processAllAvailable()
+        _write_batch(
+            spark,
+            src,
+            [(91, BASE_TS + 50 * NS, *seeded), (92, BASE_TS + 50 * NS, *seeded)],
+        )
+        query.processAllAvailable()
+        assert {r["message_id"] for r in spark.table(name).collect()} == {"1"}
+        _write_batch(
+            spark,
+            src,
+            [
+                (93, BASE_TS + 55 * NS, 1, "click", 1.0, '{"k": 1}'),  # dup of 1
+                (94, BASE_TS + 55 * NS, *seeded),
+                (95, BASE_TS + 55 * NS, 5, "view", 5.0, '{"k": 5}'),
+            ],
+        )
+        query.processAllAvailable()
+        assert {r["message_id"] for r in spark.table(name).collect()} == {"1", "95"}
+        data = [p for p in query.recentProgress if p["numInputRows"] > 0]
+        assert len(data) == 3
+        assert data[1]["eventTime"].get("max") == "2024-01-01T00:00:50.000Z"
+        assert data[2]["eventTime"]["watermark"] == "2023-12-31T23:59:50.000Z"
+    finally:
+        query.stop()
+        seeds.unpersist()
