@@ -32,6 +32,7 @@ row (VERDICT r11 items 1+2).
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -78,7 +79,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def _stream_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming dedup (watermark + dropDuplicatesWithinWatermark)
-    over the sf events, bounded with availableNow — reference op #7 live path.
+    over the sf events, drained and stopped — reference op #7 live path.
 
     The harness boundary projects the DETERMINISTIC columns only: which
     digests survive (all distinct ones, single-batch run) and their
@@ -105,49 +106,92 @@ def _stream_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stream_dedup_ttl_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-TTL stateful dedup — reference ops #7+#11 with the ObliviousSet
-    processing-time TTL clock, on the one exact kernel: the GroupState
-    kernel over ``TTL_KEY_GROUPS`` fixed digest buckets
-    (``streaming.dedup.start_ttl_dedup``). A single-batch bounded run, so
-    ``BOUNDED_TTL_ORACLE`` value-checks its deterministic winner per
-    digest."""
+def _stream_dedup_ttl_query(
+    spark: SparkSession, sf_dir: str, exact_processing_ttl: bool = True
+) -> DataFrame:
+    """The service's bounded run (``run_dedup_service_bounded``) over the sf
+    events with ``EngineConfig()`` defaults (TTL 3 600 000 ms, no ignored
+    properties, no prior output), one single-batch run per kernel:
+
+    * ``stream_dedup_ttl`` — the exact kernel (reference ops #7+#11 with
+      the ObliviousSet processing-time TTL clock, GroupState over
+      ``TTL_KEY_GROUPS`` fixed digest buckets); ``BOUNDED_TTL_ORACLE``
+      value-checks its deterministic winner per digest and ``n_dropped``;
+    * ``stream_dedup_ttl_watermark`` (``exact_processing_ttl=False``) — the
+      default JVM-only ingest-clock kernel; which duplicate ROW survives is
+      engine-arbitrary, so the boundary keeps (digest, topic), one row per
+      distinct digest (``BOUNDED_WM_TTL_ORACLE``). Expiry/re-admission
+      semantics are cross-pinned against the exact kernel in
+      tests/test_streaming.py."""
     import tempfile
 
-    from pulsar_topic_deduplicator_spark.streaming.dedup import (
-        run_ttl_dedup_bounded,
-    )
+    from pulsar_topic_deduplicator_spark.config import EngineConfig
+    from pulsar_topic_deduplicator_spark.service import run_dedup_service_bounded
 
-    return run_ttl_dedup_bounded(
+    out = run_dedup_service_bounded(
         spark,
+        EngineConfig(),
         sf_dir,
         tempfile.mkdtemp("ttl_ckpt"),
         glob_filter="events.parquet",
+        exact_processing_ttl=exact_processing_ttl,
+    )
+    return out if exact_processing_ttl else out.select("digest", "topic")
+
+
+def _service_counters_query(
+    spark: SparkSession, sf_dir: str, exact_processing_ttl: bool = True
+) -> DataFrame:
+    """DQ-gated service counters (forwarded / dropped_duplicates /
+    quarantined) — reference op #13 telemetry (``src/deduplication.ts:
+    80-95``) over the gate→dedup composition extended with the quarantine
+    lane: ``start_dedup_service(dq_gate=True)`` drained and stopped, one
+    long-form (metric, value) frame. ``service_counters_composed`` runs the
+    exact kernel, ``service_counters_watermark``
+    (``exact_processing_ttl=False``) the default JVM watermark kernel.
+
+    One formula on both kernels: dropped = the gate's observed clean-ingest
+    count ``n_clean`` − forwarded, so forwarded + dropped + quarantined ==
+    input rows by construction (the pytest twin asserts it on an
+    injected-dirty corpus). Both names share one exact SQL oracle that
+    replays the gate + dedup arithmetic: both kernels forward exactly one
+    row per distinct clean digest on a bounded single-batch run. The
+    scalar collects are counts — no row-level driver traffic."""
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    from pulsar_topic_deduplicator_spark.config import EngineConfig
+    from pulsar_topic_deduplicator_spark.service import start_dedup_service
+    from pulsar_topic_deduplicator_spark.streaming.source import (
+        bounded_shuffle_width,
     )
 
-
-def _stream_dedup_ttl_watermark_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JVM-only ingest-clock TTL dedup: watermark on an
-    ingest timestamp + dropDuplicatesWithinWatermark — no per-group Python.
-    Exact oracle: a single-batch bounded run emits one row per distinct
-    digest (see BOUNDED_WM_TTL_ORACLE); expiry/re-admission semantics are
-    cross-pinned against the GroupState kernel in tests/test_streaming.py."""
-    from pulsar_topic_deduplicator_spark.streaming.dedup import (
-        run_ttl_dedup_watermark_bounded,
+    with bounded_shuffle_width(spark):
+        svc = start_dedup_service(
+            spark,
+            EngineConfig(),
+            sf_dir,
+            tempfile.mkdtemp("svc_ckpt"),
+            glob_filter="events.parquet",
+            exact_processing_ttl=exact_processing_ttl,
+            dq_gate=True,
+        )
+        try:
+            svc.query.processAllAvailable()
+            svc.quarantine_query.processAllAvailable()
+            counters = svc.counters()
+        finally:
+            svc.stop()
+    forwarded = svc.output().filter(F.col("message_id").isNotNull()).count()
+    return spark.createDataFrame(
+        [
+            ("forwarded", forwarded),
+            ("dropped_duplicates", int(counters.get("n_clean", 0)) - forwarded),
+            ("quarantined", int(counters["n_quarantined"])),
+        ],
+        "metric string, value long",
     )
-
-    return run_ttl_dedup_watermark_bounded(
-        spark, sf_dir, glob_filter="events.parquet"
-    )
-
-
-def _service_counters_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed DQ-gated service counters (forwarded / dropped_duplicates /
-    quarantined) — reference op #13 telemetry over the full warm-up→gate→
-    dedup composition; exact SQL oracle replays gate + dedup arithmetic."""
-    from pulsar_topic_deduplicator_spark.service import service_counters_composed
-
-    return service_counters_composed(spark, sf_dir)
 
 
 def _stream_span_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -160,15 +204,6 @@ def _stream_span_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return run_stream_span_dedup_bounded(spark, sf_dir)
-
-
-def _service_counters_watermark_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gate→dedup telemetry with the dedup stage on the JVM-only watermark
-    TTL kernel (no per-group Python) — same reconciliation invariant and
-    the same exact oracle as ``service_counters_composed``."""
-    from pulsar_topic_deduplicator_spark.service import service_counters_watermark
-
-    return service_counters_watermark(spark, sf_dir)
 
 
 def _knn_blockwise_rounded(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -434,133 +469,38 @@ def _stream_quota_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def queries() -> dict[str, QueryFn]:
-    # Dict ORDER matters: the verify driver checks the first ~50 entries per
-    # round. Round 14 executes VERDICT r13 item 1 (pure staleness
-    # rotation — coverage is saturated, every entry already has driver
-    # artifact evidence): the window is the complete last-green-r8 tier
-    # (28 entries), stream_near_dup (its r13 FULL value oracle has never
-    # landed in a driver artifact), and the 21 stalest r9 entries. After
-    # this round the oldest evidence anywhere is r9 — delivering the
-    # "no entry older than 4 rounds" promise from r12. The r9-remainder/
-    # r10/r11/r12/r13 tiers follow in staleness order (r13-checked last,
-    # freshest, including the raw+twin pairs).
+    # Dict ORDER matters: the verify driver value-checks the first 50
+    # entries per round (CORRECTNESS_rNN.json holds each round's sample).
+    # The window leads with the entries whose code changed since their
+    # last check, then fills up with the stalest evidence; the rest
+    # follows in staleness order, so the next rotation takes its head.
     return {
-        # ── round-14 driver window (VERDICT r13 item 1): the complete
-        # last-green-r8 tier (28 entries: 23 named + the 5-entry sql_*
-        # surface), then stream_near_dup (its r13 FULL value oracle has
-        # never appeared in a driver artifact — the stalest evidence of
-        # all), then the 21 stalest r9 entries in CORRECTNESS_r09 checked
-        # order. 28 + 1 + 21 = 50; after this round the staleness floor
-        # rises to r9 (no oracle-bearing entry older than 4 rounds). The
-        # one r9 entry the judge’s "22 stalest r9" phrasing would have
-        # included (pack_sequences) is displaced by stream_near_dup and
-        # leads the r9 remainder below.
-        "mg_heavy_hitters_contracts": heavyhitters.mg_heavy_hitters_contracts,
-        "mg_revenue_by_priority": heavyhitters.mg_revenue_by_priority,
-        "mg_revenue_contracts": heavyhitters.mg_revenue_contracts,
-        "duplicate_substring_spans": textops.duplicate_substring_spans,
-        "dedup_spans_within_doc": textops.dedup_spans_within_doc,
-        "kmv_audience_overlap": dedup.kmv_audience_overlap,
-        "decontaminate_fuzzy": neardup.decontaminate_fuzzy,
-        "vocab_coverage": textops.vocab_coverage,
-        "bpe_pair_counts": textops.bpe_pair_counts,
-        "doc_novelty_scores": textops.doc_novelty_scores,
-        "sax_fingerprints": analytics.sax_fingerprints,
-        "sax_word_counts": analytics.sax_word_counts,
-        "sq8_codes": similarity.sq8_codes,
-        "sq8_reconstruction_error": similarity.sq8_reconstruction_error,
-        "hourly_anomaly_flags": analytics.hourly_anomaly_flags,
-        "event_transitions": analytics.event_transitions,
-        "stream_drift_flags": _stream_drift_flags_query,
-        "nb_classifier_scores": classify.nb_classifier_scores,
-        "lp_communities": graph.lp_communities,
-        "cf_similar_suppliers": recommend.cf_similar_suppliers,
-        "ppr_related_suppliers": graph.ppr_related_suppliers,
-        "bit_funcs_demo": scalarfuncs.bit_funcs_demo,
-        "conditional_agg_demo": relational.conditional_agg_demo,
-        # SQL surface (same SQL text runs on Spark AND DuckDB) — 5 entries
-        **sqlapi.QUERIES,
-        # stream_near_dup: raw near-dup stream with the r13 FULL value
-        # oracle (single-micro-batch guarantee asserted in the runner)
-        "stream_near_dup": _stream_near_dup_query,  # FULL oracle since r13
-        # 21 stalest r9 entries, CORRECTNESS_r09 checked order
-        "bpe_merge_steps": textops.bpe_merge_steps,
-        "bpe_encode_token_counts": textops.bpe_encode_token_counts,
-        "dedup_docs_by_url": curation.dedup_docs_by_url,
-        "domain_attrition_report": curation.domain_attrition_report,
-        "service_counters_watermark": _service_counters_watermark_query,
-        "dedup_counters": dedup.dedup_counters,
-        "distinct_digests": dedup.distinct_digests,
-        "origin_lineage": lineage.origin_lineage,
-        "q1_pricing_summary": relational.q1_pricing_summary,
-        "q3_shipping_priority": relational.q3_shipping_priority,
-        "q5_local_supplier_volume": relational.q5_local_supplier_volume,
-        "semi_join_customers_with_orders": relational.semi_join_customers_with_orders,
-        "anti_join_customers_no_urgent": relational.anti_join_customers_no_urgent,
-        "top_orders_per_customer": relational.top_orders_per_customer,
-        "doc_repetition_stats": textops.doc_repetition_stats,
-        "gopher_quality_flags": textops.gopher_quality_flags,
-        "dedup_docs_by_prefix": textops.dedup_docs_by_prefix,
-        "corpus_curation_report": pipeline.corpus_curation_report,
-        "centroid_outlier_flags": similarity.centroid_outlier_flags,
-        "stream_quality_gate": _stream_quality_gate_query,
-        "decontaminate_overlap": curation.decontaminate_overlap,
-        # ── end of the 50-entry checked window. r9-checked remainder
-        # follows (stalest first), then r10/r11/r12/r13 tiers in checked
-        # order (freshest last), raws beside or after their twins. ──────
-        "stream_dedup_spans": _stream_span_dedup_query,
-        "q8_market_share": relational.q8_market_share,
-        "q9_product_profit": relational.q9_product_profit,
-        "q11_important_value": relational.q11_important_value,
-        "q2_min_cost_supplier": relational.q2_min_cost_supplier,
-        "q12_late_shipment_priority": relational.q12_late_shipment_priority,
-        "q15_top_supplier": relational.q15_top_supplier,
-        "q16_supplier_part_counts": relational.q16_supplier_part_counts,
-        "q20_heavy_shippers": relational.q20_heavy_shippers,
-        "q21_sole_late_supplier": relational.q21_sole_late_supplier,
-        "corpus_clean_pipeline": pipeline.corpus_clean_pipeline,
-        "embedding_topk_cosine": similarity.embedding_topk_cosine,
-        "knn_self_join_top1": similarity.knn_self_join_top1,
-        "embedding_near_dup_pairs": similarity.embedding_near_dup_pairs,
-        "near_dup_clusters": neardup.near_dup_clusters,
-        "simhash_docs": neardup.simhash_docs,
-        "simhash_near_dup_pairs": neardup.simhash_near_dup_pairs,
-        "winnow_fingerprints": textops.winnow_fingerprints,
-        "substring_overlap_pairs": textops.substring_overlap_pairs,
-        "near_dup_clusters_lss": neardup.near_dup_clusters_lss,  # O(log n) CC
-        "embedding_near_dup_clusters": similarity.embedding_near_dup_clusters,
-        "hash_sample_events": sampling.hash_sample_events,
-        "train_val_test_split": sampling.train_val_test_split,
-        "source_mixture_sample": sampling.source_mixture_sample,
-        "stream_warmup_flagged": _stream_warmup_flagged_query,  # exact oracle (plain append)
-        "sessionize_events": relational.sessionize_events,
-        "range_frame_event_counts": relational.range_frame_event_counts,
+        # ── driver window: the first 50 entries, every one oracle-bearing.
+        # First the 13 entries whose code changed since their last driver
+        # check: the dedup dataflow's bounded runs (stream_dedup,
+        # stream_dedup_spans), the service's bounded runs on both kernels
+        # (stream_dedup_ttl, stream_dedup_ttl_watermark) and its gated
+        # counters (service_counters_composed, service_counters_watermark),
+        # then the seven r15-touched entries none of CORRECTNESS_r15's
+        # sample checked. The other 37 are the stalest: the 26 last
+        # checked in r9, then the first 11 r10 entries in r10 order.
         "stream_dedup": _stream_dedup_query,  # deterministic projection (oracle-hashed)
-        "stream_windowed_counts": _stream_windowed_counts_query,  # exact oracle (watermark cutoff)
-        "stream_session_activity": _stream_session_activity_query,  # exact oracle (watermark cutoff)
         "stream_dedup_ttl": _stream_dedup_ttl_query,  # exact oracle (single-batch bounded run)
-        "multimodal_features": multimodal.multimodal_features_long,  # long-form boundary
-        "multimodal_decode": multimodal.multimodal_decode_long,  # long-form boundary
-        "multimodal_resize": multimodal.multimodal_resize_long,  # long-form boundary
-        "multimodal_frame_sample": multimodal.multimodal_frame_sample,  # integer-exact oracle
-        "multimodal_meta": multimodal.multimodal_meta,
-        "multimodal_decode_ppm": multimodal.multimodal_decode_ppm,  # real P6 codec
-        "multimodal_wav_energy": multimodal.multimodal_wav_energy,  # real RIFF codec
-        "bloom_digest_prefilter": dedup.bloom_digest_prefilter,  # contract oracle
-        "ann_recall_contracts": similarity.ann_recall_contracts,  # contract oracle (+ivf_indexed r5)
-        "knn_topk_blockwise": _knn_blockwise_rounded,  # 6-dp boundary (oracle-hashed)
-        "knn_topk_tiled": _knn_tiled_rounded,  # 6-dp boundary (oracle-hashed)
-        "label_centroids": similarity.label_centroids,  # long-form, rounded 9dp (oracle-hashed)
-        # (label_centroid_vectors is deliberately NOT registered: its
-        # array<double> centroid column is not canonicalizable by the driver
-        # harness — it is the consumer-API twin, pytest-pinned against numpy)
-        "array_funcs_demo": scalarfuncs.array_funcs_demo,
-        "map_funcs_demo": scalarfuncs.map_funcs_demo,
-        "dedup_substrings_global": textops.dedup_substrings_global,
-        "dsir_select": curation.dsir_select,
-        "dsir_resample": curation.dsir_resample,
-        "cusum_drift_flags": changepoint.cusum_drift_flags,
-        "asof_last_purchase": asof.asof_last_purchase,
+        "stream_dedup_ttl_watermark": partial(
+            _stream_dedup_ttl_query, exact_processing_ttl=False
+        ),
+        "service_counters_composed": _service_counters_query,
+        "service_counters_watermark": partial(
+            _service_counters_query, exact_processing_ttl=False
+        ),
+        "stream_dedup_spans": _stream_span_dedup_query,
+        "profile_orders": lineage.profile_orders,
+        "supplier_affinity": recommend.supplier_affinity,
+        "snapshot_merkle_diff": cdc.snapshot_merkle_diff,
+        "entity_golden_records": entity.entity_golden_records,
+        "near_dup_clusters_lss": neardup.near_dup_clusters_lss,  # O(log n) CC
+        "winnow_fingerprints": textops.winnow_fingerprints,
+        "jaccard_join_prefix_filtered": neardup.jaccard_join_prefix_filtered,
         "pack_sequences": curation.pack_sequences,
         "pii_scan": curation.pii_scan,
         "token_budget_mixture": curation.token_budget_mixture,
@@ -597,9 +537,10 @@ def queries() -> dict[str, QueryFn]:
         "zorder_bucket_spans": layoutstats.zorder_bucket_spans,
         "hits_hub_authority": graph.hits_hub_authority,
         "stratified_sample_events": sampling.stratified_sample_events,
-        "jaccard_join_prefix_filtered": neardup.jaccard_join_prefix_filtered,
-        "snapshot_merkle_diff": cdc.snapshot_merkle_diff,
         "bfs_hops_from_seed": graph.bfs_hops_from_seed,
+        # ── end of the 50-entry checked window. The remainder follows in
+        # staleness order of the last driver check (r10, r11, r12, r13,
+        # then the r15 sample, freshest last), raws beside their twins. ──
         "ab_test_report": analytics.ab_test_report,
         "kcore_membership": graph.kcore_membership,
         "pmi_collocations": retrieval.pmi_collocations,
@@ -613,7 +554,6 @@ def queries() -> dict[str, QueryFn]:
         "pca_power_component": similarity.pca_power_component,
         "fk_discovery_report": lineage.fk_discovery_report,
         "trimmed_mean_by_type": analytics.trimmed_mean_by_type,
-        "supplier_affinity": recommend.supplier_affinity,
         "hybrid_search_rrf": retrieval.hybrid_search_rrf,
         "contrastive_pair_mining": similarity.contrastive_pair_mining_rounded,
         "ccnet_quality_buckets": textops.ccnet_quality_buckets,
@@ -621,8 +561,6 @@ def queries() -> dict[str, QueryFn]:
         "tokenizer_fertility_by_lang": textops.tokenizer_fertility_by_lang,
         "lsh_recall_report": neardup.lsh_recall_report,
         "duplicate_mass_report": neardup.duplicate_mass_report,
-        "stream_dedup_ttl_watermark": _stream_dedup_ttl_watermark_query,
-        "service_counters_composed": _service_counters_query,
         "pagerank_converged_suppliers": graph.pagerank_converged_suppliers,
         "cluster_representatives": neardup.cluster_representatives,
         "chunk_documents": textops.chunk_documents,
@@ -682,6 +620,16 @@ def queries() -> dict[str, QueryFn]:
         "minhash_signatures": neardup.minhash_signatures,
         "near_dup_minhash": neardup.near_dup_minhash,
         "near_dup_pairs_verified": neardup.near_dup_pairs_verified,
+        # FULL exact oracle since r14 (was rows-only): fixed-point Lloyd
+        # update → bit-reproducible codebook; no boundary rounding needed
+        "ivf_topk_cosine": similarity.ivf_topk_cosine,
+        "ivf_topk_indexed": similarity.ivf_topk_indexed,
+        # FULL exact oracle since r14 (same fixed-point-codebook recipe
+        # plus a fold-exact ADC LUT; was rows-only)
+        "pq_topk_cosine": similarity.pq_topk_cosine,
+        # FULL value oracle since r14 (VERDICT r13 item 2; was rows-only):
+        # 6-dp boundary rounding, inline hyperplane literals in the oracle
+        "ann_cosine_lsh": _ann_lsh_rounded,
         "semantic_dedup": _semantic_dedup_checked,  # FULL oracle since r14
         "semantic_dedup_contracts": similarity.semantic_dedup_contracts,
         "stream_near_dup_contracts": _stream_near_dup_contracts_query,
@@ -722,25 +670,109 @@ def queries() -> dict[str, QueryFn]:
         "warmup_digest_extract": lineage.warmup_digest_extract,  # message-granular validation
         "approx_distinct_events": dedup.approx_distinct_events,  # tolerance oracle
         "entity_match_pairs": entity.entity_match_pairs,
-        "entity_golden_records": entity.entity_golden_records,
         "posting_lists": retrieval.posting_lists,
         "phrase_search": retrieval.phrase_search,
         "kmeans_assign": clustering.kmeans_assign,
         "kmeans_centroids": clustering.kmeans_centroids,
         "mmr_diversify": diversify.mmr_diversify,
         "mmr_per_label": diversify.mmr_per_label,
-        "profile_orders": lineage.profile_orders,
         "mg_heavy_hitters": heavyhitters.mg_heavy_hitters,
-        # FULL exact oracle since r14 (was rows-only): fixed-point Lloyd
-        # update → bit-reproducible codebook; no boundary rounding needed
-        "ivf_topk_cosine": similarity.ivf_topk_cosine,
-        "ivf_topk_indexed": similarity.ivf_topk_indexed,
-        # FULL exact oracle since r14 (same fixed-point-codebook recipe
-        # plus a fold-exact ADC LUT; was rows-only)
-        "pq_topk_cosine": similarity.pq_topk_cosine,
-        # FULL value oracle since r14 (VERDICT r13 item 2; was rows-only):
-        # 6-dp boundary rounding, inline hyperplane literals in the oracle
-        "ann_cosine_lsh": _ann_lsh_rounded,
+        "q8_market_share": relational.q8_market_share,
+        "q9_product_profit": relational.q9_product_profit,
+        "q11_important_value": relational.q11_important_value,
+        "q2_min_cost_supplier": relational.q2_min_cost_supplier,
+        "q12_late_shipment_priority": relational.q12_late_shipment_priority,
+        "q15_top_supplier": relational.q15_top_supplier,
+        "q16_supplier_part_counts": relational.q16_supplier_part_counts,
+        "q20_heavy_shippers": relational.q20_heavy_shippers,
+        "q21_sole_late_supplier": relational.q21_sole_late_supplier,
+        "corpus_clean_pipeline": pipeline.corpus_clean_pipeline,
+        "embedding_topk_cosine": similarity.embedding_topk_cosine,
+        "knn_self_join_top1": similarity.knn_self_join_top1,
+        "embedding_near_dup_pairs": similarity.embedding_near_dup_pairs,
+        "near_dup_clusters": neardup.near_dup_clusters,
+        "simhash_docs": neardup.simhash_docs,
+        "simhash_near_dup_pairs": neardup.simhash_near_dup_pairs,
+        "substring_overlap_pairs": textops.substring_overlap_pairs,
+        "embedding_near_dup_clusters": similarity.embedding_near_dup_clusters,
+        "hash_sample_events": sampling.hash_sample_events,
+        "train_val_test_split": sampling.train_val_test_split,
+        "source_mixture_sample": sampling.source_mixture_sample,
+        "stream_warmup_flagged": _stream_warmup_flagged_query,  # exact oracle (plain append)
+        "sessionize_events": relational.sessionize_events,
+        "range_frame_event_counts": relational.range_frame_event_counts,
+        "stream_windowed_counts": _stream_windowed_counts_query,  # exact oracle (watermark cutoff)
+        "stream_session_activity": _stream_session_activity_query,  # exact oracle (watermark cutoff)
+        "multimodal_features": multimodal.multimodal_features_long,  # long-form boundary
+        "multimodal_decode": multimodal.multimodal_decode_long,  # long-form boundary
+        "multimodal_resize": multimodal.multimodal_resize_long,  # long-form boundary
+        "multimodal_frame_sample": multimodal.multimodal_frame_sample,  # integer-exact oracle
+        "multimodal_meta": multimodal.multimodal_meta,
+        "multimodal_decode_ppm": multimodal.multimodal_decode_ppm,  # real P6 codec
+        "multimodal_wav_energy": multimodal.multimodal_wav_energy,  # real RIFF codec
+        "bloom_digest_prefilter": dedup.bloom_digest_prefilter,  # contract oracle
+        "ann_recall_contracts": similarity.ann_recall_contracts,  # contract oracle (+ivf_indexed r5)
+        "knn_topk_blockwise": _knn_blockwise_rounded,  # 6-dp boundary (oracle-hashed)
+        "knn_topk_tiled": _knn_tiled_rounded,  # 6-dp boundary (oracle-hashed)
+        "label_centroids": similarity.label_centroids,  # long-form, rounded 9dp (oracle-hashed)
+        # (label_centroid_vectors is deliberately NOT registered: its
+        # array<double> centroid column is not canonicalizable by the driver
+        # harness — it is the consumer-API twin, pytest-pinned against numpy)
+        "array_funcs_demo": scalarfuncs.array_funcs_demo,
+        "map_funcs_demo": scalarfuncs.map_funcs_demo,
+        "dedup_substrings_global": textops.dedup_substrings_global,
+        "dsir_select": curation.dsir_select,
+        "dsir_resample": curation.dsir_resample,
+        "cusum_drift_flags": changepoint.cusum_drift_flags,
+        "asof_last_purchase": asof.asof_last_purchase,
+        "mg_heavy_hitters_contracts": heavyhitters.mg_heavy_hitters_contracts,
+        "mg_revenue_by_priority": heavyhitters.mg_revenue_by_priority,
+        "mg_revenue_contracts": heavyhitters.mg_revenue_contracts,
+        "duplicate_substring_spans": textops.duplicate_substring_spans,
+        "dedup_spans_within_doc": textops.dedup_spans_within_doc,
+        "kmv_audience_overlap": dedup.kmv_audience_overlap,
+        "decontaminate_fuzzy": neardup.decontaminate_fuzzy,
+        "vocab_coverage": textops.vocab_coverage,
+        "bpe_pair_counts": textops.bpe_pair_counts,
+        "doc_novelty_scores": textops.doc_novelty_scores,
+        "sax_fingerprints": analytics.sax_fingerprints,
+        "sax_word_counts": analytics.sax_word_counts,
+        "sq8_codes": similarity.sq8_codes,
+        "sq8_reconstruction_error": similarity.sq8_reconstruction_error,
+        "hourly_anomaly_flags": analytics.hourly_anomaly_flags,
+        "event_transitions": analytics.event_transitions,
+        "stream_drift_flags": _stream_drift_flags_query,
+        "nb_classifier_scores": classify.nb_classifier_scores,
+        "lp_communities": graph.lp_communities,
+        "cf_similar_suppliers": recommend.cf_similar_suppliers,
+        "ppr_related_suppliers": graph.ppr_related_suppliers,
+        "bit_funcs_demo": scalarfuncs.bit_funcs_demo,
+        "conditional_agg_demo": relational.conditional_agg_demo,
+        # SQL surface (same SQL text runs on Spark AND DuckDB) — 5 entries
+        **sqlapi.QUERIES,
+        # stream_near_dup: raw near-dup stream with the r13 FULL value
+        # oracle (single-micro-batch guarantee asserted in the runner)
+        "stream_near_dup": _stream_near_dup_query,  # FULL oracle since r13
+        "bpe_merge_steps": textops.bpe_merge_steps,
+        "bpe_encode_token_counts": textops.bpe_encode_token_counts,
+        "dedup_docs_by_url": curation.dedup_docs_by_url,
+        "domain_attrition_report": curation.domain_attrition_report,
+        "dedup_counters": dedup.dedup_counters,
+        "distinct_digests": dedup.distinct_digests,
+        "origin_lineage": lineage.origin_lineage,
+        "q1_pricing_summary": relational.q1_pricing_summary,
+        "q3_shipping_priority": relational.q3_shipping_priority,
+        "q5_local_supplier_volume": relational.q5_local_supplier_volume,
+        "semi_join_customers_with_orders": relational.semi_join_customers_with_orders,
+        "anti_join_customers_no_urgent": relational.anti_join_customers_no_urgent,
+        "top_orders_per_customer": relational.top_orders_per_customer,
+        "doc_repetition_stats": textops.doc_repetition_stats,
+        "gopher_quality_flags": textops.gopher_quality_flags,
+        "dedup_docs_by_prefix": textops.dedup_docs_by_prefix,
+        "corpus_curation_report": pipeline.corpus_curation_report,
+        "centroid_outlier_flags": similarity.centroid_outlier_flags,
+        "stream_quality_gate": _stream_quality_gate_query,
+        "decontaminate_overlap": curation.decontaminate_overlap,
     }
 
 
@@ -777,7 +809,7 @@ def oracle_sql() -> dict[str, str]:
     ):
         oracles.update(module.ORACLES)
     # bounded streaming harnesses with exact SQL oracles: the single-batch
-    # availableNow runs are deterministic (see each module's ORACLES notes)
+    # bounded runs are deterministic (see each module's ORACLES notes)
     from pulsar_topic_deduplicator_spark.streaming import (
         attribution,
         enrich,

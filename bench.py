@@ -196,15 +196,16 @@ HEADLINE = [
     # purchase_attribution_events (same batch range join) and
     # stream_stream_attribution (the streaming machinery), quality_score
     # is another zero-shuffle text projection (text_stats anchors the
-    # tier), and service_counters_composed is the same bounded-GroupState
-    # machinery stream_dedup_ttl already anchors plus a stateless
-    # quarantine pass. Round-8 extends the tail with three entries whose
-    # first-measurement anchors landed in the r7 driver artifact and
-    # whose machinery is bracketed by surviving entries (paragraph
-    # explode by duplicate_substring_spans, span LSH+verify by
-    # near_dup_pairs_verified, the gated watermark service by
-    # stream_dedup_ttl_watermark); never-measured entries must never sit
-    # behind them.
+    # tier), and service_counters_composed is the bounded service run
+    # stream_dedup_ttl already anchors (exact kernel, drained and
+    # stopped) plus the DQ gate and its stateless quarantine query.
+    # Round-8 extends the tail with three entries whose first-measurement
+    # anchors landed in the r7 driver artifact and whose machinery is
+    # bracketed by surviving entries (paragraph explode by
+    # duplicate_substring_spans, span LSH+verify by
+    # near_dup_pairs_verified, the gated watermark-kernel service by
+    # stream_dedup_ttl_watermark, the same bounded service run without
+    # the gate); never-measured entries must never sit behind them.
     "dedup_paragraphs",  # cross-doc paragraph dedup (hash window + reassembly)
     "near_dup_paragraphs",  # span-granularity fuzzy near-dup (LSH + verify)
     "service_counters_watermark",  # gated service on the JVM watermark kernel
@@ -212,7 +213,7 @@ HEADLINE = [
     "near_dup_minhash",
     "simhash_docs",
     "quality_score",
-    "service_counters_composed",  # DQ gate + warm-up + TTL dedup, composed
+    "service_counters_composed",  # gated service, exact kernel, drained
 ]
 
 #: PINNED printed subset (round 15, VERDICT r14 item 2). The driver parses

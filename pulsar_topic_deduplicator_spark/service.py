@@ -18,8 +18,14 @@ the engine's pieces:
    projection (ops #4–#9) — DEFAULT kernel: the JVM-only watermark TTL
    (``dedup_stream_ingest_ttl``; no Python worker in the dedup path — see
    its docstring); ``exact_processing_ttl=True`` opts into the exact
-   processing-clock kernel (``start_ttl_dedup``);
+   processing-clock kernel (``streaming.dedup._exact_ttl_dedup``);
 4. health / counters / graceful stop (ops #13–#15) surfaced as methods.
+
+Two entry points: ``start_dedup_service`` (the live service) and
+``run_dedup_service_bounded`` (the same composition drained and stopped —
+tests, backfills, the registry's bounded entries). A DQ-gated bounded
+run is ``start_dedup_service(dq_gate=True)`` drained the same way:
+``processAllAvailable`` on each query, then ``stop()``.
 
 The live broker line is the one piece the sandbox cannot exercise: swap the
 file source for ``.format("pulsar"|"kafka")`` + the option maps in
@@ -39,11 +45,12 @@ from .config import EngineConfig
 from .operators.lineage import extract_origin_digests, message_dq_violations
 from .sources.retry import with_warmup_retries
 from .streaming.dedup import (
+    _exact_ttl_dedup,
+    _write_stream,
     dedup_stream_ingest_ttl,
-    run_ttl_dedup_bounded,
-    start_ttl_dedup,
 )
 from .streaming.ops import graceful_stop, health_status, observed_counters
+from .streaming.source import bounded_shuffle_width, events_message_stream
 
 
 def warmup_seed_digests(
@@ -142,8 +149,11 @@ class DedupService:
     def counters(self) -> dict:
         c = observed_counters(self.query)
         if self.quarantine_table is not None:
-            # violation telemetry beside forwarded/dropped (reference op
-            # #13's counter loop, extended with the DQ gate's quarantine)
+            # the gate's clean-ingest count (``n_clean``), so dropped =
+            # n_clean − forwarded on both kernels, and violation telemetry
+            # beside it (reference op #13's counter loop, extended with the
+            # DQ gate's quarantine)
+            c.update(observed_counters(self.query, "gate"))
             c["n_quarantined"] = self.spark.table(self.quarantine_table).count()
         return c
 
@@ -296,71 +306,131 @@ def start_dedup_service(
     by the watermark advance — late eviction, never early re-admission,
     the same direction the reference's
     ``oblivious-set`` dependency errs (lazy purge; ``package.json:51``,
-    behavior pinned in ``src/deduplication.test.ts:249-275``). Its query
-    runs one micro-batch per arrival (no eviction-only batches), so
-    eviction lags by at most one more data batch (see
-    ``_start_watermark_dedup_query``).
-    ``exact_processing_ttl=True``
-    opts into the exact processing-time-TTL kernel (``start_ttl_dedup``)
-    for deployments that need expiry exact to the millisecond; its output
-    additionally carries the per-digest ``n_dropped`` counter rows.
+    behavior pinned in ``src/deduplication.test.ts:249-275``).
+    ``exact_processing_ttl=True`` opts into the exact processing-time-TTL
+    kernel (``streaming.dedup._exact_ttl_dedup``) for deployments that
+    need expiry exact to the millisecond; its output additionally carries
+    the per-digest ``n_dropped`` counter rows.
+
+    One micro-batch per arrival: the query starts with no-data batches
+    off. The ingest-clock watermark advances on every batch, so with them
+    on, each arrival would be followed by an eviction-only batch paying
+    the full per-batch fixed cost (planning, WAL and offset commits, a
+    state-store commit); an expired digest's state is instead evicted at
+    the end of the next DATA batch — late eviction by at most one batch
+    (``dedup_stream_ingest_ttl``). The exact kernel arms no timers here
+    and has no watermark, so it never runs no-data batches either way.
 
     ``max_files_per_trigger`` rate-limits ingest (admission control — the
     reference's bounded receive queue, ``src/config.ts:231-235``); dedup
     output is batch-split invariant (tests/test_admission.py).
 
+    ``messages`` overrides the transport: any streaming DataFrame in the
+    message schema runs the identical dataflow — the production
+    ``.format("pulsar"|"kafka")`` swap point, exercised over a live TCP
+    socket in tests/test_socket_stream.py (``source_dir``/``glob_filter``
+    are ignored when it is given).
+
     ``dq_gate=True`` composes the row-local DQ gate as an ingest
     pre-filter: rows violating any constraint never reach the dedup state
     (the reference validates per message before the cache check,
     ``src/deduplication.ts:99-106``) and are diverted to a quarantine
-    table by a stateless side query over the same source, with
-    ``counters()`` reporting them beside forwarded/dropped. When a
-    ``messages`` transport override is given the quarantine derives from
-    that SAME frame — note each streaming query still opens its own reader,
-    so combining ``dq_gate`` with a non-replayable transport (one live TCP
-    socket) splits rows between the two consumers; use a replayable source
-    (files, a broker topic with independent subscriptions) for gated runs."""
+    table by a stateless side query over the SAME message stream, with
+    ``counters()`` reporting the gate's clean-ingest count ``n_clean``
+    and ``n_quarantined`` beside it. Note each streaming query still opens
+    its own reader, so combining ``dq_gate`` with a non-replayable
+    transport (one live TCP socket) splits rows between the two consumers;
+    use a replayable source (files, a broker topic with independent
+    subscriptions) for gated runs."""
+    return _start_service(
+        spark,
+        config,
+        source_dir,
+        checkpoint_dir,
+        prior_output,
+        now_ts,
+        glob_filter,
+        exact_processing_ttl,
+        dq_gate,
+        messages,
+        max_files_per_trigger,
+    )
+
+
+def _start_service(
+    spark: SparkSession,
+    config: EngineConfig,
+    source_dir: str,
+    checkpoint_dir: str,
+    prior_output: DataFrame | None,
+    now_ts: str,
+    glob_filter: str | None,
+    exact_processing_ttl: bool,
+    dq_gate: bool,
+    messages: DataFrame | None,
+    max_files_per_trigger: int | None,
+    output_dir: str | None = None,
+) -> DedupService:
+    """``start_dedup_service`` with the sink as a choice: ``output_dir``
+    gets the parquet file sink (``_write_stream``), the restartable shape
+    ``run_dedup_service_bounded`` offers; otherwise a memory table."""
     seeds = build_seed_set(prior_output, config, now_ts)
-    predicate = F.size(message_dq_violations()) == 0 if dq_gate else None
+    q_query = q_name = None
     try:
-        if exact_processing_ttl:
-            query, name = start_ttl_dedup(
+        if messages is None:
+            messages = events_message_stream(
                 spark,
                 source_dir,
-                checkpoint_dir,
-                ttl_ms=config.dedup_window_ms,
-                seed_digests=seeds,
                 glob_filter=glob_filter,
-                ignored=config.ignored_properties,
-                message_predicate=predicate,
-                messages=messages,
                 max_files_per_trigger=max_files_per_trigger,
             )
+        ingest = messages
+        if dq_gate:
+            ingest = messages.filter(
+                F.size(message_dq_violations()) == 0
+            ).observe("gate", F.count(F.lit(1)).alias("n_clean"))
+        if exact_processing_ttl:
+            deduped = _exact_ttl_dedup(
+                ingest, config.dedup_window_ms, seeds, config.ignored_properties
+            )
         else:
-            query, name = _start_watermark_dedup_query(
-                spark,
-                config,
-                source_dir,
-                checkpoint_dir,
-                seeds=seeds,
-                glob_filter=glob_filter,
-                message_predicate=predicate,
-                messages=messages,
-                max_files_per_trigger=max_files_per_trigger,
+            deduped = dedup_stream_ingest_ttl(
+                ingest,
+                config.dedup_window_ms,
+                config.ignored_properties,
+                exclude_digests=seeds,
+            )
+        # a query captures its conf when it starts, so the setting is
+        # scoped to this start() and never leaks into later queries on the
+        # session (windowed aggregates need no-data batches to finalize
+        # their windows)
+        key = "spark.sql.streaming.noDataMicroBatches.enabled"
+        old = spark.conf.get(key, None)
+        spark.conf.set(key, "false")
+        try:
+            query, name = _write_stream(
+                deduped, "dedup", output_dir, checkpoint_dir
+            )
+        finally:
+            if old is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, old)
+        if dq_gate:
+            # the reject path: dirty messages land in a memory table with
+            # their violated-constraint list — zero state, append mode; at
+            # scale a second reader on the same topic writing a dead-letter
+            # topic, not a branch inside the stateful query
+            q_query, q_name = _write_stream(
+                messages.withColumn(
+                    "violations", message_dq_violations()
+                ).filter(F.size("violations") > 0),
+                "quarantine",
             )
     except BaseException:
         if seeds is not None:
             seeds.unpersist()
         raise
-    q_query = q_name = None
-    if dq_gate:
-        # the quarantine side-stream MUST observe the same transport the
-        # gate filters: with a `messages` override, deriving it from
-        # source_dir would quarantine rows from a DIFFERENT stream than the
-        # one actually gated and desynchronize counters()
-        q_query, q_name = start_quarantine_stream(
-            spark, source_dir, glob_filter=glob_filter, messages=messages
-        )
     return DedupService(
         spark=spark,
         query=query,
@@ -369,125 +439,6 @@ def start_dedup_service(
         quarantine_table=q_name,
         seeds=seeds,
     )
-
-
-def _start_watermark_dedup_query(
-    spark: SparkSession,
-    config: EngineConfig,
-    source_dir: str,
-    checkpoint_dir: str | None,
-    seeds: DataFrame | None = None,
-    glob_filter: str | None = None,
-    message_predicate=None,
-    messages: DataFrame | None = None,
-    max_files_per_trigger: int | None = None,
-    available_now: bool = False,
-    output_dir: str | None = None,
-):
-    """Start the default-kernel service query: (optional gate predicate) →
-    warm-up anti-join seeding → JVM watermark TTL dedup → sink.
-    Returns ``(query, table_name_or_output_dir)``.
-
-    One micro-batch per arrival: the ingest-clock watermark advances on
-    every batch, so with no-data batches on, each arrival would be followed
-    by an eviction-only batch paying the full per-batch fixed cost
-    (planning, WAL and offset commits, a state-store commit). The query
-    starts without them; an expired digest's state is then evicted at the
-    end of the next DATA batch instead — late eviction by at most one
-    batch (``dedup_stream_ingest_ttl``).
-
-    Sink selection (the ``run_stream_dedup_bounded`` discipline): a caller
-    that passes ``output_dir`` gets the parquet file sink — the RESTARTABLE
-    shape (memory sinks refuse to recover from a checkpoint), used by
-    resumable backfills and the RocksDB restart tests; one-shot runs keep
-    the memory sink and skip the file-commit cost."""
-    import uuid
-
-    from .streaming.source import events_message_stream
-
-    name = f"svc_wm_{uuid.uuid4().hex[:8]}"
-    if messages is None:
-        messages = events_message_stream(
-            spark,
-            source_dir,
-            glob_filter=glob_filter,
-            max_files_per_trigger=max_files_per_trigger,
-        )
-    if message_predicate is not None:
-        messages = messages.filter(message_predicate)
-    deduped = dedup_stream_ingest_ttl(
-        messages,
-        config.dedup_window_ms,
-        config.ignored_properties,
-        exclude_digests=seeds,
-    )
-    if output_dir:
-        writer = (
-            deduped.writeStream.format("parquet")
-            .option("path", output_dir)
-            .outputMode("append")
-        )
-        name = output_dir
-    else:
-        writer = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-        )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    # a query captures its conf when it starts, so the setting is scoped
-    # to this start() and never leaks into later queries on the session
-    # (windowed aggregates need no-data batches to finalize their windows)
-    key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, "false")
-    try:
-        return writer.start(), name
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
-
-
-def start_quarantine_stream(
-    spark: SparkSession,
-    source_dir: str,
-    glob_filter: str | None = None,
-    available_now: bool = False,
-    messages: DataFrame | None = None,
-):
-    """Stateless side query: the DQ gate's reject path. Dirty messages land
-    in a memory table with their violated-constraint list — zero state,
-    append mode, full codegen; at scale this is a second reader on the same
-    topic writing a dead-letter topic (the standard quarantine pattern),
-    not a branch inside the stateful query.
-
-    ``messages`` overrides the transport exactly as in ``start_ttl_dedup``:
-    the quarantine pass then observes the SAME stream the gate filters
-    (``source_dir``/``glob_filter`` are ignored when it is given)."""
-    import uuid
-
-    from .streaming.source import events_message_stream
-
-    name = f"quarantine_{uuid.uuid4().hex[:8]}"
-    if messages is None:
-        messages = events_message_stream(
-            spark, source_dir, glob_filter=glob_filter
-        )
-    dirty = messages.withColumn("violations", message_dq_violations()).filter(
-        F.size("violations") > 0
-    )
-    writer = (
-        dirty.writeStream.format("memory").queryName(name).outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    return query, name
 
 
 def run_dedup_service_bounded(
@@ -502,207 +453,43 @@ def run_dedup_service_bounded(
     output_dir: str | None = None,
 ) -> DataFrame:
     """Bounded (drain-and-stop) run of the full service composition — the
-    test/backfill entry point. Default kernel = JVM watermark TTL (full
-    surviving message rows); ``exact_processing_ttl=True`` opts into the
-    exact GroupState kernel (digest/message_id/event_ts/n_dropped rows) —
-    see ``start_dedup_service``. Pass
-    ``output_dir`` for the RESTARTABLE parquet-sink shape (resumable
-    backfills; memory sinks refuse checkpoint recovery) — the returned
-    frame then reads the cumulative sink directory. The warm-up seed set
-    is built once before the run and released after it."""
-    seeds = build_seed_set(prior_output, config, now_ts)
-    try:
-        if exact_processing_ttl:
-            return run_ttl_dedup_bounded(
-                spark,
-                source_dir,
-                checkpoint_dir,
-                ttl_ms=config.dedup_window_ms,
-                seed_digests=seeds,
-                glob_filter=glob_filter,
-                ignored=config.ignored_properties,
-            )
-        query, name = _start_watermark_dedup_query(
+    test/backfill entry point: ``start_dedup_service``, then
+    ``processAllAvailable`` and ``stop()``, on either kernel. Default
+    kernel = JVM watermark TTL (full surviving message rows);
+    ``exact_processing_ttl=True`` opts into the exact GroupState kernel
+    (digest/message_id/event_ts/n_dropped rows). Pass ``output_dir`` for
+    the RESTARTABLE parquet-sink shape (resumable backfills; memory sinks
+    refuse checkpoint recovery) — the returned frame then reads the
+    cumulative sink directory. The warm-up seed set is built once before
+    the run and released after it.
+
+    The state width is clamped to the cluster's cores
+    (``bounded_shuffle_width``): streaming plans never AQE-coalesce, so a
+    default 200-partition session would pay 200 state-store commits per
+    batch for a bounded run."""
+    with bounded_shuffle_width(spark):
+        svc = _start_service(
             spark,
             config,
             source_dir,
             checkpoint_dir,
-            seeds=seeds,
-            glob_filter=glob_filter,
-            available_now=True,
+            prior_output,
+            now_ts,
+            glob_filter,
+            exact_processing_ttl,
+            dq_gate=False,
+            messages=None,
+            max_files_per_trigger=None,
             output_dir=output_dir,
         )
-        query.awaitTermination()
-    finally:
-        # the returned frame reads the sink, never the seeds
-        if seeds is not None:
-            seeds.unpersist()
+        try:
+            svc.query.processAllAvailable()
+        finally:
+            # the returned frame reads the sink, never the seeds
+            svc.stop()
     if output_dir:
         return spark.read.parquet(output_dir)
-    return spark.table(name)
-
-
-def run_gated_service_bounded(
-    spark: SparkSession,
-    config: EngineConfig,
-    source_dir: str,
-    checkpoint_dir: str | None = None,
-    glob_filter: str | None = None,
-    exact_processing_ttl: bool = False,
-) -> tuple[DataFrame, DataFrame, int]:
-    """Bounded run of the DQ-gated service composition: the ingest stream is
-    split by the row-local gate — clean rows flow through the TTL dedup,
-    dirty rows land in quarantine with their violated constraints. Returns
-    ``(dedup_output, quarantine, n_clean)`` where ``n_clean`` is the
-    gate-passing ingest count, so ``dropped = n_clean − forwarded`` on both
-    kernels. Default kernel = JVM watermark TTL (``start_dedup_service``
-    rationale); ``exact_processing_ttl=True`` opts into the exact
-    GroupState kernel, whose output additionally carries per-digest
-    ``n_dropped`` counter rows."""
-    if not exact_processing_ttl:
-        return run_gated_service_watermark_bounded(
-            spark, config, source_dir, glob_filter=glob_filter
-        )
-    import tempfile
-
-    predicate = F.size(message_dq_violations()) == 0
-    # start the stateless quarantine pass FIRST (async) so it overlaps the
-    # stateful dedup run instead of paying a second sequential source scan
-    q_query, q_name = start_quarantine_stream(
-        spark, source_dir, glob_filter=glob_filter, available_now=True
-    )
-    out = run_ttl_dedup_bounded(
-        spark,
-        source_dir,
-        checkpoint_dir or tempfile.mkdtemp("gated_ckpt"),
-        ttl_ms=config.dedup_window_ms,
-        glob_filter=glob_filter,
-        ignored=config.ignored_properties,
-        message_predicate=predicate,
-    )
-    q_query.awaitTermination()
-    forwarded = out.filter(F.col("message_id").isNotNull()).count()
-    dropped = out.agg(F.sum("n_dropped")).collect()[0][0] or 0
-    return out, spark.table(q_name), int(forwarded + dropped)
-
-
-def service_counters_composed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver entry: end-to-end counters of the DQ-gated service over the
-    events stream — the reference's telemetry loop (op #13: forwarded /
-    dropped per interval, ``src/deduplication.ts:80-95``) extended with the
-    gate's quarantine lane, as one long-form (metric, value) frame.
-
-    The three counts reconcile by construction:
-    ``forwarded + dropped + quarantined == total input rows`` — the pytest
-    twin asserts exactly that on an injected-dirty corpus; here the driver
-    value-checks the clean corpus against the SQL oracle (dirty = 0 rows,
-    forwarded = distinct digests, dropped = clean − distinct).
-
-    Scale: the counters are aggregates OVER the bounded run's outputs
-    (micro-batch sinks); the scalar collects are three counts — no
-    row-level driver traffic.
-
-    This entry deliberately opts into the EXACT processing-time-TTL kernel
-    (``exact_processing_ttl=True``) so the driver keeps checking that
-    kernel's composed path; the default-kernel twin is
-    ``service_counters_watermark``."""
-    out, quarantine, _n_clean = run_gated_service_bounded(
-        spark,
-        EngineConfig(),
-        sf_dir,
-        glob_filter="events.parquet",
-        exact_processing_ttl=True,
-    )
-    forwarded = out.filter(F.col("message_id").isNotNull()).count()
-    dropped = out.agg(F.sum("n_dropped")).collect()[0][0] or 0
-    quarantined = quarantine.count()
-    return spark.createDataFrame(
-        [
-            ("forwarded", int(forwarded)),
-            ("dropped_duplicates", int(dropped)),
-            ("quarantined", int(quarantined)),
-        ],
-        "metric string, value long",
-    )
-
-
-def run_gated_service_watermark_bounded(
-    spark: SparkSession,
-    config: EngineConfig,
-    source_dir: str,
-    glob_filter: str | None = None,
-) -> tuple[DataFrame, DataFrame, int]:
-    """Bounded run of the DQ-gated service composed over the JVM-only
-    watermark TTL kernel (``dedup_stream_ingest_ttl``) — the deployment
-    shape for services that accept ingest-clock TTL semantics and want the
-    Python-worker cost of the exact GroupState kernel gone (measured in
-    ``dedup_stream_ingest_ttl``'s docstring).
-
-    Same gate → dedup order as ``run_gated_service_bounded``: dirty rows
-    divert to quarantine (started async FIRST so the stateless pass
-    overlaps the stateful run), clean rows dedup on the content digest.
-    This kernel suppresses duplicates inside the JVM without emitting
-    per-digest drop counters, so the dropped count derives from the op-#13
-    ``observe()`` counter on the gated ingest stream (``n_clean`` −
-    forwarded) instead of summed ``n_dropped`` rows. A live service that
-    additionally needs warm-up seeding (op #11) composes the same pieces
-    through ``start_dedup_service(prior_output=..., dq_gate=True)``, which
-    anti-joins the live stream against the seed set built once at start.
-
-    Returns ``(dedup_output, quarantine, n_clean)``."""
-    import uuid
-
-    from .streaming.dedup import dedup_stream_ingest_ttl
-    from .streaming.source import events_message_stream
-
-    q_query, q_name = start_quarantine_stream(
-        spark, source_dir, glob_filter=glob_filter, available_now=True
-    )
-    messages = events_message_stream(spark, source_dir, glob_filter=glob_filter)
-    clean = messages.filter(F.size(message_dq_violations()) == 0).observe(
-        "gate", F.count(F.lit(1)).alias("n_clean")
-    )
-    deduped = dedup_stream_ingest_ttl(
-        clean, config.dedup_window_ms, config.ignored_properties
-    )
-    name = f"wm_gated_{uuid.uuid4().hex[:8]}"
-    query = (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    n_clean = int(observed_counters(query, "gate").get("n_clean", 0))
-    q_query.awaitTermination()
-    return spark.table(name), spark.table(q_name), n_clean
-
-
-def service_counters_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver entry: the same composed gate→dedup telemetry as
-    ``service_counters_composed``, with the dedup stage on the watermark
-    TTL kernel — the service DEFAULT path since round 9
-    (``start_dedup_service`` kernel rationale) — forwarded /
-    dropped_duplicates / quarantined reconcile to
-    the input row count by construction (dropped = observed clean ingest −
-    forwarded; the pytest twin asserts the reconciliation on an
-    injected-dirty corpus). Shares the composed entry's exact SQL oracle:
-    both kernels forward exactly one row per distinct clean digest on a
-    bounded single-batch run."""
-    out, quarantine, n_clean = run_gated_service_watermark_bounded(
-        spark, EngineConfig(), sf_dir, glob_filter="events.parquet"
-    )
-    forwarded = out.count()
-    quarantined = quarantine.count()
-    return spark.createDataFrame(
-        [
-            ("forwarded", int(forwarded)),
-            ("dropped_duplicates", int(n_clean - forwarded)),
-            ("quarantined", int(quarantined)),
-        ],
-        "metric string, value long",
-    )
+    return svc.output()
 
 
 # DuckDB oracle: replay the gate + dedup arithmetic in SQL. The row-local
@@ -739,9 +526,9 @@ def _service_counters_oracle() -> str:
 
 
 ORACLES: dict[str, str] = {
+    # both kernels forward exactly one row per distinct clean digest on a
+    # bounded single-batch run — same counter arithmetic, same oracle (a
+    # shared-SQL twin, like the rollup pair)
     "service_counters_composed": _service_counters_oracle(),
-    # the watermark-kernel composition forwards exactly one row per
-    # distinct clean digest on a bounded single-batch run — same counter
-    # arithmetic, same oracle (a shared-SQL twin, like the rollup pair)
     "service_counters_watermark": _service_counters_oracle(),
 }

@@ -2,19 +2,29 @@
 
 Reference (``src/deduplication.ts:97-160``): per message → content hash →
 TTL-set membership check → forward first occurrence with ``origin``
-provenance → count forwarded/dropped per minute. Two TTL semantics:
+provenance → count forwarded/dropped per minute. The dataflow is source →
+digest (``message_digest``) → TTL kernel → sink, with two TTL semantics:
 
 1. ``dedup_stream`` / ``dedup_stream_ingest_ttl`` — the built-in JVM
    paths: ``withWatermark`` + ``dropDuplicatesWithinWatermark([digest])``
    (SURVEY.md §2.1.3: the watermark delay plays the TTL role — documented
-   deviation §7.4.2), plus ``observe()`` counters (reference op #13).
-2. ``start_ttl_dedup`` — the one exact kernel: first occurrence per
-   digest wins and the TTL runs from insertion on the processing-time
-   clock, the reference's ObliviousSet (``src/deduplication.ts:76``).
-   It is ``applyInPandasWithState`` over ``TTL_KEY_GROUPS`` fixed digest
-   hash buckets (``_make_bucketed_ttl_kernel``). Its **warm-up** (reference
-   op #11) streams seed digests from a batch scan of prior output through
-   the same kernel, mirroring ``buildUpCache`` (``src/cacheBuilding.ts:65``).
+   deviation §7.4.2); ``dedup_stream`` adds ``observe()`` counters
+   (reference op #13).
+2. the exact kernel (``_exact_ttl_dedup``): first occurrence per digest
+   wins and the TTL runs from insertion on the processing-time clock, the
+   reference's ObliviousSet (``src/deduplication.ts:76``). It is
+   ``applyInPandasWithState`` over ``TTL_KEY_GROUPS`` fixed digest hash
+   buckets (``_make_bucketed_ttl_kernel``). Its **warm-up** (reference op
+   #11) streams seed digests from a batch scan of prior output through the
+   same kernel, mirroring ``buildUpCache`` (``src/cacheBuilding.ts:65``).
+
+Entry points that start queries: ``run_stream_dedup_bounded`` (the
+event-time ``dedup_stream`` pipeline, drained and stopped) and
+``start_ttl_dedup`` (the exact kernel as a live query; the only way to
+arm its GC timers). The service (``service.py``) composes both kernels
+from the frame-returning functions here. Every query in this dataflow
+is written by ``_write_stream`` and a bounded run drains it with
+``processAllAvailable`` then ``stop``.
 
 Scale: state is hash-partitioned by digest across executors — uniformly
 distributed keys (crypto hash), no skew. The default state store is
@@ -27,6 +37,7 @@ both, tests/test_state_store_rocksdb.py).
 
 from __future__ import annotations
 
+import contextlib
 import tempfile
 import uuid
 from collections.abc import Iterator
@@ -94,6 +105,30 @@ def dedup_stream(
     )
 
 
+def _write_stream(
+    frame: DataFrame,
+    prefix: str,
+    output_dir: str | None = None,
+    checkpoint_dir: str | None = None,
+):
+    """The dataflow's sink: start ``frame`` as an append query and return
+    ``(query, name)``. A memory table named ``<prefix>_<8 hex>`` unless
+    ``output_dir`` is given; then the parquet file sink at that directory,
+    which ``name`` is — the restartable shape, since a memory sink refuses
+    to recover from a checkpoint. Without ``checkpoint_dir`` Spark uses a
+    temporary checkpoint (memory sinks only)."""
+    writer = frame.writeStream.outputMode("append")
+    if output_dir:
+        name = output_dir
+        writer = writer.format("parquet").option("path", output_dir)
+    else:
+        name = f"{prefix}_{uuid.uuid4().hex[:8]}"
+        writer = writer.format("memory").queryName(name)
+    if checkpoint_dir:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    return writer.start(), name
+
+
 def run_stream_dedup_bounded(
     spark: SparkSession,
     source_dir: str,
@@ -102,8 +137,8 @@ def run_stream_dedup_bounded(
     glob_filter: str | None = None,
 ) -> DataFrame:
     """Bounded end-to-end run for the harness: stream the source events
-    through the dedup pipeline with Trigger.AvailableNow, then return the
-    cumulative output as a batch DataFrame.
+    through the ``dedup_stream`` pipeline until the source is drained,
+    stop, then return the cumulative output as a batch DataFrame.
 
     Sink selection: a caller that passes ``checkpoint_dir`` (restart tests,
     resumable backfills) gets the parquet file sink — the memory sink
@@ -124,45 +159,34 @@ def run_stream_dedup_bounded(
     deduped = dedup_stream(messages).select(
         "message_id", "topic", "digest", "event_ts", "properties"
     )
-    # digest-keyed state shuffles at the session width, which streaming
-    # plans never AQE-coalesce: a default 200-partition session pays 200
-    # state-store commits per batch regardless of volume (VERDICT r12
-    # item 4). The helper clamps to min(cluster cores, configured width) —
-    # a deliberately-widened production session keeps ≥ cluster-cores
-    # state partitions for its billion-digest state; it never narrows
-    # below the cluster's parallelism.
     if checkpoint_dir is None and output_dir is None:
-        name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-        with bounded_shuffle_width(spark):
-            query = (
-                deduped.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination()
-        return spark.table(name)
-    run_id = uuid.uuid4().hex[:8]
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(f"ckpt_{run_id}")
-    # output co-located with the checkpoint so a restart appends to the same
-    # sink — mirroring the reference's single output topic
-    output_dir = output_dir or f"{checkpoint_dir}_out"
-    # NOTE: no width pin on the checkpointed path — not needed for
-    # safety (Spark persists shuffle.partitions in the offset log and
-    # restores it on resume), but restart tests exercise this path and
-    # the unpinned width keeps fresh-vs-resumed runs on the session's
-    # own configuration end to end.
-    query = (
-        deduped.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.read.parquet(output_dir)
+        # digest-keyed state shuffles at the session width, which streaming
+        # plans never AQE-coalesce: a default 200-partition session pays
+        # 200 state-store commits per batch regardless of volume (VERDICT
+        # r12 item 4). The helper clamps to min(cluster cores, configured
+        # width) — it never narrows below the cluster's parallelism.
+        width = bounded_shuffle_width(spark)
+    else:
+        # no width pin on the checkpointed path — not needed for safety
+        # (Spark persists shuffle.partitions in the offset log and restores
+        # it on resume), and restart tests keep fresh-vs-resumed runs on
+        # the session's own configuration end to end
+        width = contextlib.nullcontext()
+        checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(
+            f"ckpt_{uuid.uuid4().hex[:8]}"
+        )
+        # output co-located with the checkpoint so a restart appends to the
+        # same sink — mirroring the reference's single output topic
+        output_dir = output_dir or f"{checkpoint_dir}_out"
+    with width:
+        query, name = _write_stream(
+            deduped, "stream_dedup", output_dir, checkpoint_dir
+        )
+        try:
+            query.processAllAvailable()
+        finally:
+            query.stop()
+    return spark.read.parquet(name) if output_dir else spark.table(name)
 
 
 # ─── exact-TTL path ─────────────────────────────────────────────────────────
@@ -266,7 +290,7 @@ def _make_bucketed_ttl_kernel(ttl_ms: int, use_timers: bool = False):
         import numpy as np
 
         if state.hasTimedOut:
-            # timer fire (use_timers runners only): GC pass. Purge expired
+            # timer fire (use_timers queries only): GC pass. Purge expired
             # entries; drop the state row entirely once the map is empty.
             # No rows are emitted and no live entry is touched, so output
             # semantics are unchanged.
@@ -372,22 +396,18 @@ def start_ttl_dedup(
     max_files_per_trigger: int | None = None,
     use_timers: bool = False,
 ):
-    """Start the exact-TTL dedup as a live streaming query; returns
-    ``(StreamingQuery, output_table_name)`` (memory sink).
-
-    The kernel is ``_make_bucketed_ttl_kernel`` on
-    ``applyInPandasWithState``, grouped by ``pmod(xxhash64(digest),
-    TTL_KEY_GROUPS)``. The key-group count is a constant, so a digest's
-    group never depends on the session's parallelism.
+    """Start the exact-TTL dedup (``_exact_ttl_dedup``) as a live streaming
+    query; returns ``(StreamingQuery, output_table_name)`` (memory sink).
 
     ``use_timers``: ``True`` arms a per-group processing-time timer so
     groups that stop receiving traffic still purge expired digests and
     eventually drop their state row — pass it on any long-running
-    production query. Default ``False`` because registered timers make the
-    micro-batch engine schedule batches continuously until every timer
-    fires (see ``_make_bucketed_ttl_kernel``), which bounded harness runs
-    must not pay for; groups that DO receive traffic purge expired entries
-    on every state write regardless. Emitted rows are identical either way
+    production query; this is the only entry point that arms them. Default
+    ``False`` because registered timers make the micro-batch engine
+    schedule batches continuously until every timer fires (see
+    ``_make_bucketed_ttl_kernel``), which bounded runs must not pay for;
+    groups that DO receive traffic purge expired entries on every state
+    write regardless. Emitted rows are identical either way
     (tests/test_round15_opt.py).
 
     Restart: the sink is a memory sink, which cannot recover from a
@@ -404,30 +424,19 @@ def start_ttl_dedup(
     invariant to the batch split — pinned in tests/test_admission.py.
 
     ``message_predicate`` is an optional stateless admission gate applied to
-    the message stream BEFORE hashing/state (the service's DQ pre-filter —
-    rows failing it never reach the dedup state, mirroring the reference's
-    per-message validation ahead of the cache check,
-    ``src/deduplication.ts:99-106``).
+    the message stream BEFORE hashing/state (rows failing it never reach
+    the dedup state, mirroring the reference's per-message validation
+    ahead of the cache check, ``src/deduplication.ts:99-106``).
 
     ``messages`` overrides the transport: any streaming DataFrame in the
     message schema (message_id, event_ts + the digest inputs) runs the
     identical kernel — the production ``.format("pulsar"|"kafka")`` swap
-    point, exercised over a live TCP socket in tests/test_socket_stream.py
-    (``source_dir``/``glob_filter`` are ignored when it is given).
+    point (``source_dir``/``glob_filter`` are ignored when it is given).
 
     ``ignored`` is the reference's ``DEDUPLICATION_IGNORED_PROPERTIES``
-    projection (op #4) applied to the hash input.
-
-    ``seed_digests`` (a batch DataFrame with a ``digest`` column) replays
-    the reference's warm-up (op #11): those digests start out "seen" and
-    their live occurrences are suppressed. They are written as seed
-    *messages* into a side source and streamed through the same dedup
-    kernel — exactly how the reference seeds its cache by re-reading its
-    own output topic (``src/cacheBuilding.ts:141-153``).
+    projection (op #4) applied to the hash input; ``seed_digests`` is the
+    warm-up seed set (see ``_exact_ttl_dedup``).
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    name = f"ttl_dedup_{uuid.uuid4().hex[:8]}"
     if messages is None:
         messages = events_message_stream(
             spark,
@@ -437,6 +446,35 @@ def start_ttl_dedup(
         )
     if message_predicate is not None:
         messages = messages.filter(message_predicate)
+    deduped = _exact_ttl_dedup(
+        messages, ttl_ms, seed_digests, ignored, use_timers=use_timers
+    )
+    return _write_stream(deduped, "ttl_dedup", checkpoint_dir=checkpoint_dir)
+
+
+def _exact_ttl_dedup(
+    messages: DataFrame,
+    ttl_ms: int,
+    seed_digests: DataFrame | None = None,
+    ignored: tuple[str, ...] = (),
+    use_timers: bool = False,
+) -> DataFrame:
+    """The exact-TTL kernel over a message-schema stream, as a frame of
+    ``digest, message_id, event_ts, n_dropped`` rows
+    (``_make_bucketed_ttl_kernel``) on ``applyInPandasWithState``, grouped
+    by ``pmod(xxhash64(digest), TTL_KEY_GROUPS)``. The key-group count is
+    a constant, so a digest's group never depends on the session's
+    parallelism.
+
+    ``seed_digests`` (a batch DataFrame with a ``digest`` column) replays
+    the reference's warm-up (op #11): those digests start out "seen" and
+    their live occurrences are suppressed. They are written as seed
+    *messages* into a side source and streamed through the same dedup
+    kernel — exactly how the reference seeds its cache by re-reading its
+    own output topic (``src/cacheBuilding.ts:141-153``)."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    spark = messages.sparkSession
     # event time crosses the Python boundary as epoch-micros longs — see
     # _TTL_KERNEL_SCHEMA for the rationale and the equivalence argument
     keyed = messages.withColumn("digest", message_digest(ignored)).select(
@@ -487,57 +525,14 @@ def start_ttl_dedup(
             ),
         )
     )
-
     # restore the timestamp JVM-side (stateless projection after the
     # stateful op): value-identical round trip through epoch-micros
-    deduped = deduped.select(
+    return deduped.select(
         "digest",
         "message_id",
         F.timestamp_micros("event_us").alias("event_ts"),
         "n_dropped",
     )
-
-    query = (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    return query, name
-
-
-def run_ttl_dedup_bounded(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    ttl_ms: int = 3_600_000,
-    seed_digests: DataFrame | None = None,
-    glob_filter: str | None = None,
-    ignored: tuple[str, ...] = (),
-    message_predicate: Column | None = None,
-) -> DataFrame:
-    """Bounded run of the exact-TTL dedup: start → processAllAvailable →
-    stop.
-
-    Default micro-batch trigger, NOT availableNow: with processing-time
-    timers, availableNow keeps scheduling micro-batches until every timer
-    has fired (observed: 150+ empty epochs against a 1 h TTL). The run
-    arms no timers, so ``processAllAvailable`` returns once the source is
-    drained."""
-    from .source import bounded_shuffle_width
-
-    with bounded_shuffle_width(spark):
-        query, name = start_ttl_dedup(
-            spark, source_dir, checkpoint_dir, ttl_ms, seed_digests,
-            glob_filter, ignored=ignored,
-            message_predicate=message_predicate,
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    return spark.table(name)
 
 
 # ─── JVM-only ingest-clock TTL approximation ────────────────────────────────
@@ -631,35 +626,6 @@ def dedup_stream_ingest_ttl(
             "left_anti",
         )
     return keyed.dropDuplicatesWithinWatermark(["digest"])
-
-
-def run_ttl_dedup_watermark_bounded(
-    spark: SparkSession,
-    source_dir: str,
-    ttl_ms: int = 3_600_000,
-    glob_filter: str | None = None,
-    ignored: tuple[str, ...] = (),
-) -> DataFrame:
-    """Bounded availableNow run of the watermark-TTL kernel. Unlike the
-    exact kernel there are no timers, so availableNow terminates
-    on its own. Returns the deterministic projection (digest, topic): which
-    duplicate ROW survives is engine-arbitrary under first-seen batch order,
-    exactly like ``run_stream_dedup_bounded``."""
-    from .source import bounded_shuffle_width
-
-    name = f"wm_ttl_{uuid.uuid4().hex[:8]}"
-    messages = events_message_stream(spark, source_dir, glob_filter=glob_filter)
-    deduped = dedup_stream_ingest_ttl(messages, ttl_ms, ignored)
-    with bounded_shuffle_width(spark):
-        query = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return spark.table(name).select("digest", "topic")
 
 
 #: DuckDB oracle for the BOUNDED TTL-dedup harness run over the driver's

@@ -15,7 +15,7 @@ no per-group Python anywhere.
 Shares the batch tier's span geometry verbatim
 (``operators/textops.span_frame`` — pure column expressions, so
 batch/stream parity is by construction), which is also why the bounded
-harness run has an exact SQL oracle: a single-batch availableNow run
+harness run has an exact SQL oracle: a single-batch bounded run
 forwards exactly one row per distinct span hash, and since identical
 hashes carry identical span text, the (ph, para) projection is fully
 deterministic (which DOC a surviving span came from is first-seen
@@ -25,7 +25,7 @@ convention).
 
 from __future__ import annotations
 
-import uuid
+import contextlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,15 +60,19 @@ def run_stream_span_dedup_bounded(
     glob_filter: str = "documents.parquet",
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
-    """Bounded availableNow run; returns the deterministic (ph, para)
-    projection of the surviving spans.
+    """Bounded run (drained, then stopped); returns the deterministic
+    (ph, para) projection of the surviving spans.
 
-    Sink selection follows ``run_stream_dedup_bounded``: a caller passing
+    Sink and width follow ``run_stream_dedup_bounded``: a caller passing
     ``checkpoint_dir`` (restart tests, resumable backfills) gets the
-    parquet file sink — the memory sink cannot recover from a checkpoint;
-    a one-shot run uses the memory sink (identical pipeline and state
-    semantics, none of the file-commit cost)."""
+    parquet file sink at ``<checkpoint_dir>_out`` — the memory sink cannot
+    recover from a checkpoint; a one-shot run uses the memory sink
+    (identical pipeline and state semantics, none of the file-commit cost)
+    with the span-hash state clamped to the cluster's cores (VERDICT r12
+    item 4)."""
     from ..session import apply_runtime_confs
+    from .dedup import _write_stream
+    from .source import bounded_shuffle_width
 
     apply_runtime_confs(spark)
     stream = (
@@ -77,35 +81,16 @@ def run_stream_span_dedup_bounded(
         .parquet(source_dir)
     )
     out = dedup_spans_stream(stream).select("ph", "para")
-    if checkpoint_dir is None:
-        from .source import bounded_shuffle_width
-
-        name = f"span_dedup_{uuid.uuid4().hex[:8]}"
-        with bounded_shuffle_width(spark):
-            # span-hash state shuffles at session width with no AQE —
-            # clamp a default 200-partition session to the cluster's
-            # cores (VERDICT r12 item 4); the checkpointed path below
-            # keeps its baked-in width
-            query = (
-                out.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination()
-        return spark.table(name)
-    output_dir = f"{checkpoint_dir}_out"
-    query = (
-        out.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.read.parquet(output_dir)
+    output_dir = f"{checkpoint_dir}_out" if checkpoint_dir else None
+    # the checkpointed path keeps its baked-in width
+    width = contextlib.nullcontext() if output_dir else bounded_shuffle_width(spark)
+    with width:
+        query, name = _write_stream(out, "span_dedup", output_dir, checkpoint_dir)
+        try:
+            query.processAllAvailable()
+        finally:
+            query.stop()
+    return spark.read.parquet(name) if output_dir else spark.table(name)
 
 
 ORACLES: dict[str, str] = {

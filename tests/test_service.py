@@ -144,9 +144,10 @@ def test_service_dq_gate_quarantines_and_counters_reconcile(spark, tmp_path):
     """VERDICT r5 item 8: the DQ gate composed as an ingest pre-filter —
     dirty rows are quarantined with their violated constraints and never
     reach the dedup state; forwarded + dropped + quarantined must equal the
-    input row count exactly."""
-    from pulsar_topic_deduplicator_spark.service import run_gated_service_bounded
-
+    input row count exactly. Both kernels run as the live service
+    (``start_dedup_service(dq_gate=True)``), drained and stopped; its
+    counters carry the gate's clean-ingest count, so dropped =
+    n_clean − forwarded is one formula for both."""
     src = str(tmp_path / "gated_src")
     rows = [
         (1, BASE_TS + 0 * NS, 1, "click", 1.0, '{"k": "1"}'),
@@ -164,13 +165,28 @@ def test_service_dq_gate_quarantines_and_counters_reconcile(spark, tmp_path):
         ),
     ).coalesce(1).write.mode("append").parquet(src)
 
-    out, quarantine, exact_n_clean = run_gated_service_bounded(
-        spark,
-        EngineConfig(),
-        src,
-        str(tmp_path / "ck_gated"),
-        exact_processing_ttl=True,
+    def gated(checkpoint, **kwargs):
+        svc = start_dedup_service(
+            spark,
+            EngineConfig(),
+            src,
+            str(tmp_path / checkpoint),
+            dq_gate=True,
+            **kwargs,
+        )
+        try:
+            svc.query.processAllAvailable()
+            svc.quarantine_query.processAllAvailable()
+            counters = svc.counters()
+        finally:
+            assert svc.stop()
+        return svc.output(), svc.quarantine(), counters
+
+    true_dropped = 1  # event 2, duplicate content inside the gate
+    out, quarantine, exact_counters = gated(
+        "ck_gated", exact_processing_ttl=True
     )
+    exact_n_clean = exact_counters["n_clean"]
     q = quarantine.collect()
     viol = {r["message_id"]: set(r["violations"]) for r in q}
     assert viol == {
@@ -184,13 +200,17 @@ def test_service_dq_gate_quarantines_and_counters_reconcile(spark, tmp_path):
     assert dropped == 1  # event 2, duplicate content inside the gate
     assert forwarded + dropped + len(q) == len(rows)
     assert exact_n_clean == forwarded + dropped
+    assert exact_n_clean - forwarded == true_dropped
+    assert (
+        forwarded + (exact_n_clean - forwarded) + exact_counters["n_quarantined"]
+        == len(rows)
+    )
 
     # the DEFAULT path (JVM watermark TTL kernel, round-9 flip): identical
     # gate verdicts, identical counter reconciliation — dropped derives
-    # from the observe() clean-ingest counter on this kernel
-    wm_out, wm_quarantine, n_clean = run_gated_service_bounded(
-        spark, EngineConfig(), src
-    )
+    # from the observe() clean-ingest counter on this kernel too
+    wm_out, wm_quarantine, wm_counters = gated("ck_gated_wm")
+    n_clean = wm_counters["n_clean"]
     wm_viol = {
         r["message_id"]: set(r["violations"]) for r in wm_quarantine.collect()
     }
@@ -199,6 +219,11 @@ def test_service_dq_gate_quarantines_and_counters_reconcile(spark, tmp_path):
     assert wm_forwarded == forwarded
     assert n_clean - wm_forwarded == dropped
     assert wm_forwarded + (n_clean - wm_forwarded) + len(wm_viol) == len(rows)
+    assert n_clean - wm_forwarded == true_dropped
+    assert (
+        wm_forwarded + (n_clean - wm_forwarded) + wm_counters["n_quarantined"]
+        == len(rows)
+    )
 
 
 def test_dq_gate_with_messages_override_quarantines_same_stream(spark, tmp_path):

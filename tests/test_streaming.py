@@ -13,9 +13,10 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from pulsar_topic_deduplicator_spark.config import EngineConfig
+from pulsar_topic_deduplicator_spark.service import run_dedup_service_bounded
 from pulsar_topic_deduplicator_spark.streaming.dedup import (
     run_stream_dedup_bounded,
-    run_ttl_dedup_bounded,
 )
 
 NS = 1_000_000_000
@@ -95,8 +96,12 @@ def test_checkpoint_restart_keeps_state(spark, source_dir, tmp_path):
 def test_ttl_dedup_exact_path(spark, source_dir, tmp_path):
     """The exact kernel forwards each digest's first occurrence and counts
     its co-batched duplicates in n_dropped."""
-    result = run_ttl_dedup_bounded(
-        spark, source_dir, checkpoint_dir=str(tmp_path / "ckpt_ttl")
+    result = run_dedup_service_bounded(
+        spark,
+        EngineConfig(),
+        source_dir,
+        str(tmp_path / "ckpt_ttl"),
+        exact_processing_ttl=True,
     )
     out = {r["message_id"]: r["n_dropped"] for r in result.collect()}
     assert set(out) == {"1", "2", "4"}
@@ -126,11 +131,20 @@ def test_ttl_dedup_warmup_seed(spark, source_dir, tmp_path):
         .withColumn("digest", message_digest())
         .select("digest")
     )
-    result = run_ttl_dedup_bounded(
+    # ...as the service's own prior output: the warm-up scan keeps rows
+    # inside the cache window before now_ts and seeds their origin digests
+    prior = seed.select(
+        F.lit("2024-01-02 00:00:00").cast("timestamp").alias("publish_ts"),
+        F.lit(None).cast("timestamp").alias("event_ts"),
+        F.to_json(F.array("digest")).alias("origin"),
+    )
+    result = run_dedup_service_bounded(
         spark,
+        EngineConfig(),
         source_dir,
-        checkpoint_dir=str(tmp_path / "ckpt_seed"),
-        seed_digests=seed,
+        str(tmp_path / "ckpt_seed"),
+        prior_output=prior,
+        exact_processing_ttl=True,
     )
     forwarded = {
         r["message_id"] for r in result.collect() if r["message_id"] is not None
@@ -157,8 +171,12 @@ def test_ttl_first_wins_across_arrow_chunks(spark, tmp_path):
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1")
     try:
-        result = run_ttl_dedup_bounded(
-            spark, src, checkpoint_dir=str(tmp_path / "ckpt_chunks")
+        result = run_dedup_service_bounded(
+            spark,
+            EngineConfig(),
+            src,
+            str(tmp_path / "ckpt_chunks"),
+            exact_processing_ttl=True,
         )
         out = [r for r in result.collect() if r["message_id"] is not None]
     finally:
@@ -423,12 +441,16 @@ def test_stream_quality_gate_matches_batch_and_counts(spark, sf_dir):
 def test_watermark_ttl_bounded_matches_exact_kernel(spark, source_dir, tmp_path):
     """Third kernel (JVM-only watermark TTL): a bounded single-batch run
     must keep exactly the digest set the exact GroupState kernel keeps."""
-    from pulsar_topic_deduplicator_spark.streaming.dedup import (
-        run_ttl_dedup_watermark_bounded,
+    exact = run_dedup_service_bounded(
+        spark,
+        EngineConfig(),
+        source_dir,
+        str(tmp_path / "ck_exact"),
+        exact_processing_ttl=True,
     )
-
-    exact = run_ttl_dedup_bounded(spark, source_dir, str(tmp_path / "ck_exact"))
-    wm = run_ttl_dedup_watermark_bounded(spark, source_dir)
+    wm = run_dedup_service_bounded(
+        spark, EngineConfig(), source_dir, str(tmp_path / "ck_wm")
+    )
     assert sorted(r["digest"] for r in wm.collect()) == sorted(
         r["digest"]
         for r in exact.filter(F.col("message_id").isNotNull()).collect()
