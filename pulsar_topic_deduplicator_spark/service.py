@@ -35,6 +35,8 @@ tested there).
 
 from __future__ import annotations
 
+import shutil
+import tempfile
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -119,7 +121,8 @@ class DedupService:
     ``health()`` is the ``/healthz`` mapping (204/500 — wire to any HTTP
     thread), ``counters()`` the 60 s forwarded/dropped telemetry analog,
     ``stop()`` the ordered teardown (final micro-batch commit = producer
-    flush), then releases the warm-up seed set the service owns."""
+    flush), then releases the warm-up seed set the service owns and, on
+    the exact kernel, the directory its seed messages were written to."""
 
     spark: SparkSession
     query: StreamingQuery
@@ -128,6 +131,8 @@ class DedupService:
     quarantine_table: str | None = None
     #: the materialized warm-up seed set (``build_seed_set``), or None
     seeds: DataFrame | None = None
+    #: the exact kernel's seed-message source directory, or None
+    seed_dir: str | None = None
     #: set by the signal-handler teardown BEFORE the query stops, so the
     #: liveness probe fails immediately on shutdown start (the reference's
     #: ``setHealthOk(false)`` is its first teardown step, src/index.ts:34-44)
@@ -173,10 +178,16 @@ class DedupService:
             if self.quarantine_query is not None:
                 ok = graceful_stop(self.quarantine_query, timeout_seconds) and ok
         finally:
-            if self.seeds is not None:
-                self.seeds.unpersist()
-                self.seeds = None
+            self._release()
         return ok
+
+    def _release(self) -> None:
+        if self.seeds is not None:
+            self.seeds.unpersist()
+            self.seeds = None
+        if self.seed_dir is not None:
+            shutil.rmtree(self.seed_dir, ignore_errors=True)
+            self.seed_dir = None
 
     def install_signal_handlers(
         self,
@@ -375,7 +386,7 @@ def _start_service(
     gets the parquet file sink (``_write_stream``), the restartable shape
     ``run_dedup_service_bounded`` offers; otherwise a memory table."""
     seeds = build_seed_set(prior_output, config, now_ts)
-    q_query = q_name = None
+    svc = DedupService(spark=spark, query=None, output_table=None, seeds=seeds)
     try:
         if messages is None:
             messages = events_message_stream(
@@ -390,8 +401,14 @@ def _start_service(
                 F.size(message_dq_violations()) == 0
             ).observe("gate", F.count(F.lit(1)).alias("n_clean"))
         if exact_processing_ttl:
+            if seeds is not None:
+                svc.seed_dir = tempfile.mkdtemp(prefix="seed_")
             deduped = _exact_ttl_dedup(
-                ingest, config.dedup_window_ms, seeds, config.ignored_properties
+                ingest,
+                config.dedup_window_ms,
+                seeds,
+                config.ignored_properties,
+                seed_dir=svc.seed_dir,
             )
         else:
             deduped = dedup_stream_ingest_ttl(
@@ -408,7 +425,7 @@ def _start_service(
         old = spark.conf.get(key, None)
         spark.conf.set(key, "false")
         try:
-            query, name = _write_stream(
+            svc.query, svc.output_table = _write_stream(
                 deduped, "dedup", output_dir, checkpoint_dir
             )
         finally:
@@ -421,24 +438,16 @@ def _start_service(
             # their violated-constraint list — zero state, append mode; at
             # scale a second reader on the same topic writing a dead-letter
             # topic, not a branch inside the stateful query
-            q_query, q_name = _write_stream(
+            svc.quarantine_query, svc.quarantine_table = _write_stream(
                 messages.withColumn(
                     "violations", message_dq_violations()
                 ).filter(F.size("violations") > 0),
                 "quarantine",
             )
     except BaseException:
-        if seeds is not None:
-            seeds.unpersist()
+        svc._release()
         raise
-    return DedupService(
-        spark=spark,
-        query=query,
-        output_table=name,
-        quarantine_query=q_query,
-        quarantine_table=q_name,
-        seeds=seeds,
-    )
+    return svc
 
 
 def run_dedup_service_bounded(

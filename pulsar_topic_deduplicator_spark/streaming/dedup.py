@@ -259,11 +259,21 @@ def _make_bucketed_ttl_kernel(ttl_ms: int, use_timers: bool = False):
     the group count: tests/test_round14_opt.py replays batches against a
     one-digest-per-group reference model (tests/ttl_reference.py).
 
-    Cost model: ApplyInPandasWithState pays a fixed ~100 µs per GROUP
-    (Arrow↔pandas conversion + kernel invocation + state round trip), and
-    crypto digests give ~1 group per row. Grouping by key group pays that
-    fixed cost per group (fewer, larger Python calls) while the
-    per-digest work inside is numpy/pandas over the whole group.
+    Cost model: ApplyInPandasWithState makes one kernel call per GROUP,
+    each with its own Arrow↔pandas conversion and state round trip, and
+    keyed by digest, crypto digests would give ~1 group per row. Grouping
+    by key group pays that per-call cost per group (fewer, larger Python
+    calls) while the per-digest work inside is numpy/pandas over the
+    whole group. Measured on the warm service (``perfbench`` ``exact_ttl``:
+    arrivals of 10k ``replica_fanout`` messages, 4 cores, ``local[3]``,
+    39 state tasks over 13 micro-batches, ``session.get_spark``): each
+    micro-batch runs 3 state tasks of ~21 groups; a state task runs a
+    median 308 ms, of which 84 ms is JVM CPU and 76 ms the kernel body
+    (~3.5 ms per call). Much of the rest is the worker's per-group
+    conversion; the task also parks ~20 ms creating its state checksum
+    file, and the batch's state tasks wait while one of them compiles the
+    two state (de)serializer classes, which are compiled again every
+    micro-batch.
 
     State GC: the group's state map is round-tripped whole on every batch
     that touches the group, so dead entries cost a round trip each. Two
@@ -435,7 +445,9 @@ def start_ttl_dedup(
 
     ``ignored`` is the reference's ``DEDUPLICATION_IGNORED_PROPERTIES``
     projection (op #4) applied to the hash input; ``seed_digests`` is the
-    warm-up seed set (see ``_exact_ttl_dedup``).
+    warm-up seed set (see ``_exact_ttl_dedup``), written as seed messages
+    beside the checkpoint, to ``<checkpoint_dir>_seeds``, which each start
+    on that checkpoint overwrites.
     """
     if messages is None:
         messages = events_message_stream(
@@ -447,7 +459,12 @@ def start_ttl_dedup(
     if message_predicate is not None:
         messages = messages.filter(message_predicate)
     deduped = _exact_ttl_dedup(
-        messages, ttl_ms, seed_digests, ignored, use_timers=use_timers
+        messages,
+        ttl_ms,
+        seed_digests,
+        ignored,
+        use_timers=use_timers,
+        seed_dir=f"{checkpoint_dir.rstrip('/')}_seeds",
     )
     return _write_stream(deduped, "ttl_dedup", checkpoint_dir=checkpoint_dir)
 
@@ -458,6 +475,7 @@ def _exact_ttl_dedup(
     seed_digests: DataFrame | None = None,
     ignored: tuple[str, ...] = (),
     use_timers: bool = False,
+    seed_dir: str | None = None,
 ) -> DataFrame:
     """The exact-TTL kernel over a message-schema stream, as a frame of
     ``digest, message_id, event_ts, n_dropped`` rows
@@ -471,7 +489,10 @@ def _exact_ttl_dedup(
     their live occurrences are suppressed. They are written as seed
     *messages* into a side source and streamed through the same dedup
     kernel — exactly how the reference seeds its cache by re-reading its
-    own output topic (``src/cacheBuilding.ts:141-153``)."""
+    own output topic (``src/cacheBuilding.ts:141-153``). That side source
+    is the directory ``seed_dir`` (overwritten), required with
+    ``seed_digests``; the caller owns it and removes it once the query has
+    stopped."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     spark = messages.sparkSession
@@ -483,7 +504,6 @@ def _exact_ttl_dedup(
     if seed_digests is not None:
         from ..sources.retry import with_warmup_retries
 
-        seed_dir = tempfile.mkdtemp(f"seed_{uuid.uuid4().hex[:8]}")
         # the warm-up scan may race a concurrent writer's commit on the
         # output table; retry with the reference's backoff policy
         # (src/cacheBuilding.ts:90-131) rather than failing startup on
@@ -607,8 +627,9 @@ def dedup_stream_ingest_ttl(
     DEFAULT kernel because it keeps dedup in the JVM: the exact GroupState
     kernel ships every row through a Python worker over Arrow, and on the
     same ``replica_fanout`` traffic ``perfbench/run.py`` measures it at
-    8.2k msg/s (arrival p50 1.23 s) against this kernel's 15.3k msg/s
-    (0.66 s) — medians of 4 seeds, 4 cores, ``local[3]``. Run the
+    13.8k msg/s (arrival p50 0.71 s) against this kernel's 20.1k msg/s
+    (0.50 s) — medians of 4 seeds, 4 cores, ``local[3]``, with the
+    ``session.get_spark`` worker daemon. Run the
     GroupState kernel only when expiry must be exact to the millisecond on
     the processing clock."""
     ingest = (

@@ -5,6 +5,9 @@ counters / graceful stop."""
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 import pandas as pd
 
 from pyspark.sql import functions as F
@@ -115,6 +118,44 @@ def test_service_end_to_end_with_warmup_and_ignored_props(spark, tmp_path):
     wm_ids = {r["message_id"] for r in wm_rows}
     assert len(wm_ids) == 2 and "3" in wm_ids and wm_ids & {"1", "2"}
     assert "4" not in wm_ids  # warm-up-seeded digest suppressed
+
+
+def test_exact_service_removes_its_seed_source(spark, tmp_path, monkeypatch):
+    """The exact kernel writes its warm-up seeds as a side source; the
+    service owns that directory and removes it when it stops, so each
+    start with a prior output leaves nothing behind."""
+    from pulsar_topic_deduplicator_spark.sources.io import messages_view
+    from pulsar_topic_deduplicator_spark.streaming.dedup import message_digest
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    base = str(tmp_path / "seed_src")
+    content = (3, "purchase", 3.0, '{"k": "3"}')
+    _write_events(spark, f"{base}/events.parquet", [(4, BASE_TS, *content)])
+    prior = messages_view(spark, base).withColumn(
+        "digest", message_digest()
+    ).select("publish_ts", "event_ts", F.to_json(F.array("digest")).alias("origin"))
+    src = str(tmp_path / "live_src")
+    _write_events(
+        spark,
+        src,
+        [
+            (7, BASE_TS + 60 * NS, *content),  # seeded re-delivery
+            (8, BASE_TS + 120 * NS, 5, "view", 5.0, '{"k": "5"}'),
+        ],
+    )
+    out = run_dedup_service_bounded(
+        spark,
+        EngineConfig.from_env({"CACHE_WINDOW_IN_SECONDS": "172800"}),
+        src,
+        str(tmp_path / "seed_ckpt"),
+        prior_output=prior,
+        now_ts="2024-01-01 01:00:00",
+        exact_processing_ttl=True,
+    )
+    assert {r["message_id"] for r in out.collect() if r["message_id"]} == {"8"}
+    assert os.listdir(tmp) == []
 
 
 def test_service_lifecycle_health_counters_stop(spark, tmp_path):
