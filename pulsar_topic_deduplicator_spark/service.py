@@ -24,8 +24,9 @@ the engine's pieces:
 Two entry points: ``start_dedup_service`` (the live service) and
 ``run_dedup_service_bounded`` (the same composition drained and stopped —
 tests, backfills, the registry's bounded entries). A DQ-gated bounded
-run is ``start_dedup_service(dq_gate=True)`` drained the same way:
-``processAllAvailable`` on each query, then ``stop()``.
+run is ``start_dedup_service(dq_gate=True)`` drained the same way, by
+``streaming.source.drain``: ``processAllAvailable`` on each query, then
+``stop()``.
 
 The live broker line is the one piece the sandbox cannot exercise: swap the
 file source for ``.format("pulsar"|"kafka")`` + the option maps in
@@ -46,13 +47,9 @@ from pyspark.sql.streaming import StreamingQuery
 from .config import EngineConfig
 from .operators.lineage import extract_origin_digests, message_dq_violations
 from .sources.retry import with_warmup_retries
-from .streaming.dedup import (
-    _exact_ttl_dedup,
-    _write_stream,
-    dedup_stream_ingest_ttl,
-)
+from .streaming.dedup import _exact_ttl_dedup, dedup_stream_ingest_ttl
 from .streaming.ops import graceful_stop, health_status, observed_counters
-from .streaming.source import bounded_shuffle_width, events_message_stream
+from .streaming.source import _write_stream, drain, events_message_stream
 
 
 def warmup_seed_digests(
@@ -137,6 +134,11 @@ class DedupService:
     #: liveness probe fails immediately on shutdown start (the reference's
     #: ``setHealthOk(false)`` is its first teardown step, src/index.ts:34-44)
     _stopping: bool = False
+
+    @property
+    def queries(self) -> list[StreamingQuery]:
+        """The running queries, dedup first — what ``source.drain`` drains."""
+        return [q for q in (self.query, self.quarantine_query) if q is not None]
 
     def health(self) -> tuple[int, str]:
         if self._stopping:
@@ -472,12 +474,14 @@ def run_dedup_service_bounded(
     cumulative sink directory. The warm-up seed set is built once before
     the run and released after it.
 
-    The state width is clamped to the cluster's cores
-    (``bounded_shuffle_width``): streaming plans never AQE-coalesce, so a
-    default 200-partition session would pay 200 state-store commits per
-    batch for a bounded run."""
-    with bounded_shuffle_width(spark):
-        svc = _start_service(
+    The run ends in ``source.drain``, which clamps the state width to the
+    cluster's cores (``bounded_shuffle_width``): streaming plans never
+    AQE-coalesce, so a default 200-partition session would pay 200
+    state-store commits per batch for a bounded run. ``stop()`` releases
+    the seeds; the returned frame reads the sink, never the seeds."""
+    svc = drain(
+        spark,
+        lambda: _start_service(
             spark,
             config,
             source_dir,
@@ -490,12 +494,8 @@ def run_dedup_service_bounded(
             messages=None,
             max_files_per_trigger=None,
             output_dir=output_dir,
-        )
-        try:
-            svc.query.processAllAvailable()
-        finally:
-            # the returned frame reads the sink, never the seeds
-            svc.stop()
+        ),
+    )
     if output_dir:
         return spark.read.parquet(output_dir)
     return svc.output()

@@ -18,15 +18,12 @@ stream-static join without code changes (drop the ``F.broadcast`` hint).
 
 from __future__ import annotations
 
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.asof import ORACLES as ASOF_ORACLES
 from ..operators.asof import interval_join, purchase_windows
-from .source import events_raw_stream
+from .source import events_raw_stream, run_bounded
 
 
 def attribute_stream(points: DataFrame, windows: DataFrame) -> DataFrame:
@@ -54,21 +51,10 @@ def run_stream_attribution_bounded(
     spark: SparkSession, source_dir: str, glob_filter: str | None = None
 ) -> DataFrame:
     """Bounded harness: static windows from the batch scan, live events
-    from the file stream, availableNow single-batch run."""
+    from the file stream, one drained single-batch run."""
     windows = purchase_windows(spark, source_dir)
     points = events_raw_stream(spark, source_dir, glob_filter=glob_filter)
-    name = f"attrib_{uuid.uuid4().hex[:8]}"
-    query = (
-        attribute_stream(points, windows)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(f"ck_{name}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
+    return run_bounded(attribute_stream(points, windows), "attrib")
 
 
 #: exact oracle — BY REFERENCE the batch twin's SQL (`asof.ORACLES`): the

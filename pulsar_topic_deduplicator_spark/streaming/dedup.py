@@ -23,8 +23,9 @@ event-time ``dedup_stream`` pipeline, drained and stopped) and
 ``start_ttl_dedup`` (the exact kernel as a live query; the only way to
 arm its GC timers). The service (``service.py``) composes both kernels
 from the frame-returning functions here. Every query in this dataflow
-is written by ``_write_stream`` and a bounded run drains it with
-``processAllAvailable`` then ``stop``.
+is written by ``source._write_stream``, the package's one writer, and a
+bounded run ends in ``source.drain``: ``processAllAvailable`` then
+``stop``.
 
 Scale: state is hash-partitioned by digest across executors — uniformly
 distributed keys (crypto hash), no skew. The default state store is
@@ -37,9 +38,6 @@ both, tests/test_state_store_rocksdb.py).
 
 from __future__ import annotations
 
-import contextlib
-import tempfile
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
@@ -48,7 +46,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.canonical import canonical_json, filter_ignored_keys
-from .source import events_message_stream
+from .source import _write_stream, events_message_stream, run_bounded
 
 DEFAULT_DEDUP_WINDOW = "1 hour"  # reference default TTL 3600 s (config.ts:133)
 
@@ -105,30 +103,6 @@ def dedup_stream(
     )
 
 
-def _write_stream(
-    frame: DataFrame,
-    prefix: str,
-    output_dir: str | None = None,
-    checkpoint_dir: str | None = None,
-):
-    """The dataflow's sink: start ``frame`` as an append query and return
-    ``(query, name)``. A memory table named ``<prefix>_<8 hex>`` unless
-    ``output_dir`` is given; then the parquet file sink at that directory,
-    which ``name`` is — the restartable shape, since a memory sink refuses
-    to recover from a checkpoint. Without ``checkpoint_dir`` Spark uses a
-    temporary checkpoint (memory sinks only)."""
-    writer = frame.writeStream.outputMode("append")
-    if output_dir:
-        name = output_dir
-        writer = writer.format("parquet").option("path", output_dir)
-    else:
-        name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-        writer = writer.format("memory").queryName(name)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start(), name
-
-
 def run_stream_dedup_bounded(
     spark: SparkSession,
     source_dir: str,
@@ -141,52 +115,32 @@ def run_stream_dedup_bounded(
     stop, then return the cumulative output as a batch DataFrame.
 
     Sink selection: a caller that passes ``checkpoint_dir`` (restart tests,
-    resumable backfills) gets the parquet file sink — the memory sink
-    cannot recover from a checkpoint. A one-shot run (no checkpoint_dir)
-    uses the memory sink: identical pipeline and state semantics, none of
-    the file-commit cost (measured: 7.6 s → 3.2 s at sf0.1 — the parquet
-    sink was over half the entry's wall time and proves nothing the
-    restart tests don't already pin).
+    resumable backfills) gets the parquet file sink at ``output_dir``, by
+    default ``<checkpoint_dir>_out`` — the memory sink cannot recover from
+    a checkpoint. ``output_dir`` alone keeps its checkpoint beside it, at
+    ``<output_dir>_ckpt``, so a second run on it resumes. A one-shot run
+    (neither) uses the memory sink: identical pipeline and state
+    semantics, none of the file-commit cost (measured: 7.6 s → 3.2 s at
+    sf0.1 — the parquet sink was over half the entry's wall time and
+    proves nothing the restart tests don't already pin). The run goes
+    through ``source.run_bounded``.
 
     (The driver checks the deterministic projection of this output —
     digest/topic/canonical properties — against BOUNDED_STREAM_DEDUP_ORACLE;
     which duplicate ROW survives is engine-arbitrary, so message_id/event_ts
     stay outside the value comparison. Batch parity of the same semantics is
     ``dedup_exact_keep_first``.)"""
-    from .source import bounded_shuffle_width
-
     messages = events_message_stream(spark, source_dir, glob_filter=glob_filter)
     deduped = dedup_stream(messages).select(
         "message_id", "topic", "digest", "event_ts", "properties"
     )
-    if checkpoint_dir is None and output_dir is None:
-        # digest-keyed state shuffles at the session width, which streaming
-        # plans never AQE-coalesce: a default 200-partition session pays
-        # 200 state-store commits per batch regardless of volume (VERDICT
-        # r12 item 4). The helper clamps to min(cluster cores, configured
-        # width) — it never narrows below the cluster's parallelism.
-        width = bounded_shuffle_width(spark)
-    else:
-        # no width pin on the checkpointed path — not needed for safety
-        # (Spark persists shuffle.partitions in the offset log and restores
-        # it on resume), and restart tests keep fresh-vs-resumed runs on
-        # the session's own configuration end to end
-        width = contextlib.nullcontext()
-        checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(
-            f"ckpt_{uuid.uuid4().hex[:8]}"
-        )
+    if checkpoint_dir:
         # output co-located with the checkpoint so a restart appends to the
         # same sink — mirroring the reference's single output topic
         output_dir = output_dir or f"{checkpoint_dir}_out"
-    with width:
-        query, name = _write_stream(
-            deduped, "stream_dedup", output_dir, checkpoint_dir
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    return spark.read.parquet(name) if output_dir else spark.table(name)
+    elif output_dir:
+        checkpoint_dir = f"{output_dir.rstrip('/')}_ckpt"
+    return run_bounded(deduped, "stream_dedup", output_dir, checkpoint_dir)
 
 
 # ─── exact-TTL path ─────────────────────────────────────────────────────────
@@ -401,7 +355,6 @@ def start_ttl_dedup(
     seed_digests: DataFrame | None = None,
     glob_filter: str | None = None,
     ignored: tuple[str, ...] = (),
-    message_predicate: Column | None = None,
     messages: DataFrame | None = None,
     max_files_per_trigger: int | None = None,
     use_timers: bool = False,
@@ -433,11 +386,6 @@ def start_ttl_dedup(
     slices instead of one executor-memory-sized batch). Dedup output is
     invariant to the batch split — pinned in tests/test_admission.py.
 
-    ``message_predicate`` is an optional stateless admission gate applied to
-    the message stream BEFORE hashing/state (rows failing it never reach
-    the dedup state, mirroring the reference's per-message validation
-    ahead of the cache check, ``src/deduplication.ts:99-106``).
-
     ``messages`` overrides the transport: any streaming DataFrame in the
     message schema (message_id, event_ts + the digest inputs) runs the
     identical kernel — the production ``.format("pulsar"|"kafka")`` swap
@@ -456,8 +404,6 @@ def start_ttl_dedup(
             glob_filter=glob_filter,
             max_files_per_trigger=max_files_per_trigger,
         )
-    if message_predicate is not None:
-        messages = messages.filter(message_predicate)
     deduped = _exact_ttl_dedup(
         messages,
         ttl_ms,

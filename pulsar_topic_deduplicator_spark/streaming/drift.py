@@ -12,21 +12,18 @@ at any corpus size — on each read of the monitor. Complete output mode is
 correct AND cheap here precisely because the aggregate result is tiny;
 the raw stream is never re-scanned.
 
-Bounded-run determinism: availableNow over the fixed source files drains
-everything, so the final snapshot equals the batch aggregate exactly and
-the entry shares the batch entry's DuckDB oracle verbatim.
+Bounded-run determinism: the drained run over the fixed source files
+processes everything, so the final snapshot equals the batch aggregate
+exactly and the entry shares the batch entry's DuckDB oracle verbatim.
 """
 
 from __future__ import annotations
-
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.changepoint import cusum_flags
-from .source import bounded_shuffle_width, events_raw_stream
+from .source import events_raw_stream, run_bounded
 
 
 def run_stream_drift_bounded(
@@ -36,24 +33,11 @@ def run_stream_drift_bounded(
     (event_type, hour) count aggregate (complete mode — the bucket table
     IS the state, types × hours rows), then apply the CUSUM kernel to the
     drained snapshot."""
-    name = f"drift_{uuid.uuid4().hex[:8]}"
     ev = events_raw_stream(spark, source_dir, glob_filter=glob_filter)
     counts = ev.groupBy(
         F.window("ts", "1 hour").alias("w"), "event_type"
     ).agg(F.count(F.lit(1)).alias("n_events"))
-    with bounded_shuffle_width(spark):
-        # types × hours state is KB-sized — don't pay a 200-partition
-        # state store per batch on a default session (VERDICT r12)
-        query = (
-            counts.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", tempfile.mkdtemp(f"ck_{name}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    snap = spark.table(name).select(
+    snap = run_bounded(counts, "drift", output_mode="complete").select(
         "event_type",
         F.unix_micros(F.col("w.start")).alias("bucket_us"),
         "n_events",
@@ -64,7 +48,7 @@ def run_stream_drift_bounded(
 def stream_drift_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver entry: the drift monitor over the streamed bucket table —
     bit-identical to the batch `cusum_drift_flags` (shared oracle) because
-    the drained availableNow count aggregate equals the batch counts."""
+    the drained count aggregate equals the batch counts."""
     return run_stream_drift_bounded(
         spark, sf_dir, glob_filter="events.parquet"
     )
@@ -101,12 +85,11 @@ def run_stream_ks_drift_bounded(
     Structured Streaming owns the only corpus-sized work; the KS
     refinement reads the types × values × days snapshot — bounded by
     DISTINCT triples, not event volume — on each evaluation. Counts are
-    additive, so the availableNow-drained snapshot equals the batch
-    aggregate exactly and the entry shares the batch oracle verbatim
+    additive, so the drained snapshot equals the batch aggregate
+    exactly and the entry shares the batch oracle verbatim
     (multi-batch == single-batch pinned in tests/test_streaming_ks.py)."""
     from ..operators.changepoint import _US_PER_DAY, ks_from_day_counts
 
-    name = f"ksdrift_{uuid.uuid4().hex[:8]}"
     ev = events_raw_stream(
         spark, source_dir, max_files_per_trigger, glob_filter
     )
@@ -115,17 +98,5 @@ def run_stream_ks_drift_bounded(
         "value",
         F.expr(f"unix_micros(ts) div {_US_PER_DAY}").alias("day"),
     ).agg(F.count(F.lit(1)).alias("n"))
-    with bounded_shuffle_width(spark):
-        # the (type, value, day) state is bounded by DISTINCT triples —
-        # a plain 200-partition session otherwise burns 200/400-task
-        # stages per batch for a 5-row readout (VERDICT r12 item 3)
-        query = (
-            counts.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", tempfile.mkdtemp(f"ck_{name}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return ks_from_day_counts(spark.table(name))
+    snap = run_bounded(counts, "ksdrift", output_mode="complete")
+    return ks_from_day_counts(snap)

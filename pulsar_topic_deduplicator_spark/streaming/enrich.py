@@ -18,14 +18,11 @@ drop decision.
 
 from __future__ import annotations
 
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .dedup import message_digest
-from .source import events_message_stream
+from .source import events_message_stream, run_bounded
 
 
 def flag_warmup_hits(messages: DataFrame, warmup_digests: DataFrame) -> DataFrame:
@@ -67,21 +64,10 @@ def run_warmup_flagged_bounded(
     spark: SparkSession, source_dir: str, glob_filter: str | None = None
 ) -> DataFrame:
     """Bounded harness run: warm-up digests from the batch bootstrap scan,
-    then the live stream flagged against them with availableNow."""
+    then the live stream flagged against them in one drained run."""
     warmup = warmup_message_digests(spark, source_dir)
     messages = events_message_stream(spark, source_dir, glob_filter=glob_filter)
-    name = f"warm_flag_{uuid.uuid4().hex[:8]}"
-    query = (
-        flag_warmup_hits(messages, warmup)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(f"ck_{name}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
+    return run_bounded(flag_warmup_hits(messages, warmup), "warm_flag")
 
 
 #: DuckDB oracle for the bounded warm-up-flag harness: no aggregation and no

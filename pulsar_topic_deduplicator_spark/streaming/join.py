@@ -10,7 +10,7 @@ to bound the join state: a buffered event can be evicted once the
 watermark passes ``ts + window``, so state is O(in-flight window), not
 O(stream history), at any scale.
 
-The bounded availableNow run processes everything in one micro-batch, so
+The bounded drained run processes everything in one micro-batch, so
 the inner join emits exactly the predicate's matches — deterministically —
 which is why this harness has an EXACT SQL oracle (the half-open
 range-join SQL shared in spirit with the batch `interval_join`, here with
@@ -19,14 +19,11 @@ the stream-stream condition's bounds).
 
 from __future__ import annotations
 
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.asof import ATTRIB_WINDOW_US
-from .source import events_raw_stream
+from .source import events_raw_stream, run_bounded
 
 
 #: tolerated event LATENESS on each stream, in minutes. Independent of the
@@ -76,23 +73,7 @@ def run_stream_stream_attribution_bounded(
         "event_id", "user_id", "ts", "event_type", "window_id",
         F.col("p_ts").alias("w_start"),
     )
-    from .source import bounded_shuffle_width
-
-    name = f"ss_attrib_{uuid.uuid4().hex[:8]}"
-    with bounded_shuffle_width(spark):
-        # the stream-stream join state shuffles both sides at session
-        # width with no AQE — clamp a default 200-partition session to
-        # the cluster's cores (VERDICT r12 item 4)
-        query = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(f"ck_{name}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return spark.table(name)
+    return run_bounded(joined, "ss_attrib")
 
 
 #: exact oracle: single-batch inner stream-stream join = the batch range

@@ -14,7 +14,7 @@ fold writes ``v = last committed version + 1``, where the last committed
 version is discovered from the dirs on disk at query start (stream batch
 ids are NOT used as versions — they can skip across resumed runs). A
 resumed run (same checkpoint: only NEW files process) folds on top of the
-prior run's tail; a re-run with a FRESH checkpoint (availableNow replays
+prior run's tail; a re-run with a FRESH checkpoint (the drain replays
 everything) re-folds replayed rows into the old snapshot; and a
 failure-replay folds its rows a second time — all three are harmless
 because latest-wins compaction is IDEMPOTENT (argmax of a union with
@@ -33,13 +33,11 @@ out of order.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.cdc import keep_latest
-from .source import events_raw_stream
+from .source import events_raw_stream, run_bounded
 
 #: snapshot ordering: event time, tie-broken by the unique event id
 _ORDER = ["ts", "event_id"]
@@ -78,7 +76,6 @@ def run_stream_latest_state_bounded(
         spark, source_dir, max_files_per_trigger, glob_filter
     )
     snap_root = f"{work_dir}/snapshot"
-    ckpt_dir = checkpoint_dir or f"{work_dir}/ckpt_{uuid.uuid4().hex[:8]}"
     prior_versions = _existing_versions(spark, snap_root)
     latest: dict[str, int] = {"v": prior_versions[-1] if prior_versions else -1}
 
@@ -99,13 +96,7 @@ def run_stream_latest_state_bounded(
         )
         latest["v"] = v
 
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_bounded(stream, checkpoint_dir=checkpoint_dir, foreach_batch=process)
     if latest["v"] < 0:  # empty source, no prior state: schema-only frame
         return keep_latest(
             spark.createDataFrame([], stream.schema), _KEY, _ORDER

@@ -30,8 +30,6 @@ pair-drop.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -44,6 +42,7 @@ from ..operators.neardup import (
     _signature_wide_from,
     band_rows,
 )
+from .source import file_stream, run_bounded
 
 #: raw schema of documents.parquet for the file-source stream
 DOCS_RAW_SCHEMA = T.StructType(
@@ -153,15 +152,12 @@ def run_stream_near_dup_bounded(
             "cap and a fresh checkpoint (got max_files_per_trigger="
             f"{max_files_per_trigger!r}, checkpoint_dir={checkpoint_dir!r})"
         )
-    from ..session import apply_runtime_confs
-
-    apply_runtime_confs(spark)
     state_dir = f"{work_dir}/buckets"
     out_dir = f"{work_dir}/kept"
-    # default: fresh checkpoint per call (each harness run is independent);
-    # pass checkpoint_dir to resume — a restart replays nothing, processes
-    # only NEW files, and batchId-named output dirs keep replays idempotent
-    ckpt_dir = checkpoint_dir or f"{work_dir}/ckpt_{uuid.uuid4().hex[:8]}"
+    # default: Spark's temporary checkpoint per call (each harness run is
+    # independent); pass checkpoint_dir to resume — a restart replays
+    # nothing, processes only NEW files, and batchId-named output dirs
+    # keep replays idempotent
     # a FRESH checkpoint restarts batch ids at 0, so stale bucket state
     # from a prior run under the same work_dir would wrongly suppress
     # every replayed document — refuse loudly instead of silently
@@ -175,10 +171,9 @@ def run_stream_near_dup_bounded(
                 "checkpoint_dir to resume it, or use a fresh work_dir"
             )
 
-    reader = spark.readStream.schema(DOCS_RAW_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.option("pathGlobFilter", glob_filter).parquet(source_dir)
+    stream = file_stream(
+        spark, source_dir, DOCS_RAW_SCHEMA, max_files_per_trigger, glob_filter
+    )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
@@ -236,19 +231,7 @@ def run_stream_near_dup_bounded(
         finally:
             bands.unpersist()
 
-    from .source import bounded_shuffle_width
-
-    with bounded_shuffle_width(spark):
-        # the per-batch band window / anti-join / distinct shuffles run at
-        # session width with no AQE — clamp a default 200-partition
-        # session to the cluster's cores (VERDICT r12 item 4)
-        query = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    run_bounded(stream, checkpoint_dir=checkpoint_dir, foreach_batch=process)
     if assert_single_batch:
         # cheap FS check: the metrics sink writes one batch=N dir per
         # micro-batch, so a single-batch run leaves exactly {batch=0}
@@ -296,7 +279,7 @@ def stream_near_dup_contracts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     * ``stream_equals_batch`` — the bounded single-batch run must equal the
       batch greedy filter on the same corpus (bounded harness runs are
-      deterministic: one source file → one availableNow micro-batch);
+      deterministic: one source file → one drained micro-batch);
     * ``greedy_invariant_ok`` — every kept doc owns (is the minimum doc_id
       of) every LSH bucket it occupies;
     * ``no_kept_collision`` — no two kept docs share any bucket (first-wins
@@ -381,7 +364,7 @@ def stream_near_dup_contracts(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: set is "greedy order-dependent"; it is not FOR THE BOUNDED RUN: the
 #: within-batch rule was deliberately designed batch-expressible (module
 #: docstring — bucket owner = min doc_id, no chained re-admission), the
-#: bounded harness drains ONE availableNow micro-batch (single source
+#: bounded harness drains ONE data micro-batch (single source
 #: file, no trigger cap) so no cross-batch state exists, and the banding
 #: is integer-exact (stable_uint60 MinHash — the proven
 #: ``near_dup_minhash`` CTE fragments). kept = every doc with NO

@@ -13,13 +13,12 @@ every passing row exactly once).
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.textops import gopher_pass
 from .neardup_stream import DOCS_RAW_SCHEMA
+from .source import file_stream, run_bounded
 
 
 def quality_gate_stream(docs_stream: DataFrame) -> DataFrame:
@@ -35,28 +34,13 @@ def run_quality_gate_bounded(
     source_dir: str,
     glob_filter: str = "documents.parquet",
 ) -> DataFrame:
-    """Bounded availableNow run of the streaming gate; returns the passing
+    """Bounded drained run of the streaming gate; returns the passing
     documents (deterministic: stateless filter, append mode)."""
-    from ..session import apply_runtime_confs
-
-    apply_runtime_confs(spark)
-    name = f"quality_gate_{uuid.uuid4().hex[:8]}"
-    stream = (
-        spark.readStream.schema(DOCS_RAW_SCHEMA)
-        .option("pathGlobFilter", glob_filter)
-        .parquet(source_dir)
+    stream = file_stream(spark, source_dir, DOCS_RAW_SCHEMA, glob_filter=glob_filter)
+    return run_bounded(
+        quality_gate_stream(stream).select("doc_id", "lang", "source", "n_chars"),
+        "quality_gate",
     )
-    query = (
-        quality_gate_stream(stream)
-        .select("doc_id", "lang", "source", "n_chars")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
 
 
 def _quality_gate_oracle() -> str:

@@ -10,13 +10,10 @@ watermark is dropped — the documented Spark rendering of the reference's
 
 from __future__ import annotations
 
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .source import events_message_stream
+from .source import events_message_stream, run_bounded
 
 
 def windowed_counts(
@@ -58,56 +55,27 @@ def session_activity(
 def run_session_activity_bounded(
     spark: SparkSession, source_dir: str, glob_filter: str | None = None
 ) -> DataFrame:
-    """Bounded session-window run for the harness (availableNow → memory
-    sink; append emits sessions the watermark has closed)."""
-    from .source import bounded_shuffle_width
-
-    name = f"sess_act_{uuid.uuid4().hex[:8]}"
+    """Bounded session-window run for the harness (drained → memory sink;
+    append emits sessions the watermark has closed)."""
     messages = events_message_stream(spark, source_dir, glob_filter=glob_filter)
-    with bounded_shuffle_width(spark):
-        # (topic × sessions) state — KB-sized; see VERDICT r12 item 4
-        query = (
-            session_activity(messages)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(f"ck_{name}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return spark.table(name)
+    return run_bounded(session_activity(messages), "sess_act")
 
 
 def run_windowed_counts_bounded(
     spark: SparkSession, source_dir: str, glob_filter: str | None = None
 ) -> DataFrame:
-    """Bounded run for the harness (availableNow → memory sink, append mode
+    """Bounded run for the harness (drained → memory sink, append mode
     emits only watermark-finalized windows)."""
-    from .source import bounded_shuffle_width
-
-    name = f"win_counts_{uuid.uuid4().hex[:8]}"
     messages = events_message_stream(spark, source_dir, glob_filter=glob_filter)
-    with bounded_shuffle_width(spark):
-        # (topic × hours) state — KB-sized; see VERDICT r12 item 4
-        query = (
-            windowed_counts(messages)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(f"ck_{name}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return spark.table(name)
+    return run_bounded(windowed_counts(messages), "win_counts")
 
 
 #: DuckDB oracles for the BOUNDED window harnesses. Valid because the
-#: bounded availableNow run is deterministic: one source file → one data
-#: micro-batch, after which the watermark is max(event_ts) − 2 h and append
-#: mode has emitted exactly the windows/sessions whose END is at or below
-#: that watermark. The SQL recomputes the same aggregates and applies the
+#: bounded drained run is deterministic: one source file → one data
+#: micro-batch, after which the watermark is max(event_ts) − 2 h; the drain
+#: waits out the no-data batch that watermark schedules, so append mode
+#: has emitted exactly the windows/sessions whose END is at or below that
+#: watermark. The SQL recomputes the same aggregates and applies the
 #: same cutoff. (Session semantics: an event extends a session while it
 #: falls strictly inside [start, last + gap); a gap ≥ 30 min starts a new
 #: one; session_end = last event + gap — Spark's session_window contract.)
