@@ -264,14 +264,14 @@ def _stream_media_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the entry carries a full value oracle (the batch per-hash
     aggregate); cross-batch suppression + counter rows are pinned in
     tests/test_streaming_media.py."""
-    import tempfile
-
     from pulsar_topic_deduplicator_spark.streaming.media import (
         run_stream_media_dedup_bounded,
     )
+    from pulsar_topic_deduplicator_spark.streaming.source import in_work_dir
 
-    return run_stream_media_dedup_bounded(
-        spark, sf_dir, tempfile.mkdtemp("media_work")
+    return in_work_dir(
+        "media_work",
+        lambda work: run_stream_media_dedup_bounded(spark, sf_dir, work),
     )
 
 
@@ -282,14 +282,14 @@ def _stream_rolling_actives_query(spark: SparkSession, sf_dir: str) -> DataFrame
     batch ``rolling_active_users`` exactly under ANY micro-batch split
     (pinned in tests/test_streaming_actives.py) and the entry carries the
     batch operator's full value oracle."""
-    import tempfile
-
     from pulsar_topic_deduplicator_spark.streaming.actives import (
         run_stream_rolling_actives_bounded,
     )
+    from pulsar_topic_deduplicator_spark.streaming.source import in_work_dir
 
-    return run_stream_rolling_actives_bounded(
-        spark, sf_dir, tempfile.mkdtemp("actives_work")
+    return in_work_dir(
+        "actives_work",
+        lambda work: run_stream_rolling_actives_bounded(spark, sf_dir, work),
     )
 
 
@@ -300,14 +300,14 @@ def _stream_source_entropy_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch ``source_entropy_report`` exactly under ANY micro-batch split
     (pinned in tests/test_streaming_entropy.py) and the entry carries the
     batch operator's full value oracle."""
-    import tempfile
-
     from pulsar_topic_deduplicator_spark.streaming.entropy import (
         run_stream_source_entropy_bounded,
     )
+    from pulsar_topic_deduplicator_spark.streaming.source import in_work_dir
 
-    return run_stream_source_entropy_bounded(
-        spark, sf_dir, tempfile.mkdtemp("entropy_work")
+    return in_work_dir(
+        "entropy_work",
+        lambda work: run_stream_source_entropy_bounded(spark, sf_dir, work),
     )
 
 
@@ -319,14 +319,16 @@ def _stream_near_dup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle since round 13 (VERDICT r12 item 6): the bounded run is one
     drained micro-batch, so kept = docs with no lower-id band-bucket
     collision — integer-exact MinHash banding, SQL-expressible."""
-    import tempfile
-
     from pulsar_topic_deduplicator_spark.streaming.neardup_stream import (
         run_stream_near_dup_bounded,
     )
+    from pulsar_topic_deduplicator_spark.streaming.source import in_work_dir
 
-    return run_stream_near_dup_bounded(
-        spark, sf_dir, tempfile.mkdtemp("nd_work"), assert_single_batch=True
+    return in_work_dir(
+        "nd_work",
+        lambda work: run_stream_near_dup_bounded(
+            spark, sf_dir, work, assert_single_batch=True
+        ),
     )
 
 
@@ -464,15 +466,16 @@ def _stream_quota_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     the admitted set (earliest-QUOTA_K per window, a mergeable k-smallest
     summary, so the result is batch-split invariant and the batch ranked
     SQL is an EXACT oracle; replay-idempotent via event-id dedup)."""
-    import tempfile
-
     from pulsar_topic_deduplicator_spark.streaming.quota_stream import (
         run_stream_quota_bounded,
     )
+    from pulsar_topic_deduplicator_spark.streaming.source import in_work_dir
 
-    return run_stream_quota_bounded(
-        spark, sf_dir, tempfile.mkdtemp("quota_stream"),
-        glob_filter="events.parquet",
+    return in_work_dir(
+        "quota_stream",
+        lambda work: run_stream_quota_bounded(
+            spark, sf_dir, work, glob_filter="events.parquet"
+        ),
     )
 
 
@@ -506,7 +509,7 @@ def queries() -> dict[str, QueryFn]:
         "supplier_affinity": recommend.supplier_affinity,
         "snapshot_merkle_diff": cdc.snapshot_merkle_diff,
         "entity_golden_records": entity.entity_golden_records,
-        "near_dup_clusters_lss": neardup.near_dup_clusters_lss,  # O(log n) CC
+        "near_dup_clusters_lss": neardup.near_dup_clusters,  # older name
         "winnow_fingerprints": textops.winnow_fingerprints,
         "jaccard_join_prefix_filtered": neardup.jaccard_join_prefix_filtered,
         "pack_sequences": curation.pack_sequences,

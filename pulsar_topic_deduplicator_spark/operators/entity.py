@@ -20,8 +20,9 @@ Scale design (the Fellegi-Sunter / Dedupe.io blocking shape):
 - **The similarity is JVM codegen.** ``levenshtein`` is a built-in on both
   engines (identical classic edit-distance semantics, case-sensitive), so
   the match filter runs inside whole-stage codegen — no Python row path.
-- **Clustering reuses the O(log n) LSS kernel** (``neardup.
-  connected_components_lss``): matched pairs → undirected edges →
+- **Clustering reuses the package's one connected-components kernel**
+  (``neardup.connected_components_lss``, O(log n) rounds, which
+  ``near_dup_clusters`` runs too): matched pairs → undirected edges →
   per-entity minimum custkey as the entity id. The match graph is tiny
   relative to the corpus (2,040 edges from 15,000 records at sf0.1), so
   the iterative stage runs on a frame orders of magnitude smaller than the

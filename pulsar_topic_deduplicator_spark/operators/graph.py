@@ -2,9 +2,9 @@
 customer↔supplier interaction graph.
 
 NOT in the reference (no joins at all, let alone iteration — SURVEY.md
-§2.3); added alongside the connected-components pair (min-label and
-large-star/small-star in ``neardup.py``/``similarity.py``) so the engine's
-iterative-algorithm tier covers the other classic: influence propagation.
+§2.3); added alongside connected components (large-star/small-star,
+``neardup.connected_components_lss``) so the engine's iterative-algorithm
+tier covers the other classic: influence propagation.
 
 Why FIXED-POINT integers: textbook PageRank sums doubles across
 partitions, and float addition is not associative — the same query can

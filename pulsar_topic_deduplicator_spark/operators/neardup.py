@@ -384,71 +384,29 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairwise near-dup hits into dedup groups (keep one representative per
     cluster).
 
-    Iterative min-label propagation: each round every node takes the min of
-    its own label and its neighbors' labels; converges in O(graph diameter)
-    rounds — near-dup components are small and dense, so 2-4 rounds in
-    practice. Each round is one distributed join + aggregate;
-    ``localCheckpoint`` truncates lineage so plans don't grow with rounds.
-    The changed-row count is folded into the same pass (a ``changed`` flag
-    aggregated off the checkpointed frame), so a round costs exactly one
-    edge join + one node join — no extra convergence-check shuffle.
-    The fixpoint is order-independent (min is commutative/associative), so
-    the result is deterministic on any cluster size. The driver loop is
-    control flow only — no data crosses to the driver except the 1-row
-    convergence count."""
+    The components come from ``connected_components_lss``: O(log n)
+    large-star/small-star rounds on any graph shape, so long duplicate
+    chains (boilerplate families, templated pages) cost no more rounds
+    than dense families. The fixpoint is order-independent (min is
+    commutative/associative), so the result is deterministic on any
+    cluster size; the oracle is a recursive-CTE fixpoint."""
     pairs = near_dup_pairs_verified(spark, sf_dir).select("doc_a", "doc_b")
-    fwd = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    rev = pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-    edges = fwd.union(rev).cache()
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-        .localCheckpoint()
+    labels = connected_components_lss(
+        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     )
-    while True:
-        nbr_min = (
-            edges.join(
-                labels.select(F.col("id").alias("src"), F.col("label").alias("l")),
-                "src",
-            )
-            .groupBy("dst")
-            .agg(F.min("l").alias("nbr_min"))
-        )
-        stepped = (
-            labels.join(nbr_min, labels.id == nbr_min.dst, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce("nbr_min", F.col("label"))
-                ).alias("label"),
-                (F.coalesce("nbr_min", F.col("label")) < F.col("label"))
-                .cast("int")
-                .alias("changed"),
-            )
-            .localCheckpoint()
-        )
-        changed = stepped.agg(F.sum("changed")).collect()[0][0]
-        labels = stepped.select("id", "label")
-        if not changed:
-            break
-    # labels is localCheckpointed — lineage no longer references the edge
-    # cache, so release it here instead of leaking it into the session
-    edges.unpersist()
     w = Window.partitionBy("cluster_id")
-    return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id")).withColumn(
-        "cluster_size", F.count(F.lit(1)).over(w)
-    )
+    return labels.select(
+        F.col("id").alias("doc_id"), F.col("label").alias("cluster_id")
+    ).withColumn("cluster_size", F.count(F.lit(1)).over(w))
 
 
 def connected_components_lss(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
     """Connected components via alternating large-star / small-star rounds
     (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    O(log n) rounds on ANY graph shape, where min-label propagation
-    (``near_dup_clusters``) needs O(diameter) rounds and loses badly on long
-    chains. Every step is min/least arithmetic, so the fixpoint (each node
-    labeled with its component's minimum id) is deterministic on any
-    partitioning.
+    O(log n) rounds on ANY graph shape, where min-label propagation needs
+    O(diameter) rounds and loses badly on long chains. Every step is
+    min/least arithmetic, so the fixpoint (each node labeled with its
+    component's minimum id) is deterministic on any partitioning.
 
     ``edges``: (src, dst) directed pairs covering each undirected edge at
     least once; self-loops ignored. Returns (id, label).
@@ -534,22 +492,6 @@ def connected_components_lss(edges: DataFrame, max_rounds: int = 20) -> DataFram
             F.least(F.col("mn"), F.col("u")).alias("label"),
         )
     )
-
-
-def near_dup_clusters_lss(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``near_dup_clusters`` semantics via large-star/small-star — identical
-    output (same fixpoint), O(log n) rounds instead of O(diameter); the
-    variant to prefer when duplicate chains are long (boilerplate families,
-    templated pages). Parity with the propagation version is pinned in
-    tests; the oracle is the same recursive-CTE fixpoint."""
-    pairs = near_dup_pairs_verified(spark, sf_dir).select("doc_a", "doc_b")
-    labels = connected_components_lss(
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    )
-    w = Window.partitionBy("cluster_id")
-    return labels.select(
-        F.col("id").alias("doc_id"), F.col("label").alias("cluster_id")
-    ).withColumn("cluster_size", F.count(F.lit(1)).over(w))
 
 
 # ─── DuckDB oracles ─────────────────────────────────────────────────────────
@@ -719,8 +661,8 @@ ORACLES: dict[str, str] = {
     """,
 }
 
-# same fixpoint, same verification — the LSS variant shares the
-# propagation version's oracle by construction
+# the registry keeps the older name of the LSS entry; it runs
+# ``near_dup_clusters`` and shares its oracle
 ORACLES["near_dup_clusters_lss"] = ORACLES["near_dup_clusters"]
 
 

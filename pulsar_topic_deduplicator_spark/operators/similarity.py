@@ -777,7 +777,7 @@ def embedding_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup groups over the embedding-cosine near-dup graph: connected
     components (large-star/small-star, O(log n) rounds) of the exact
     ≥-threshold pair set — the vector-modality twin of
-    ``near_dup_clusters_lss``, composing two already-verified operators.
+    ``near_dup_clusters``, composing two already-verified operators.
     Cluster id = component's minimum vec_id; deterministic fixpoint."""
     from pyspark.sql import Window
 

@@ -331,8 +331,9 @@ def start_dedup_service(
     the full per-batch fixed cost (planning, WAL and offset commits, a
     state-store commit); an expired digest's state is instead evicted at
     the end of the next DATA batch — late eviction by at most one batch
-    (``dedup_stream_ingest_ttl``). The exact kernel arms no timers here
-    and has no watermark, so it never runs no-data batches either way.
+    (``dedup_stream_ingest_ttl``). The exact kernel has no watermark and
+    no timers (it purges expired digests when it writes a group's state),
+    so it never runs no-data batches either way.
 
     ``max_files_per_trigger`` rate-limits ingest (admission control — the
     reference's bounded receive queue, ``src/config.ts:231-235``); dedup

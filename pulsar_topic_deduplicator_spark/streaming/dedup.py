@@ -16,13 +16,16 @@ digest (``message_digest``) → TTL kernel → sink, with two TTL semantics:
    ``applyInPandasWithState`` over ``TTL_KEY_GROUPS`` fixed digest hash
    buckets (``_make_bucketed_ttl_kernel``). Its **warm-up** (reference op
    #11) streams seed digests from a batch scan of prior output through the
-   same kernel, mirroring ``buildUpCache`` (``src/cacheBuilding.ts:65``).
+   same kernel, mirroring ``buildUpCache`` (``src/cacheBuilding.ts:65``);
+   ``service.start_dedup_service(prior_output=..., exact_processing_ttl=True)``
+   runs it.
 
 Entry points that start queries: ``run_stream_dedup_bounded`` (the
 event-time ``dedup_stream`` pipeline, drained and stopped) and
-``start_ttl_dedup`` (the exact kernel as a live query; the only way to
-arm its GC timers). The service (``service.py``) composes both kernels
-from the frame-returning functions here. Every query in this dataflow
+``start_ttl_dedup`` (the exact kernel alone on a memory sink, for tests
+and the benchmark's per-layer prefix). The service (``service.py``)
+composes both kernels from the frame-returning functions here and is
+the production entry. Every query in this dataflow
 is written by ``source._write_stream``, the package's one writer, and a
 bounded run ends in ``source.drain``: ``processAllAvailable`` then
 ``stop``.
@@ -191,18 +194,17 @@ TTL_KEY_GROUPS = 64
 _BUCKET_STATE_SCHEMA = "digests array<string>, first_seen_ms array<long>"
 
 
-def _make_bucketed_ttl_kernel(ttl_ms: int, use_timers: bool = False):
+def _make_bucketed_ttl_kernel(ttl_ms: int):
     """The exact-TTL dedup kernel: a sharded ObliviousSet on GroupState,
     keyed by the digest's key group (``TTL_KEY_GROUPS``) with the group's
     {digest: first_seen_ms} map as state.
 
     Per digest: the first occurrence wins (by (event_us, message_id)), and
     the TTL runs from insertion on the processing-time clock. Expiry is
-    re-checked against the stored stamp on every arrival, because a
-    GroupState timer never fires for a key that has data in the same
-    batch: a duplicate arriving just after expiry is re-admitted, not
-    dropped. Duplicates do NOT extend the TTL (the reference's set only
-    stamps insertion time, ``src/deduplication.ts:76``). Seed rows
+    checked against the stored stamp on every arrival: a duplicate
+    arriving just after expiry is re-admitted, not dropped. Duplicates do
+    NOT extend the TTL (the reference's set only stamps insertion time,
+    ``src/deduplication.ts:76``). Seed rows
     (message_id == SEED_MESSAGE_ID) insert state without emitting — the
     warm-up path. Duplicates whose first occurrence is in a PRIOR batch
     (or a warm-up seed) still produce a counter-only row — ``message_id``
@@ -229,44 +231,20 @@ def _make_bucketed_ttl_kernel(ttl_ms: int, use_timers: bool = False):
     two state (de)serializer classes, which are compiled again every
     micro-batch.
 
-    State GC: the group's state map is round-tripped whole on every batch
-    that touches the group, so dead entries cost a round trip each. Two
-    complementary purges keep the map bounded by the LIVE digest count:
-
-    * **purge-on-write** (always on): whenever the kernel writes state it
-      drops every expired entry. Semantically free — an expired entry
-      already behaves exactly like an absent one (``already`` is False,
-      the digest is re-admitted and re-stamped), so removing it changes
-      no emitted row, ever (pinned in tests/test_round15_opt.py).
-    * **timer purge** (``use_timers=True``): the kernel re-arms a
-      processing-time timer for ``ttl_ms`` on every call with data that
-      leaves state behind (Spark clears the timeout on each such call,
-      writes or not); when it fires with no data for the group, expired
-      entries are purged and the state row is REMOVED once the map
-      empties. This is what bounds state for groups that stop receiving
-      traffic. Off by default: registered timers make the micro-batch
-      engine schedule batches continuously until every timer fires
-      (observed: 150+ empty epochs against a 1 h TTL), which a bounded
-      harness run must not pay for. A long-running production query
-      should pass ``use_timers=True`` to ``start_ttl_dedup``."""
+    State GC is purge-on-write, the reference's lazy purge (its
+    ``oblivious-set`` dependency, ``package.json:51``, drops expired
+    entries after a write, never on an idle timer): whenever the kernel
+    writes a group's state it drops every expired entry. Semantically
+    free — an expired entry already behaves exactly like an absent one
+    (``already`` is False, the digest is re-admitted and re-stamped), so
+    removing it changes no emitted row, ever (pinned in
+    tests/test_round15_opt.py). A group that traffic skips keeps only the
+    digests that were live at its last write, and there are at most
+    ``TTL_KEY_GROUPS`` state rows."""
 
     def kernel(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        if state.hasTimedOut:
-            # timer fire (use_timers queries only): GC pass. Purge expired
-            # entries; drop the state row entirely once the map is empty.
-            # No rows are emitted and no live entry is touched, so output
-            # semantics are unchanged.
-            now_ms = state.getCurrentProcessingTimeMs()
-            ds, fs = state.get if state.exists else ((), ())
-            live = [(d, f) for d, f in zip(ds, fs) if (now_ms - f) < ttl_ms]
-            if live:
-                state.update(([d for d, _ in live], [f for _, f in live]))
-                state.setTimeoutDuration(ttl_ms)
-            else:
-                state.remove()
-            return
         batches = [pdf for pdf in pdfs if len(pdf)]
         if not batches:
             return
@@ -329,10 +307,6 @@ def _make_bucketed_ttl_kernel(ttl_ms: int, use_timers: bool = False):
                     d: f for d, f in smap.items() if (now_ms - f) < ttl_ms
                 }
             state.update((list(smap.keys()), list(smap.values())))
-        if use_timers and state.exists:
-            # Spark cleared the timeout for this call: re-arm it, or a
-            # duplicate-only batch disarms the bucket's GC for good
-            state.setTimeoutDuration(ttl_ms)
         if out_digest:
             yield pd.DataFrame(
                 {
@@ -352,32 +326,21 @@ def start_ttl_dedup(
     source_dir: str,
     checkpoint_dir: str,
     ttl_ms: int = 3_600_000,
-    seed_digests: DataFrame | None = None,
     glob_filter: str | None = None,
     ignored: tuple[str, ...] = (),
-    messages: DataFrame | None = None,
     max_files_per_trigger: int | None = None,
-    use_timers: bool = False,
 ):
-    """Start the exact-TTL dedup (``_exact_ttl_dedup``) as a live streaming
-    query; returns ``(StreamingQuery, output_table_name)`` (memory sink).
-
-    ``use_timers``: ``True`` arms a per-group processing-time timer so
-    groups that stop receiving traffic still purge expired digests and
-    eventually drop their state row — pass it on any long-running
-    production query; this is the only entry point that arms them. Default
-    ``False`` because registered timers make the micro-batch engine
-    schedule batches continuously until every timer fires (see
-    ``_make_bucketed_ttl_kernel``), which bounded runs must not pay for;
-    groups that DO receive traffic purge expired entries on every state
-    write regardless. Emitted rows are identical either way
-    (tests/test_round15_opt.py).
+    """Start the exact-TTL dedup (``_exact_ttl_dedup``) alone as a live
+    streaming query; returns ``(StreamingQuery, output_table_name)``
+    (memory sink). The memory sink keeps every row on the driver, so this
+    is for tests and measurement; the production entry, with warm-up from
+    prior output, is ``service.start_dedup_service(...,
+    exact_processing_ttl=True)``.
 
     Restart: the sink is a memory sink, which cannot recover from a
     checkpoint, so a second start on the same ``checkpoint_dir`` fails
     with ``AnalysisException`` instead of resuming
-    (tests/test_streaming.py). A fresh start re-seeds through
-    ``seed_digests`` from the prior output, the reference's warm-up path.
+    (tests/test_streaming.py).
 
     ``max_files_per_trigger`` is the admission-control cap (the reference
     bounds its warm-up reader with a 10-message receive queue,
@@ -386,41 +349,24 @@ def start_ttl_dedup(
     slices instead of one executor-memory-sized batch). Dedup output is
     invariant to the batch split — pinned in tests/test_admission.py.
 
-    ``messages`` overrides the transport: any streaming DataFrame in the
-    message schema (message_id, event_ts + the digest inputs) runs the
-    identical kernel — the production ``.format("pulsar"|"kafka")`` swap
-    point (``source_dir``/``glob_filter`` are ignored when it is given).
-
     ``ignored`` is the reference's ``DEDUPLICATION_IGNORED_PROPERTIES``
-    projection (op #4) applied to the hash input; ``seed_digests`` is the
-    warm-up seed set (see ``_exact_ttl_dedup``), written as seed messages
-    beside the checkpoint, to ``<checkpoint_dir>_seeds``, which each start
-    on that checkpoint overwrites.
+    projection (op #4) applied to the hash input.
     """
-    if messages is None:
-        messages = events_message_stream(
-            spark,
-            source_dir,
-            glob_filter=glob_filter,
-            max_files_per_trigger=max_files_per_trigger,
-        )
-    deduped = _exact_ttl_dedup(
-        messages,
-        ttl_ms,
-        seed_digests,
-        ignored,
-        use_timers=use_timers,
-        seed_dir=f"{checkpoint_dir.rstrip('/')}_seeds",
+    messages = events_message_stream(
+        spark,
+        source_dir,
+        glob_filter=glob_filter,
+        max_files_per_trigger=max_files_per_trigger,
     )
+    deduped = _exact_ttl_dedup(messages, ttl_ms, ignored=ignored)
     return _write_stream(deduped, "ttl_dedup", checkpoint_dir=checkpoint_dir)
 
 
 def _exact_ttl_dedup(
     messages: DataFrame,
     ttl_ms: int,
-    seed_digests: DataFrame | None = None,
+    seeds: DataFrame | None = None,
     ignored: tuple[str, ...] = (),
-    use_timers: bool = False,
     seed_dir: str | None = None,
 ) -> DataFrame:
     """The exact-TTL kernel over a message-schema stream, as a frame of
@@ -430,14 +376,14 @@ def _exact_ttl_dedup(
     a constant, so a digest's group never depends on the session's
     parallelism.
 
-    ``seed_digests`` (a batch DataFrame with a ``digest`` column) replays
+    ``seeds`` (a batch DataFrame with a ``digest`` column) replays
     the reference's warm-up (op #11): those digests start out "seen" and
     their live occurrences are suppressed. They are written as seed
     *messages* into a side source and streamed through the same dedup
     kernel — exactly how the reference seeds its cache by re-reading its
     own output topic (``src/cacheBuilding.ts:141-153``). That side source
     is the directory ``seed_dir`` (overwritten), required with
-    ``seed_digests``; the caller owns it and removes it once the query has
+    ``seeds``; the caller owns it and removes it once the query has
     stopped."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -447,7 +393,7 @@ def _exact_ttl_dedup(
     keyed = messages.withColumn("digest", message_digest(ignored)).select(
         "digest", "message_id", F.unix_micros("event_ts").alias("event_us")
     )
-    if seed_digests is not None:
+    if seeds is not None:
         from ..sources.retry import with_warmup_retries
 
         # the warm-up scan may race a concurrent writer's commit on the
@@ -455,7 +401,7 @@ def _exact_ttl_dedup(
         # (src/cacheBuilding.ts:90-131) rather than failing startup on
         # the first transient error
         with_warmup_retries(
-            lambda: seed_digests.select(
+            lambda: seeds.select(
                 F.col("digest").cast("string").alias("digest"),
                 F.lit(SEED_MESSAGE_ID).alias("message_id"),
                 F.lit(0).cast("long").alias("event_us"),
@@ -480,15 +426,11 @@ def _exact_ttl_dedup(
         )
         .groupBy("bucket")
         .applyInPandasWithState(
-            _make_bucketed_ttl_kernel(ttl_ms, use_timers=use_timers),
+            _make_bucketed_ttl_kernel(ttl_ms),
             outputStructType=_TTL_KERNEL_SCHEMA,
             stateStructType=_BUCKET_STATE_SCHEMA,
             outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if use_timers
-                else GroupStateTimeout.NoTimeout
-            ),
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
     # restore the timestamp JVM-side (stateless projection after the

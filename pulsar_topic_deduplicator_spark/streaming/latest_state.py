@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.cdc import keep_latest
-from .source import events_raw_stream, run_bounded
+from .source import events_raw_stream, in_work_dir, run_bounded
 
 #: snapshot ordering: event time, tie-broken by the unique event id
 _ORDER = ["ts", "event_id"]
@@ -109,18 +109,16 @@ def stream_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     per user, the current (ts, event_id)-greatest event. Exact oracle: the
     snapshot equals the batch argmax over the whole table regardless of
     batch split (associativity, see module docstring)."""
-    import tempfile
+    def run(work: str) -> DataFrame:
+        return run_stream_latest_state_bounded(spark, sf_dir, work).select(
+            "user_id",
+            F.col("event_id").alias("last_event_id"),
+            F.col("ts").alias("last_ts"),
+            F.col("event_type").alias("last_event_type"),
+            F.col("value").alias("last_value"),
+        )
 
-    snap = run_stream_latest_state_bounded(
-        spark, sf_dir, tempfile.mkdtemp("latest_state")
-    )
-    return snap.select(
-        "user_id",
-        F.col("event_id").alias("last_event_id"),
-        F.col("ts").alias("last_ts"),
-        F.col("event_type").alias("last_event_type"),
-        F.col("value").alias("last_value"),
-    )
+    return in_work_dir("latest_state", run)
 
 
 ORACLES: dict[str, str] = {

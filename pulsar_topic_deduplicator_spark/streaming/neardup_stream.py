@@ -42,7 +42,7 @@ from ..operators.neardup import (
     _signature_wide_from,
     band_rows,
 )
-from .source import file_stream, run_bounded
+from .source import file_stream, in_work_dir, run_bounded
 
 #: raw schema of documents.parquet for the file-source stream
 DOCS_RAW_SCHEMA = T.StructType(
@@ -289,11 +289,15 @@ def stream_near_dup_contracts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     All checks are bucket-join aggregations over the banded rows — the same
     shuffle shape as the filter itself, nothing driver-side but verdicts."""
-    import tempfile
-
-    kept = run_stream_near_dup_bounded(
-        spark, sf_dir, tempfile.mkdtemp("nd_contract")
+    return in_work_dir(
+        "nd_contract", lambda work: _near_dup_contracts(spark, sf_dir, work)
     )
+
+
+def _near_dup_contracts(
+    spark: SparkSession, sf_dir: str, work_dir: str
+) -> DataFrame:
+    kept = run_stream_near_dup_bounded(spark, sf_dir, work_dir)
     docs = (
         spark.read.schema(DOCS_RAW_SCHEMA)
         .option("pathGlobFilter", "documents.parquet")

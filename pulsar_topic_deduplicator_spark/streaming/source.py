@@ -16,6 +16,8 @@ goes through ``run_bounded``, which ends in ``drain``: the width pin,
 
 from __future__ import annotations
 
+import shutil
+import tempfile
 import uuid
 from contextlib import contextmanager
 from typing import Any, Callable, Iterator
@@ -147,6 +149,19 @@ def run_bounded(
     if foreach_batch is not None:
         return None
     return spark.read.parquet(output_dir) if output_dir else spark.table(query.name)
+
+
+def in_work_dir(suffix: str, run: Callable[[str], DataFrame]) -> DataFrame:
+    """``run`` a bounded harness on a fresh temporary work directory and
+    return its small result materialized: ``localCheckpoint(eager=True)``
+    cuts the frame off the directory, which is removed in a ``finally``.
+    For the registry's foreachBatch entries, whose result is read back
+    from a work directory that only the run needs."""
+    work = tempfile.mkdtemp(suffix)
+    try:
+        return run(work).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
 
 #: logical schema of the events stream after normalization (ts is TIMESTAMP)

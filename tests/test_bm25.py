@@ -28,7 +28,9 @@ def test_bm25_ranks_only_matching_docs_positively(spark, sf_dir):
         assert set(texts[r["doc_id"]].split(" ")) & q
 
 
-def test_bm25_more_hits_beats_fewer_at_equal_length(spark, sf_dir):
+def test_bm25_more_hits_beats_fewer_at_equal_length(
+    spark, sf_dir, tmp_path_factory
+):
     """Synthetic head-to-head: with equal doc length, a doc with strictly
     more query-term occurrences (every term) must outscore one with
     fewer — monotonicity in tf with all else equal."""
@@ -46,9 +48,8 @@ def test_bm25_more_hits_beats_fewer_at_equal_length(spark, sf_dir):
             Row(doc_id=3, text=none, lang="en", source="s", n_chars=len(none)),
         ]
     )
-    import tempfile
 
-    d = tempfile.mkdtemp("bm25")
+    d = str(tmp_path_factory.mktemp("bm25"))
     docs.write.parquet(f"{d}/documents.parquet")
     rows = {r["doc_id"]: r["bm25"] for r in bm25_rank(spark, d).collect()}
     assert set(rows) == {1, 2}  # the term-free doc is excluded

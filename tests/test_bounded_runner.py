@@ -3,9 +3,10 @@ runner (``streaming.source.run_bounded``): one writer, one drain.
 
 The guard scans the program's source, so a hand-written ``writeStream``
 block or a second drain style fails here. The leak tests run a memory-sink
-harness and the two registry service helpers with the temp dir pointed at
-an empty directory: each must leave nothing behind, neither in Python's
-temp dir nor as a Spark temporary checkpoint in the JVM's.
+harness, the two registry service helpers and the foreachBatch entries with
+the temp dir pointed at an empty directory: each must leave nothing behind,
+neither in Python's temp dir nor as a Spark temporary checkpoint in the
+JVM's.
 """
 
 from __future__ import annotations
@@ -77,15 +78,25 @@ def _jvm_temporary_checkpoints(spark) -> set[str]:
         "stream_windowed_counts",
         "stream_dedup_ttl",
         "service_counters_watermark",
+        # foreachBatch entries: their work directory goes with the run
+        "stream_media_dedup",
+        "stream_rolling_actives",
+        "stream_source_entropy",
+        "stream_near_dup",
+        "stream_quota_cap",
+        "stream_latest_state",
+        "stream_near_dup_contracts",
     ],
 )
 def test_bounded_run_leaves_no_directory(
     spark, sf_dir, tmp_path, monkeypatch, entry
 ):
-    """A memory-sink harness run and the registry's service helpers leave
-    no checkpoint behind: the runner lets Spark keep (and delete) its own
-    temporary checkpoint, and the helpers remove theirs once the service
-    has stopped."""
+    """A memory-sink harness run, the registry's service helpers and its
+    foreachBatch entries leave no checkpoint or work directory behind: the
+    runner lets Spark keep (and delete) its own temporary checkpoint, the
+    service helpers remove theirs once the service has stopped, and the
+    foreachBatch entries materialize their result before removing their
+    work directory."""
     import __spark_entry__
 
     tmp = tmp_path / "tmp"

@@ -65,7 +65,7 @@ def test_canonical_json_escaping(spark):
     assert len(set(canons)) == len(tricky)
 
 
-def test_session_window_activity(spark):
+def test_session_window_activity(spark, tmp_path_factory):
     """Session windows split on >gap silence (streaming/windows.py)."""
     import pandas as pd
 
@@ -78,9 +78,8 @@ def test_session_window_activity(spark):
         (3, BASE_TS + 7200 * NS, 1, "click", 1.0, '{"k": 3}'),  # after 2h gap
     ]
     src = None
-    import tempfile
 
-    src = tempfile.mkdtemp("sess")
+    src = str(tmp_path_factory.mktemp("sess"))
     _write_batch(spark, src, rows)
     from pulsar_topic_deduplicator_spark.streaming.source import (
         events_message_stream,
@@ -94,7 +93,7 @@ def test_session_window_activity(spark):
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp("sess_ck"))
+        .option("checkpointLocation", str(tmp_path_factory.mktemp("sess_ck")))
         .trigger(availableNow=True)
         .start()
     )

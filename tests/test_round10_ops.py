@@ -114,12 +114,10 @@ def test_contrastive_over_ceiling_degrades_to_tiled(spark, sf_dir):
     ]
 
 
-def test_contrastive_tiled_tiny_corpus_edges(spark):
+def test_contrastive_tiled_tiny_corpus_edges(spark, tmp_path_factory):
     """Tiled-fallback edge cases on a 3-vector corpus with more tiles
     than rows: empty cogroups, an anchor whose label has no second
     member (NULL positives), and every anchor preserved."""
-    import tempfile
-
     import pandas as pd
 
     d = 64
@@ -128,7 +126,7 @@ def test_contrastive_tiled_tiny_corpus_edges(spark):
         (1, 1, [0.9, 0.1] + [0.0] * (d - 2)),
         (2, 2, [0.0, 1.0] + [0.0] * (d - 2)),  # lone label: pos is NULL
     ]
-    src = tempfile.mkdtemp("tiny_emb")
+    src = str(tmp_path_factory.mktemp("tiny_emb"))
     spark.createDataFrame(
         rows, "vec_id long, label int, embedding array<double>"
     ).write.mode("overwrite").parquet(f"{src}/embeddings.parquet")

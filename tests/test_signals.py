@@ -17,7 +17,7 @@ import pandas as pd
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 RUNNER = """
-import sys, tempfile
+import sys
 sys.path.insert(0, {repo!r})
 from pulsar_topic_deduplicator_spark.session import get_spark
 from pulsar_topic_deduplicator_spark.config import EngineConfig
@@ -26,7 +26,7 @@ from pulsar_topic_deduplicator_spark.service import start_dedup_service
 spark = get_spark("signal-shutdown-test")
 spark.sparkContext.setLogLevel("ERROR")
 svc = start_dedup_service(
-    spark, EngineConfig(), sys.argv[1], tempfile.mkdtemp("sig_ck"),
+    spark, EngineConfig(), sys.argv[1], sys.argv[2],
 )
 server, port = svc.serve_health()
 svc.install_signal_handlers(
@@ -62,7 +62,7 @@ def test_sigterm_runs_ordered_teardown_and_exits_143(spark, tmp_path):
     script.write_text(RUNNER.format(repo=REPO))
     env = {**os.environ, "SPARK_GRAFT_CPUS": "2"}
     proc = subprocess.Popen(
-        [sys.executable, str(script), src],
+        [sys.executable, str(script), src, str(tmp_path / "sig_ck")],
         stdout=subprocess.PIPE,
         stderr=subprocess.DEVNULL,
         text=True,

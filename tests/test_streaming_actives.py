@@ -9,7 +9,6 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -27,10 +26,10 @@ def _readout(df):
     return {r.day: (r.dau, r.wau_7d) for r in df.collect()}
 
 
-def test_single_batch_equals_batch_operator(spark, sf_dir):
+def test_single_batch_equals_batch_operator(spark, sf_dir, tmp_path_factory):
     got = _readout(
         run_stream_rolling_actives_bounded(
-            spark, sf_dir, tempfile.mkdtemp("act1")
+            spark, sf_dir, str(tmp_path_factory.mktemp("act1"))
         )
     )
     want = _readout(rolling_active_users(spark, sf_dir))
@@ -38,18 +37,20 @@ def test_single_batch_equals_batch_operator(spark, sf_dir):
     assert got, "fixture must produce an activity grid"
 
 
-def test_multi_batch_split_is_order_independent(spark, sf_dir):
+def test_multi_batch_split_is_order_independent(
+    spark, sf_dir, tmp_path_factory
+):
     """Split events into two files with OVERLAPPING (user, day) activity
     (even/odd event_id interleaves users and days); the two-batch run's
     index is the same distinct set, so the readout must equal the batch
     operator exactly."""
     ev = load_table(spark, sf_dir, "events")
-    src = tempfile.mkdtemp("act_src")
+    src = str(tmp_path_factory.mktemp("act_src"))
     for i, frame in enumerate(
         [ev.filter(F.col("event_id") % 2 == 0), ev.filter(F.col("event_id") % 2 == 1)],
         1,
     ):
-        tmp = tempfile.mkdtemp(f"act_part{i}")
+        tmp = str(tmp_path_factory.mktemp(f"act_part{i}"))
         frame.coalesce(1).write.mode("overwrite").parquet(tmp)
         part = glob.glob(f"{tmp}/part-*.parquet")[0]
         dst = f"{src}/b{i}.parquet"
@@ -60,7 +61,7 @@ def test_multi_batch_split_is_order_independent(spark, sf_dir):
         run_stream_rolling_actives_bounded(
             spark,
             src,
-            tempfile.mkdtemp("act2"),
+            str(tmp_path_factory.mktemp("act2")),
             glob_filter="*.parquet",
             max_files_per_trigger=1,
         )
@@ -69,8 +70,8 @@ def test_multi_batch_split_is_order_independent(spark, sf_dir):
     assert got == want
 
 
-def test_fresh_work_dir_refuses_stale_state(spark, sf_dir):
-    work = tempfile.mkdtemp("act3")
+def test_fresh_work_dir_refuses_stale_state(spark, sf_dir, tmp_path_factory):
+    work = str(tmp_path_factory.mktemp("act3"))
     run_stream_rolling_actives_bounded(spark, sf_dir, work)
     with pytest.raises(ValueError, match="activity state"):
         run_stream_rolling_actives_bounded(spark, sf_dir, work)

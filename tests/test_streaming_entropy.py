@@ -9,7 +9,6 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -28,10 +27,10 @@ def _readout(df):
     return (r.n_docs, r.n_sources, r.entropy_nanonats, r.evenness_ppb)
 
 
-def test_single_batch_equals_batch_operator(spark, sf_dir):
+def test_single_batch_equals_batch_operator(spark, sf_dir, tmp_path_factory):
     got = _readout(
         run_stream_source_entropy_bounded(
-            spark, sf_dir, tempfile.mkdtemp("ent1")
+            spark, sf_dir, str(tmp_path_factory.mktemp("ent1"))
         )
     )
     want = _readout(source_entropy_report(spark, sf_dir))
@@ -39,13 +38,15 @@ def test_single_batch_equals_batch_operator(spark, sf_dir):
     assert got[0] > 0 and got[1] > 1
 
 
-def test_multi_batch_split_is_order_independent(spark, sf_dir):
+def test_multi_batch_split_is_order_independent(
+    spark, sf_dir, tmp_path_factory
+):
     """Split documents into two files with OVERLAPPING sources (even/odd
     doc_id interleaves every source across both batches); the folded
     count index is the same multiset sum, so the readout must equal the
     batch operator exactly."""
     docs = load_table(spark, sf_dir, "documents")
-    src = tempfile.mkdtemp("ent_src")
+    src = str(tmp_path_factory.mktemp("ent_src"))
     for i, frame in enumerate(
         [
             docs.filter(F.col("doc_id") % 2 == 0),
@@ -53,7 +54,7 @@ def test_multi_batch_split_is_order_independent(spark, sf_dir):
         ],
         1,
     ):
-        tmp = tempfile.mkdtemp(f"ent_part{i}")
+        tmp = str(tmp_path_factory.mktemp(f"ent_part{i}"))
         frame.coalesce(1).write.mode("overwrite").parquet(tmp)
         part = glob.glob(f"{tmp}/part-*.parquet")[0]
         dst = f"{src}/b{i}.parquet"
@@ -64,7 +65,7 @@ def test_multi_batch_split_is_order_independent(spark, sf_dir):
         run_stream_source_entropy_bounded(
             spark,
             src,
-            tempfile.mkdtemp("ent2"),
+            str(tmp_path_factory.mktemp("ent2")),
             glob_filter="*.parquet",
             max_files_per_trigger=1,
         )
@@ -73,21 +74,21 @@ def test_multi_batch_split_is_order_independent(spark, sf_dir):
     assert got == want
 
 
-def test_fresh_work_dir_refuses_stale_state(spark, sf_dir):
-    work = tempfile.mkdtemp("ent3")
+def test_fresh_work_dir_refuses_stale_state(spark, sf_dir, tmp_path_factory):
+    work = str(tmp_path_factory.mktemp("ent3"))
     run_stream_source_entropy_bounded(spark, sf_dir, work)
     with pytest.raises(ValueError, match="count state"):
         run_stream_source_entropy_bounded(spark, sf_dir, work)
     assert os.path.exists(f"{work}/source_counts")
 
 
-def test_state_replay_is_idempotent(spark, sf_dir):
+def test_state_replay_is_idempotent(spark, sf_dir, tmp_path_factory):
     """A foreachBatch RETRY re-lands its batch partial (same data, same
     batchId-named subdir, overwrite mode) — the readout must not change.
     Simulates the lost-checkpoint-commit replay at the storage layer."""
     import pyspark.sql.functions as F
 
-    work = tempfile.mkdtemp("ent_idem")
+    work = str(tmp_path_factory.mktemp("ent_idem"))
     before = _readout(run_stream_source_entropy_bounded(spark, sf_dir, work))
     state = f"{work}/source_counts"
     batch0 = f"{state}/batch=0"

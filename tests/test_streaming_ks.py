@@ -8,7 +8,6 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -38,12 +37,14 @@ def test_single_batch_equals_batch_operator(spark, sf_dir):
     assert got == want and got
 
 
-def test_multi_batch_split_is_order_independent(spark, sf_dir):
+def test_multi_batch_split_is_order_independent(
+    spark, sf_dir, tmp_path_factory
+):
     """Split events into two files interleaving every type/value/day
     (even/odd event_id); additive counts make the two-batch snapshot
     equal the batch frame, so the KS readout must match exactly."""
     ev = load_table(spark, sf_dir, "events")
-    src = tempfile.mkdtemp("ks_src")
+    src = str(tmp_path_factory.mktemp("ks_src"))
     for i, frame in enumerate(
         [
             ev.filter(F.col("event_id") % 2 == 0),
@@ -51,7 +52,7 @@ def test_multi_batch_split_is_order_independent(spark, sf_dir):
         ],
         1,
     ):
-        tmp = tempfile.mkdtemp(f"ks_part{i}")
+        tmp = str(tmp_path_factory.mktemp(f"ks_part{i}"))
         frame.coalesce(1).write.mode("overwrite").parquet(tmp)
         part = glob.glob(f"{tmp}/part-*.parquet")[0]
         dst = f"{src}/b{i}.parquet"

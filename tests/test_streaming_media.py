@@ -6,7 +6,6 @@ with counter rows; fresh-work_dir refusal on stale state.
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,11 +17,13 @@ from pulsar_topic_deduplicator_spark.streaming.media import (
 )
 
 
-def test_single_batch_equals_batch_per_hash_aggregate(spark, sf_dir):
+def test_single_batch_equals_batch_per_hash_aggregate(
+    spark, sf_dir, tmp_path_factory
+):
     got = {
         (r["phash_lo"], r["phash_hi"]): (r["kept_asset_id"], r["n_dup"])
         for r in run_stream_media_dedup_bounded(
-            spark, sf_dir, tempfile.mkdtemp("media1")
+            spark, sf_dir, str(tmp_path_factory.mktemp("media1"))
         ).collect()
     }
     want = {
@@ -39,12 +40,14 @@ def test_single_batch_equals_batch_per_hash_aggregate(spark, sf_dir):
     assert got, "fixture must fingerprint assets"
 
 
-def test_cross_batch_first_wins_and_counter_rows(spark, sf_dir):
+def test_cross_batch_first_wins_and_counter_rows(
+    spark, sf_dir, tmp_path_factory
+):
     """Split the corpus into two files; batch 2's duplicates of batch-1
     hashes must be suppressed (NULL kept_asset_id counter rows), and every
     hash must be kept exactly once."""
     docs = load_table(spark, sf_dir, "documents")
-    src = tempfile.mkdtemp("media_src")
+    src = str(tmp_path_factory.mktemp("media_src"))
     # batch 1: even doc_ids; batch 2: odd doc_ids PLUS copies of three even
     # docs under fresh ids (guaranteed cross-batch duplicate hashes)
     even = docs.filter(F.col("doc_id") % 2 == 0)
@@ -63,7 +66,7 @@ def test_cross_batch_first_wins_and_counter_rows(spark, sf_dir):
     import shutil
 
     for i, frame in enumerate([even, odd.unionByName(copies)], 1):
-        tmp = tempfile.mkdtemp(f"media_part{i}")
+        tmp = str(tmp_path_factory.mktemp(f"media_part{i}"))
         frame.coalesce(1).write.mode("overwrite").parquet(tmp)
         part = glob.glob(f"{tmp}/part-*.parquet")[0]
         dst = f"{src}/b{i}.parquet"
@@ -73,7 +76,7 @@ def test_cross_batch_first_wins_and_counter_rows(spark, sf_dir):
     out = run_stream_media_dedup_bounded(
         spark,
         src,
-        tempfile.mkdtemp("media2"),
+        str(tmp_path_factory.mktemp("media2")),
         glob_filter="*.parquet",
         max_files_per_trigger=1,
     ).collect()
@@ -94,15 +97,15 @@ def test_cross_batch_first_wins_and_counter_rows(spark, sf_dir):
         assert (r["phash_lo"], r["phash_hi"]) in want_hashes
 
 
-def test_fresh_work_dir_refuses_stale_state(spark, sf_dir):
-    work = tempfile.mkdtemp("media3")
+def test_fresh_work_dir_refuses_stale_state(spark, sf_dir, tmp_path_factory):
+    work = str(tmp_path_factory.mktemp("media3"))
     run_stream_media_dedup_bounded(spark, sf_dir, work)
     with pytest.raises(ValueError, match="seen-hash state"):
         run_stream_media_dedup_bounded(spark, sf_dir, work)
     assert os.path.exists(f"{work}/seen_hashes")
 
 
-def test_process_replay_is_idempotent(spark, sf_dir):
+def test_process_replay_is_idempotent(spark, sf_dir, tmp_path_factory):
     """A REAL foreachBatch retry: re-invoke ``process()`` with the same
     (batch_df, batch_id) after the first attempt landed its output and
     seen-hash partials. The seen-probe must exclude the batch's own
@@ -111,7 +114,7 @@ def test_process_replay_is_idempotent(spark, sf_dir):
     overwrite erases the hashes from the index (ADVICE round 12)."""
     from pulsar_topic_deduplicator_spark.streaming.media import _make_process
 
-    work = tempfile.mkdtemp("media_replay")
+    work = str(tmp_path_factory.mktemp("media_replay"))
     run_stream_media_dedup_bounded(spark, sf_dir, work)
 
     def snapshot():
@@ -137,7 +140,9 @@ def test_process_replay_is_idempotent(spark, sf_dir):
     assert all(k is not None for k, _ in out_after.values())
 
 
-def test_process_replay_of_second_batch_is_idempotent(spark, sf_dir):
+def test_process_replay_of_second_batch_is_idempotent(
+    spark, sf_dir, tmp_path_factory
+):
     """Retry of a LATER batch: with batch=0 already committed, re-invoke
     process() for batch 1 — the probe must still see batch 0's hashes
     (cross-batch suppression intact) while excluding only batch 1's own
@@ -147,7 +152,7 @@ def test_process_replay_of_second_batch_is_idempotent(spark, sf_dir):
     )
     from pulsar_topic_deduplicator_spark.streaming.media import _make_process
 
-    work = tempfile.mkdtemp("media_replay2")
+    work = str(tmp_path_factory.mktemp("media_replay2"))
     state, out = f"{work}/seen_hashes", f"{work}/kept"
     fp = image_phash(spark, sf_dir)
     b0 = fp.filter(F.col("asset_id") % 2 == 0)
@@ -184,13 +189,13 @@ def test_process_replay_of_second_batch_is_idempotent(spark, sf_dir):
             assert r["kept_asset_id"] is None
 
 
-def test_seen_state_replay_is_idempotent(spark, sf_dir):
+def test_seen_state_replay_is_idempotent(spark, sf_dir, tmp_path_factory):
     """A foreachBatch RETRY re-lands its batch's seen-hash partial (same
     data, same batchId-named subdir, overwrite mode) — the index must not
     gain duplicate hash rows, so a later probe still matches each hash
     exactly once. Simulates the lost-checkpoint-commit replay at the
     storage layer (the pre-fix append mode double-appended here)."""
-    work = tempfile.mkdtemp("media_idem")
+    work = str(tmp_path_factory.mktemp("media_idem"))
     run_stream_media_dedup_bounded(spark, sf_dir, work)
     state = f"{work}/seen_hashes"
     batch0 = f"{state}/batch=0"

@@ -19,18 +19,12 @@ import pandas as pd
 from pulsar_topic_deduplicator_spark.streaming.dedup import SEED_MESSAGE_ID
 
 
-def make_ttl_kernel(ttl_ms: int, use_timers: bool = False):
+def make_ttl_kernel(ttl_ms: int):
     """GroupState kernel factory: first-wins per digest, TTL from insertion.
 
-    The insertion timestamp lives IN the state and expiry is re-checked on
-    every arrival — GroupState timers alone would not match ObliviousSet,
-    because a timer never fires for a key that has data in the same batch
-    (a duplicate arriving just after expiry must be re-admitted, not
-    dropped). Timers are therefore ONLY state GC — and they are off by
-    default: registered processing-time timers make the micro-batch engine
-    schedule batches continuously until every timer fires (observed: 150+
-    empty epochs against a 1 h TTL in a bounded run). A long-running
-    production query should enable them so expired digests leave the store.
+    The insertion timestamp lives IN the state and expiry is checked on
+    every arrival: a duplicate arriving just after expiry is re-admitted,
+    not dropped.
 
     Seed rows (message_id == SEED_MESSAGE_ID) insert state without emitting —
     the warm-up path. Duplicates do NOT extend the TTL (the reference's set
@@ -61,9 +55,6 @@ def make_ttl_kernel(ttl_ms: int, use_timers: bool = False):
     )
 
     def kernel(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
         batches = [pdf for pdf in pdfs if len(pdf)]
         if not batches:
             return
@@ -81,11 +72,6 @@ def make_ttl_kernel(ttl_ms: int, use_timers: bool = False):
             is_seed = mid == SEED_MESSAGE_ID
             if not already:
                 state.update((now_ms,))
-            if use_timers:
-                # Spark clears a processing-time timeout on every call
-                # with data: re-arm whenever state stays behind, or a
-                # duplicate-only batch disarms this digest's GC for good
-                state.setTimeoutDuration(ttl_ms)
             if already or is_seed:
                 if not is_seed:
                     out = template.copy()
@@ -109,8 +95,6 @@ def make_ttl_kernel(ttl_ms: int, use_timers: bool = False):
         live = rows[rows["message_id"] != SEED_MESSAGE_ID]
         if not already:
             state.update((now_ms,))
-        if use_timers:
-            state.setTimeoutDuration(ttl_ms)  # re-arm: see the fast path
         if already or has_seed:
             # every live row here is a duplicate / warm-up hit: drop them
             # all, but surface the count as a message_id-less counter row
